@@ -1162,7 +1162,8 @@ def url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     every equivalence the canonicalizer handles (case-varied hosts,
     ports, trailing slashes, utm params, fragments) arranged so groups
     of 2-3 documents collapse to one canonical URL. Full DuckDB oracle:
-    the identical regex chain (functions/urls.canonicalize_url_sql)."""
+    the identical regex chain (functions/urls canonical_clean_sql +
+    canonical_compose_sql)."""
     from ocr_spark.functions.urls import canonicalize_url
 
     docs = _t(spark, sf_dir, "documents")
@@ -1717,8 +1718,8 @@ def html_anchor_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     (boilerplate.extract_anchor_texts): the off-page signal crawlers
     index against the TARGET page. Synth pages carry a next-link and a
     hot hub-link, each with a small anchor vocabulary; the aggregate
-    (n_anchors, sorted distinct anchor set) is one map-side-combined
-    groupBy on the target id."""
+    (n_anchors, sorted distinct anchor set joined with '|') is one
+    map-side-combined groupBy on the target id."""
     from ocr_spark.operators.boilerplate import extract_anchor_texts
 
     docs = _t(spark, sf_dir, "documents")
@@ -1746,7 +1747,8 @@ def html_anchor_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("target")
         .agg(
             F.count(F.lit(1)).alias("n_anchors"),
-            F.sort_array(F.collect_set("anchor")).alias("anchors"),
+            F.array_join(F.sort_array(F.collect_set("anchor")), "|")
+            .alias("anchors"),
         )
     )
 
@@ -3164,13 +3166,15 @@ def oracle_sql() -> dict[str, str]:
     """
     d["curate_robots_filter"] = """
         WITH u AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 5 = 0
-                      THEN 'm' || (doc_id // 20) || '.ads.net'
-                      ELSE 'h' || (doc_id // 20) || '.example.com'
-                 END AS host,
-                 '/p/' || doc_id AS path
-          FROM documents
+          SELECT doc_id, host,
+                 regexp_extract('https://' || host || '/p/' || doc_id,
+                   '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) AS path
+          FROM (SELECT doc_id,
+                       CASE WHEN doc_id % 5 = 0
+                            THEN 'm' || (doc_id // 20) || '.ads.net'
+                            ELSE 'h' || (doc_id // 20) || '.example.com'
+                       END AS host
+                FROM documents)
         ), r AS (
           SELECT 'h' || k || '.example.com' AS host,
                  v.pp AS path_prefix, v.al AS allow
@@ -3194,13 +3198,15 @@ def oracle_sql() -> dict[str, str]:
     d["crawl_frontier_rank"] = f"""
         WITH pr AS ({_link_pagerank_oracle()}),
         u AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 5 = 0
-                      THEN 'm' || (doc_id // 20) || '.ads.net'
-                      ELSE 'h' || (doc_id // 20) || '.example.com'
-                 END AS host,
-                 '/p/' || doc_id AS path
-          FROM documents
+          SELECT doc_id, host,
+                 regexp_extract('https://' || host || '/p/' || doc_id,
+                   '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) AS path
+          FROM (SELECT doc_id,
+                       CASE WHEN doc_id % 5 = 0
+                            THEN 'm' || (doc_id // 20) || '.ads.net'
+                            ELSE 'h' || (doc_id // 20) || '.example.com'
+                       END AS host
+                FROM documents)
         ), nb AS (
           SELECT * FROM u
           WHERE NOT (host = 'ads.net' OR host LIKE '%.ads.net'
@@ -3248,15 +3254,16 @@ def oracle_sql() -> dict[str, str]:
         ), t AS (
           SELECT doc_id AS src,
                  unnest(regexp_extract_all(
-                   html, '<a href="[^"]*"[^>]*>[^<]*</a>', 0)) AS tag
+                   html, '<a\\b[^>]*\\bhref="[^"]*"[^>]*>[^<]*</a>', 0))
+                   AS tag
           FROM p
         )
         SELECT CAST(regexp_extract(
                  regexp_extract(tag, 'href="([^"]*)"', 1),
                  '/doc/([0-9]+)', 1) AS BIGINT) AS target,
                CAST(count(*) AS BIGINT) AS n_anchors,
-               list_sort(list_distinct(
-                 list(regexp_extract(tag, '>([^<]*)</a>', 1))))
+               array_to_string(list_sort(list_distinct(
+                 list(regexp_extract(tag, '>([^<]*)</a>', 1)))), '|')
                  AS anchors
         FROM t GROUP BY 1
     """

@@ -81,11 +81,6 @@ def spark_base60(col: Column | str) -> Column:
     )
 
 
-def spark_chunk32(col: Column | str, k: int) -> Column:
-    """k-th 8-hex-char chunk of md5 as a 32-bit uint in a long."""
-    return F.conv(F.substring(F.md5(col), 8 * k + 1, 8), 16, 10).cast("long")
-
-
 # --------------------------------------------------------------------------
 # DuckDB SQL fragment builders (used by __spark_entry__.oracle_sql)
 # --------------------------------------------------------------------------

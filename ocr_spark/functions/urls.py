@@ -114,9 +114,3 @@ def canonical_compose_sql(expr: str) -> str:
     )
     return f"({prefix} || {path} || {q})"
 
-
-def canonicalize_url_sql(expr: str) -> str:
-    """The full rule chain as one DuckDB expression — prefer the
-    clean/compose split with a CTE binding in between for real oracles
-    (see canonical_clean_sql)."""
-    return canonical_compose_sql(canonical_clean_sql(expr))

@@ -77,8 +77,7 @@ def _find(buf: bytes, start: int, end: int, tag: bytes) -> tuple[int, int]:
 
 
 # --------------------------------------------------------------------------
-# encode: HEIF uncompressed image item (and the AVIF wrapper for tests /
-# external AV1 payloads)
+# encode: HEIF uncompressed image item
 # --------------------------------------------------------------------------
 
 def _build_container(major_brand: bytes, item_type: bytes, width: int,
@@ -154,18 +153,6 @@ def encode_heif_unci(img: np.ndarray) -> bytes:
         b"mif1", b"unci", w, h, img.tobytes(),
         [_box(b"cmpd", _CMPD_MONO), _full_box(b"uncC", 0, 0, _UNCC_MONO)],
     )
-
-
-def build_avif_container(av1_payload: bytes, width: int,
-                         height: int) -> bytes:
-    """Wrap an AV1 payload (e.g. from an external encoder) as AVIF.
-
-    av1C config record: marker/version 0x81, profile/level 0,
-    high_bitdepth etc. 0, reserved+initial_presentation 0.
-    """
-    av1c = _box(b"av1C", bytes([0x81, 0x00, 0x00, 0x00]))
-    return _build_container(b"avif", b"av01", width, height,
-                            av1_payload, [av1c])
 
 
 # --------------------------------------------------------------------------

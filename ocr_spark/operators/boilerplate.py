@@ -89,7 +89,7 @@ def extract_anchor_texts(
     [^<]* inner pattern — the boilerplate stripper owns full DOM
     handling; this operator mirrors a crawler's cheap anchor scan.
     """
-    tag_pat = '<a href="[^"]*"[^>]*>[^<]*</a>'
+    tag_pat = '<a\\b[^>]*\\bhref="[^"]*"[^>]*>[^<]*</a>'
     tags = F.regexp_extract_all(F.col(html_col), F.lit(tag_pat), 0)
     return pages.select(
         F.col(id_col).alias("src"),

@@ -1,202 +1,17 @@
-"""End-to-end corpus curation: dedup -> extract -> MERGE -> audit.
+"""Corpus-curation operators over extracted text and crawl metadata.
 
-The composition a 100 TB training-data pipeline actually runs, built
-from this repo's operators:
-
-  1. exact dedup on the full interleaved payload (md5 of the canonical
-     span JSON — one shuffle on a 32-hex key; keeper = min doc_id,
-     mirroring the reference's content-hash keying,
-     /root/reference/src/ocr/image_utils.py:16-27),
-  2. extraction on the surviving documents (in-row mode: zero
-     doc-payload shuffle),
-  3. idempotent MERGE into a SnapshotTable + per-partition lineage with
-     dedup statistics appended to the audit table.
-
-Resumable exactly like operators/resumable.py: committed doc_ids are
-anti-joined away on restart.
+The steps a training-data pipeline runs after extraction, each one
+DataFrame-native and run by a registered query in ``__spark_entry__.py``:
+repetition quality signals, sequence packing, stratified / temperature /
+weighted sampling, stable split and shard assignment, the per-rule
+curation funnel, per-group caps, and the two crawl gates (URL blocklist
+and robots.txt).
 """
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..sources.snapstore import SnapshotTable
-from .extraction_inrow import run_extraction_inrow
-from .resumable import partition_metrics
-
-
-def doc_fingerprint(docs: DataFrame) -> DataFrame:
-    """(doc_id, fp): md5 over the canonical span payload (kind, text,
-    media_ref, offset in array order).
-
-    The span struct is re-projected into canonical field order before
-    serialization: different ingestion paths materialize the same
-    logical struct with different field orders (a pandas-sourced
-    DataFrame alphabetizes; the parquet schema keeps declaration order),
-    and to_json follows struct order — without the re-projection,
-    identical content arriving via two paths would fingerprint
-    differently and silently defeat every dedup built on this function.
-    """
-    canon = F.transform(
-        "spans",
-        lambda s: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            s["offset"].cast("int").alias("offset"),
-        ),
-    )
-    return docs.select(
-        "doc_id", F.md5(F.to_json(canon)).alias("fp")
-    )
-
-
-def dedup_docs(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Exact dedup; returns (survivors, dup_map).
-
-    survivors: input rows whose doc_id is the minimum for its
-    fingerprint. dup_map: (doc_id, keeper_id) for every dropped doc —
-    kept as lineage so downstream joins can re-attach dropped ids.
-    """
-    fps = doc_fingerprint(docs)
-    keepers = fps.groupBy("fp").agg(F.min("doc_id").alias("keeper_id"))
-    tagged = fps.join(keepers, "fp")
-    survivors = docs.join(
-        tagged.filter(F.col("doc_id") == F.col("keeper_id"))
-        .select("doc_id"),
-        "doc_id",
-        "left_semi",
-    )
-    dup_map = (
-        tagged.filter(F.col("doc_id") != F.col("keeper_id"))
-        .select("doc_id", "keeper_id")
-    )
-    return survivors, dup_map
-
-
-def curate_and_extract(
-    docs: DataFrame,
-    blobs: DataFrame,
-    results: SnapshotTable,
-    audit: SnapshotTable,
-    lineage: SnapshotTable | None = None,
-    count_input: bool = False,
-) -> dict:
-    """Dedup + extract only not-yet-committed docs; MERGE + audit.
-
-    ``lineage`` (append-only SnapshotTable) receives one (doc_id,
-    keeper_id, phase, committed_at) row per dropped duplicate — both
-    in-batch dupes and cross-run fp-duplicates — so downstream joins can
-    re-attach dropped ids and a rerun's dedup decisions stay queryable.
-
-    Scan discipline (10^12 rows): the extraction job is the ONE pass over
-    the input payloads. The dedup prepass touches only (doc_id, fp) —
-    key-width columns. ``count_input=True`` opts into one extra count of
-    ``todo`` for the n_in/n_dropped stats; otherwise those are None (at
-    100 TB you read drop totals from the lineage/audit tables, not from
-    repeated full-table counts).
-    """
-    spark = docs.sparkSession
-    t0 = time.monotonic()
-
-    committed = results.read(spark)
-    todo = docs
-    if committed is not None:
-        todo = docs.join(committed.select("doc_id"), "doc_id", "left_anti")
-
-    survivors, dup_map = dedup_docs(todo)
-    cross_dups = None
-    if committed is not None:
-        # cross-run dedup: a new doc_id carrying an already-committed
-        # payload is a duplicate too — results rows store `fp` for this;
-        # keeper = the smallest committed doc_id with the same payload
-        committed_fp = committed.groupBy("fp").agg(
-            F.min("doc_id").alias("keeper_id")
-        )
-        cross_dups = (
-            doc_fingerprint(survivors)
-            .join(committed_fp, "fp")
-            .select("doc_id", "keeper_id")
-        )
-        survivors = survivors.join(
-            cross_dups.select("doc_id"), "doc_id", "left_anti"
-        )
-    survivors = survivors.persist()
-    try:
-        n_in = todo.count() if count_input else None
-        n_unique = survivors.count()
-
-        n_lineage = None
-        if lineage is not None:
-            lin = dup_map
-            if cross_dups is not None:
-                # An in-batch keeper can itself be dropped in this same
-                # run as a cross-run fp-duplicate; rewrite those
-                # keeper_ids to the COMMITTED keeper so every lineage row
-                # resolves to a surviving result row in one join hop (no
-                # transitive chase through the keeper's own lineage row).
-                remap = cross_dups.select(
-                    F.col("doc_id").alias("keeper_id"),
-                    F.col("keeper_id").alias("_final_keeper"),
-                )
-                lin = (
-                    dup_map.join(remap, "keeper_id", "left")
-                    .select(
-                        "doc_id",
-                        F.coalesce("_final_keeper", "keeper_id")
-                        .alias("keeper_id"),
-                    )
-                    .unionByName(cross_dups)
-                )
-            lin = (
-                lin.withColumn("phase", F.lit("dedup"))
-                .withColumn("committed_at", F.current_timestamp())
-                .persist()
-            )
-            n_lineage = lin.count()
-            if n_lineage:
-                lineage.append(lin)
-            lin.unpersist()
-
-        n_dropped = (n_in - n_unique) if n_in is not None else n_lineage
-        if n_unique == 0:
-            return {"n_in": n_in, "n_unique": 0, "n_dropped": n_dropped,
-                    "results_version": results.current_version(),
-                    "wall_sec": round(time.monotonic() - t0, 3)}
-        out = (
-            run_extraction_inrow(survivors, blobs)
-            .join(doc_fingerprint(survivors), "doc_id")
-            .persist()
-        )
-        try:
-            rv = results.merge_upsert(
-                out,
-                merge_exprs={"codes": lambda o, n: F.array_union(o, n)},
-            )
-            metrics = (
-                partition_metrics(out, phase="curate")
-                .withColumn("results_version", F.lit(rv))
-                .withColumn(
-                    "n_dedup_dropped",
-                    F.lit(n_dropped).cast("long"),
-                )
-            )
-            av = audit.append(metrics)
-        finally:
-            out.unpersist()
-    finally:
-        survivors.unpersist()
-    return {
-        "n_in": n_in,
-        "n_unique": n_unique,
-        "n_dropped": n_dropped,
-        "results_version": rv,
-        "audit_version": av,
-        "wall_sec": round(time.monotonic() - t0, 3),
-    }
 
 
 def repetition_metrics(
@@ -780,7 +595,12 @@ def robots_filter(
     struct tie-break is total (prefix string last), so the verdict is
     deterministic and partition-invariant.
 
-    Returns the input rows plus (host, path, allowed boolean).
+    Rules match the path together with its query string, as RFC 9309
+    §2.2.2 requires (``Disallow: /search?q=`` blocks ``/search?q=x``);
+    only the fragment is dropped.
+
+    Returns the input rows plus (host, path, allowed boolean), where
+    ``path`` includes the query string.
     """
     host = F.lower(
         F.regexp_extract(
@@ -788,7 +608,7 @@ def robots_filter(
         )
     )
     path = F.regexp_extract(
-        F.col(url_col), r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)", 1
+        F.col(url_col), r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)", 1
     )
     u = urls.withColumn("host", F.regexp_replace(host, ":[0-9]+$", "")) \
         .withColumn("path", path)

@@ -1037,12 +1037,11 @@ def dedup_incremental(
     crawling pipeline runs per ingest cycle (dedup the day's crawl
     against the petabytes already stored, NOT the corpus against
     itself). Inputs carry a precomputed content fingerprint (``fp_col``,
-    e.g. md5 of the canonical payload as doc_fingerprint computes).
+    e.g. md5 of the canonical payload).
 
     Semantics: a batch row survives iff its fingerprint appears nowhere
-    in history. Batch-internal duplicates are NOT collapsed here — that
-    is dedup_docs' job on the survivor stream; keeping the two steps
-    separate keeps each one a single join/aggregate.
+    in history. Batch-internal duplicates are NOT collapsed here, so
+    the step stays a single join.
 
     Returns the batch rows plus ``is_new`` boolean (all input rows, so
     the audit sink sees the drops with their fingerprints).

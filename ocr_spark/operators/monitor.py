@@ -33,15 +33,46 @@ from pyspark.sql.window import Window as W
 MICROS_PER_HOUR = 3_600_000_000
 
 
-def _flag_counts(
-    counts: DataFrame,
-    trail: int,
-    min_history: int,
-    z2_num: int,
-    z2_den: int,
+def rate_anomalies(
+    events: DataFrame,
+    ts_col: str = "ts",
+    group_col: str = "event_type",
+    trail: int = 24,
+    min_history: int = 8,
+    z2_num: int = 4,
+    z2_den: int = 1,
 ) -> DataFrame:
-    """The shared decision: trailing integer moments + cross-multiplied
-    z^2 gate over a (event_type, hour, n) count frame."""
+    """Flag (group, hour) buckets whose count deviates from the trailing
+    `trail`-bucket baseline by |z| >= sqrt(z2_num/z2_den). Returns
+    (event_type, hour, n, m, mean_milli, z2_milli) for flagged buckets;
+    z2_milli is NULL for the zero-variance infinite-z case. Buckets
+    with under `min_history` trailing observations never flag (cold
+    start). The trailing frame is over OBSERVED buckets, so a silent
+    hour is absent rather than a zero.
+
+    Scale shape: one map-side-combined count per (group, hour), then a
+    group-partitioned ordered window over the tiny per-group hour
+    series. Nothing here scales with raw event volume past the first
+    aggregate."""
+    # FLOOR division via pmod, not float-divide-and-cast: cast-long
+    # truncates toward zero, which disagrees with DuckDB's // (floor)
+    # for pre-1970 timestamps — and this module promises no float in
+    # any decision input
+    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    counts = (
+        events.select(F.col(group_col).alias("event_type"),
+                      us.alias("_us"))
+        .select(
+            "event_type",
+            F.expr(
+                f"(_us - pmod(_us, {MICROS_PER_HOUR})) "
+                f"div {MICROS_PER_HOUR}"
+            ).cast("long").alias("hour"),
+        )
+        .groupBy("event_type", "hour")
+        .agg(F.count("*").alias("n"))
+    )
+    # trailing integer moments + cross-multiplied z^2 gate
     f = (
         W.partitionBy("event_type").orderBy("hour")
         .rowsBetween(-trail, -1)
@@ -77,98 +108,3 @@ def _flag_counts(
             F.expr("(dev * dev * 1000) div varm2").cast("long"),
         ).alias("z2_milli"),
     )
-
-
-def _hour_counts(
-    events: DataFrame, ts_col: str, group_col: str
-) -> DataFrame:
-    # FLOOR division via pmod, not float-divide-and-cast: cast-long
-    # truncates toward zero, which disagrees with DuckDB's // (floor)
-    # for pre-1970 timestamps — and this module promises no float in
-    # any decision input
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    return (
-        events.select(F.col(group_col).alias("event_type"),
-                      us.alias("_us"))
-        .select(
-            "event_type",
-            F.expr(
-                f"(_us - pmod(_us, {MICROS_PER_HOUR})) "
-                f"div {MICROS_PER_HOUR}"
-            ).cast("long").alias("hour"),
-        )
-        .groupBy("event_type", "hour")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-def rate_anomalies(
-    events: DataFrame,
-    ts_col: str = "ts",
-    group_col: str = "event_type",
-    trail: int = 24,
-    min_history: int = 8,
-    z2_num: int = 4,
-    z2_den: int = 1,
-) -> DataFrame:
-    """Flag (group, hour) buckets whose count deviates from the trailing
-    `trail`-bucket baseline by |z| >= sqrt(z2_num/z2_den). Returns
-    (event_type, hour, n, m, mean_milli, z2_milli) for flagged buckets;
-    z2_milli is NULL for the zero-variance infinite-z case. Buckets
-    with under `min_history` trailing observations never flag (cold
-    start). The trailing frame is over OBSERVED buckets — use
-    `rate_anomalies_dense` when silent hours must alarm too.
-
-    Scale shape: one map-side-combined count per (group, hour), then a
-    group-partitioned ordered window over the tiny per-group hour
-    series. Nothing here scales with raw event volume past the first
-    aggregate."""
-    return _flag_counts(_hour_counts(events, ts_col, group_col),
-                        trail, min_history, z2_num, z2_den)
-
-
-def densify_hours(
-    events: DataFrame,
-    ts_col: str = "ts",
-    group_col: str = "event_type",
-) -> DataFrame:
-    """(event_type, hour, n) with EVERY hour from each group's first
-    observation through the GLOBAL last observed hour present — silent
-    hours carry n = 0, so a source that stops emitting becomes a
-    flaggable anomaly instead of a missing row. Extending each span to
-    the global max (not the group's own last hour) is what makes a
-    source that dies PERMANENTLY flag: its own span would end at its
-    last event, hiding exactly the outage this exists to catch.
-
-    Scale shape: the per-group hour span is generated with
-    sequence+explode off a 2-long-per-group aggregate (plus one global
-    scalar) — the dense frame is (groups x span-hours) rows,
-    telemetry-sized, never event-sized; the left join back to observed
-    counts is group+hour keyed."""
-    c = _hour_counts(events, ts_col, group_col)
-    gmax = c.agg(F.max("hour").alias("hmax"))
-    spans = c.groupBy("event_type").agg(F.min("hour").alias("h0"))
-    dense = spans.crossJoin(F.broadcast(gmax)).select(
-        "event_type",
-        F.explode(F.sequence("h0", "hmax")).alias("hour"),
-    )
-    return dense.join(c, ["event_type", "hour"], "left").select(
-        "event_type", "hour",
-        F.coalesce("n", F.lit(0)).cast("long").alias("n"),
-    )
-
-
-def rate_anomalies_dense(
-    events: DataFrame,
-    ts_col: str = "ts",
-    group_col: str = "event_type",
-    trail: int = 24,
-    min_history: int = 8,
-    z2_num: int = 4,
-    z2_den: int = 1,
-) -> DataFrame:
-    """`rate_anomalies` over the densified hour series: identical
-    decision arithmetic, but silent hours exist (n = 0) and can flag —
-    a source going dark IS the anomaly."""
-    return _flag_counts(densify_hours(events, ts_col, group_col),
-                        trail, min_history, z2_num, z2_den)

@@ -29,17 +29,6 @@ MICRO = 1_000_000
 WS_SPLIT = r"\s+"
 
 
-def _tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, word) explode — the shared tokenization of the one-shot
-    ranker and the incremental indexer (they MUST agree or the
-    incremental == batch equality breaks)."""
-    return docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.trim(F.col(text_col)), WS_SPLIT))
-        .alias("word"),
-    ).filter(F.length("word") > 0)
-
-
 def bm25_topk(
     docs: DataFrame,
     query_terms: list[str],
@@ -55,7 +44,11 @@ def bm25_topk(
     of per-term micro-pinned scores; rank breaks ties by doc_id
     ascending. Documents matching no term do not appear.
     """
-    toks = _tokens(docs, id_col, text_col)
+    toks = docs.select(
+        F.col(id_col).alias("id"),
+        F.explode(F.split(F.trim(F.col(text_col)), WS_SPLIT))
+        .alias("word"),
+    ).filter(F.length("word") > 0)
     dl = toks.groupBy("id").agg(F.count("*").alias("dl"))
     # term filter BEFORE the tf aggregate: only queried postings shuffle
     tf = (
@@ -63,26 +56,6 @@ def bm25_topk(
         .groupBy("id", "word")
         .agg(F.count("*").alias("tf"))
     )
-    return bm25_score_topk(tf, dl, query_terms, k=k, k1=k1, b=b)
-
-
-def bm25_score_topk(
-    tf: DataFrame,
-    dl: DataFrame,
-    query_terms: list[str],
-    k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """BM25 ranking from term statistics: ``tf`` (id, word, tf) and
-    ``dl`` (id, dl). The stats can come from a one-pass tokenize
-    (bm25_topk) or from the incrementally maintained index tables
-    (bm25_index_topk) — the scoring arithmetic is this ONE function, so
-    the two paths are equal by construction, not by parallel
-    implementations. ``tf`` may carry all words or only the queried
-    ones; the term filter here re-applies either way (a no-op on the
-    pre-filtered path, predicate-pushdown on the index-read path).
-    """
     stats = dl.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("total_tokens")
     ).collect()[0]
@@ -94,7 +67,6 @@ def bm25_score_topk(
     total_tokens = int(stats[1])
     avgdl = total_tokens / n_docs  # one IEEE division, both engines
 
-    tf = tf.filter(F.col("word").isin(list(query_terms)))
     dfw = tf.groupBy("word").agg(F.count("*").alias("df"))
     idf = dfw.select(
         "word",
@@ -136,65 +108,3 @@ def bm25_score_topk(
         "rank", F.row_number().over(w).cast("long")
     ).select(F.col("id").alias("doc_id"), "score_micro", "rank")
 
-
-def index_commit(
-    docs: DataFrame,
-    postings,
-    doclens,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> tuple[int, int]:
-    """Commit a batch of documents into the incrementally maintained
-    retrieval index: ``postings`` (SnapshotTable keyed by ``pkey`` =
-    word<TAB>id, columns id/word/tf) and ``doclens`` (SnapshotTable
-    keyed by ``id``, column dl). The pattern is the KMV-sketch one
-    (functions/sketches.py): per-commit MERGE of mergeable per-batch
-    statistics, so corpus-lifetime retrieval never rescans committed
-    text — at 100 TB the index update touches one ingest cycle, and
-    queries touch only the (bucketed, column-pruned, word-pushed-down)
-    index tables.
-
-    Corpus semantics are append-only immutable documents (this repo's
-    standing assumption): a doc_id is committed once, so MERGE replays
-    (crash/retry) overwrite identical rows — idempotent — and no
-    postings ever need deletion. The TAB separator in pkey cannot occur
-    in either component (words are whitespace-split; ids with literal
-    tabs are rejected loudly rather than silently miskeyed).
-
-    Returns (postings_version, doclens_version).
-    """
-    toks = _tokens(docs, id_col, text_col)
-    tf = (
-        toks.groupBy("id", "word")
-        .agg(F.count("*").alias("tf"))
-        .withColumn("pkey", F.concat_ws("\t", "word", "id"))
-    )
-    bad = docs.filter(F.col(id_col).contains("\t")).limit(1).count()
-    if bad:
-        raise ValueError("index_commit: doc ids must not contain tabs")
-    pv = postings.merge_upsert(tf)
-    dl = toks.groupBy("id").agg(F.count("*").alias("dl"))
-    dv = doclens.merge_upsert(dl)
-    return pv, dv
-
-
-def bm25_index_topk(
-    spark,
-    postings,
-    doclens,
-    query_terms: list[str],
-    k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """BM25 top-k served FROM the incremental index (no corpus scan):
-    reads the two index tables and routes through the same
-    bm25_score_topk arithmetic as the one-shot ranker, so
-    ``bm25_index_topk(after N commits) == bm25_topk(union of all N
-    batches)`` exactly (pytest-pinned). The query-term filter lands on
-    the postings read as a parquet predicate on ``word``; doclens is
-    read in full (one slim (id, dl) column pair — the corpus-size
-    denominator genuinely needs every document)."""
-    tf = postings.read(spark).select("id", "word", "tf")
-    dl = doclens.read(spark).select("id", "dl")
-    return bm25_score_topk(tf, dl, query_terms, k=k, k1=k1, b=b)

@@ -180,36 +180,6 @@ def try_dewarp(img: np.ndarray, threshold: int) -> np.ndarray:
     return np.ascontiguousarray(rect[m:-m, m:-m])
 
 
-def detect_skew_degrees(img: np.ndarray, threshold: int = 64) -> float:
-    """Continuous skew angle of a framed warped image, in degrees
-    (reference skew-angle detect: Otsu threshold -> minAreaRect -> angle
-    normalized to -45..+45, /root/reference/src/ocr/image_utils.py:268-306).
-
-    For this engine's rasterized shear warps the document edge IS the
-    frame's left border, so the angle is atan of the least-squares slope
-    of the per-row left-edge offsets; 0.0 when no frame is detected
-    (upright image). Rotation by right angles is handled separately
-    (fonts.detect_rotation) — composition covers rot + skew.
-    """
-    b = img >= threshold
-    rows_any = b.any(axis=1)
-    if not rows_any.any():
-        return 0.0
-    inked = np.flatnonzero(rows_any)
-    y0, y1 = int(inked[0]), int(inked[-1])
-    if y1 - y0 < 2 * FRAME_MARGIN or not rows_any[y0:y1 + 1].all():
-        return 0.0
-    band = b[y0:y1 + 1]
-    xs_min = band.argmax(axis=1)
-    xs_max = band.shape[1] - 1 - band[:, ::-1].argmax(axis=1)
-    if not ((xs_max - xs_min) == (xs_max[0] - xs_min[0])).all():
-        return 0.0
-    ys = np.arange(len(xs_min), dtype=np.float64)
-    slope = np.polyfit(ys, xs_min.astype(np.float64), 1)[0]
-    deg = float(np.degrees(np.arctan(slope)))
-    return max(-45.0, min(45.0, deg))
-
-
 # --------------------------------------------------------------------------
 # continuous-angle rotation (datagen side) / derotate (recognizer side)
 # --------------------------------------------------------------------------

@@ -13,6 +13,48 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Heap size when neither ``driver_memory`` nor
+    $SPARK_GRAFT_DRIVER_MEM is given: a quarter of the tightest memory
+    limit (this process's cgroup limit, v2 ``memory.max`` or v1
+    ``memory.limit_in_bytes``, and the host's MemAvailable), between
+    512 MiB and 16 GiB. The heap is pre-sized and pre-touched, so all of
+    it is resident from the start; the rest is left to the Python
+    workers and the page cache. A fixed 16g default kept the JVM from
+    starting on a 16 GB host."""
+    limits = []
+    try:
+        with open("/proc/self/cgroup") as f:
+            groups = [ln.rstrip("\n").split(":", 2) for ln in f]
+    except OSError:
+        groups = []
+    for _, ctrl, path in groups:
+        if ctrl == "":
+            file = f"/sys/fs/cgroup{path.rstrip('/')}/memory.max"
+        elif "memory" in ctrl.split(","):
+            file = (f"/sys/fs/cgroup/memory{path.rstrip('/')}"
+                    "/memory.limit_in_bytes")
+        else:
+            continue
+        try:
+            with open(file) as f:
+                v = f.read().strip()
+        except OSError:
+            continue
+        if v.isdigit():  # "max" (v2) means no limit
+            limits.append(int(v))
+    try:
+        with open("/proc/meminfo") as f:
+            limits += [int(ln.split()[1]) * 1024 for ln in f
+                       if ln.startswith("MemAvailable:")]
+    except OSError:
+        pass
+    if not limits:
+        return "16g"
+    mib = min(limits) // 4 >> 20
+    return f"{min(max(mib, 512), 16 << 10)}m"
+
+
 def get_spark(
     app_name: str = "ocr_spark",
     cores: int | str | None = None,
@@ -41,7 +83,8 @@ def get_spark(
     master = f"local[{cores}]"
     if shuffle_partitions is None:
         shuffle_partitions = 32 if cores in ("*",) else max(int(cores), 4)
-    mem = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    mem = (driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+           or _default_driver_memory())
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

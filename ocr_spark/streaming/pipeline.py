@@ -135,164 +135,3 @@ def windowed_code_rate(
         )
     )
 
-
-EVENT_STREAM_SCHEMA = "event_type string, ts timestamp"
-
-
-def stream_rate_alarms(
-    spark: SparkSession,
-    inbox_dir: str,
-    counts_store: SnapshotTable,
-    alarms_store: SnapshotTable,
-    checkpoint_dir: str,
-    trail: int = 24,
-    min_history: int = 8,
-    z2_num: int = 4,
-    z2_den: int = 1,
-) -> StreamingQuery:
-    """Streaming twin of operators/monitor.rate_anomalies: telemetry
-    events arrive as parquet drops in an inbox, and every micro-batch
-
-      1. aggregates the batch's (event_type, hour) counts and MERGEs
-         them into `counts_store` keyed by (batch, group, hour) —
-         at-least-once replay UNDER THE SAME CHECKPOINT re-delivers the
-         identical batch id + contents, so the merge overwrites the
-         same partial rows instead of double-counting (the exactly-once
-         device of `stream_extraction`). Reprocessing from a FRESH
-         checkpoint is a different operation — batch boundaries change,
-         so pair it with a fresh counts store (alarms merge by
-         (group, hour) and stay duplicate-free either way);
-      2. re-runs the integer flag decision over the merged history
-         (per-batch partials sum back to total counts — counts are the
-         trivially mergeable sketch);
-      3. MERGEs new flags into `alarms_store` keyed by (group, hour),
-         so a replayed batch re-asserts rather than duplicates alarms.
-
-    The decision arithmetic is byte-identical to the batch operator
-    (shared `_flag_counts`), so alarms raised by the stream equal the
-    batch operator run over everything the stream has seen — pinned by
-    tests/test_streaming.py.
-
-    `counts_store` must be keyed on the composite key column `ck`;
-    `alarms_store` on `ak`."""
-    from ..operators.monitor import _flag_counts, _hour_counts
-
-    events = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA).parquet(inbox_dir)
-    )
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = _hour_counts(batch_df, "ts", "event_type").select(
-            F.concat_ws(
-                ":", F.lit(batch_id), F.col("event_type"), F.col("hour")
-            ).alias("ck"),
-            "event_type", "hour", "n",
-        )
-        counts_store.merge_upsert(partial)
-        totals = (
-            counts_store.read(spark)
-            .groupBy("event_type", "hour")
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
-        flags = _flag_counts(totals, trail, min_history, z2_num, z2_den)
-        flags = flags.select(
-            F.concat_ws(":", F.col("event_type"), F.col("hour"))
-            .alias("ak"),
-            "event_type", "hour", "n", "m", "mean_milli", "z2_milli",
-        )
-        # no isEmpty() pre-check: it would evaluate the whole flag decision
-        # a second time per micro-batch, and merge_upsert of an empty
-        # frame is already a no-op
-        alarms_store.merge_upsert(flags)
-
-    return (
-        events.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_ingest_dedup(
-    docs_stream: DataFrame,
-    store: SnapshotTable,
-    audit: SnapshotTable,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    processing_interval: str = "200 milliseconds",
-) -> StreamingQuery:
-    """Durable incremental ingest dedup on a live document stream: each
-    micro-batch's content fingerprints probe the COMMITTED corpus
-    (operators/dedup.dedup_incremental — one join against the snapshot
-    store), replays are dropped, genuinely-new payloads MERGE in keyed
-    by fingerprint.
-
-    Complement of stateful.stream_dedup_first_seen: that operator keeps
-    the seen-set in Spark's managed streaming state (fast, but scoped to
-    one query's checkpoint); this one dedups against the durable
-    snapshot table, so the seen-set is shared with the batch pipeline,
-    survives checkpoint deletion, and covers content committed BEFORE
-    the stream started (the real per-cycle crawl shape: today's stream
-    vs years of corpus).
-
-    Exactly-once accounting: the per-batch summary row MERGEs into the
-    audit table keyed by batch_id, so a crash-replayed micro-batch
-    overwrites its own stats instead of double-counting (same discipline
-    as stream_rate_alarms). The store merge is idempotent by
-    construction — fingerprint is the key and a replay writes the same
-    (fp, first_doc_id) row; a replay AFTER the store commit finds its
-    rows in history and merges nothing.
-
-    ``store`` must be keyed by ``fp``; ``audit`` by ``batch_id``.
-    """
-    from ..operators.curate import doc_fingerprint
-    from ..operators.dedup import dedup_incremental
-
-    if store.key_col != "fp":
-        raise ValueError("store must be keyed by fp")
-    if audit.key_col != "batch_id":
-        raise ValueError("audit must be keyed by batch_id")
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        fps = doc_fingerprint(batch_df)
-        if store.current_version():
-            history = store.read(spark).select("fp")
-        else:
-            history = spark.createDataFrame([], "fp string")
-        probed = dedup_incremental(history, fps).persist()
-        try:
-            # batch-internal keep-first among the new rows (the committed
-            # store can't arbitrate duplicates arriving in ONE batch)
-            new = (
-                probed.filter("is_new")
-                .groupBy("fp")
-                .agg(F.min("doc_id").alias("first_doc_id"))
-            )
-            sv = store.merge_upsert(new)
-            n_seen = probed.count()
-            n_replay = probed.filter(~F.col("is_new")).count()
-            audit.merge_upsert(
-                spark.createDataFrame(
-                    [(batch_id, n_seen, n_replay)],
-                    "batch_id long, n_seen long, n_replayed long",
-                ).withColumn("store_version", F.lit(sv))
-            )
-        finally:
-            probed.unpersist()
-
-    writer = (
-        docs_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_interval)
-    return writer.start()

@@ -3,7 +3,7 @@
 Plan quality IS correctness at 100 TB: a filter that misses the parquet
 scan, a column that isn't pruned, or a small join side that isn't
 broadcast each turn into terabytes of wasted IO. These helpers let tests
-(tests/test_plans.py) pin the plan properties we rely on, so a refactor
+(test_plans.py and others) pin the plan properties we rely on, so a refactor
 that silently regresses them fails CI — the Spark analogue of the
 reference's golden-fixture tests (SURVEY.md section 5).
 """
@@ -68,9 +68,3 @@ def exchange_inputs(df: DataFrame) -> list[str]:
         plan,
     )
 
-
-def whole_stage_codegen_ids(df: DataFrame) -> int:
-    """How many WholeStageCodegen spans the plan compiled (wider = more of
-    the plan stays in generated JVM code)."""
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)",
-                              executed_plan(df))))

@@ -1,4 +1,5 @@
-"""Curation pipeline: dedup -> extract -> MERGE -> audit, resumable."""
+"""Curation operators: PII scrub, repetition signals, sampling, sharding,
+caps and the URL blocklist / robots.txt crawl gates."""
 
 from __future__ import annotations
 
@@ -9,124 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from ocr_spark.datagen import generate_corpus  # noqa: E402
-from ocr_spark.operators.curate import curate_and_extract, dedup_docs  # noqa: E402
-from ocr_spark.sources.snapstore import SnapshotTable  # noqa: E402
-
-
-@pytest.fixture(scope="module")
-def corpus(spark):
-    tables = generate_corpus(n_docs=50, seed=31)
-    docs = spark.createDataFrame(tables["documents_interleaved"].to_pandas())
-    blobs = spark.createDataFrame(tables["media_blobs"].to_pandas())
-    expected = spark.createDataFrame(tables["expected_spans"].to_pandas())
-    return docs, blobs, expected
-
-
-def _with_dupes(docs):
-    dupes = docs.filter(F.col("doc_id") < "doc-00000010").select(
-        F.concat(F.lit("zdup-"), "doc_id").alias("doc_id"), "spans"
-    )
-    return docs.unionByName(dupes)
-
-
-def test_dedup_docs_drops_payload_duplicates(spark, corpus):
-    docs, _, _ = corpus
-    doubled = _with_dupes(docs)
-    survivors, dup_map = dedup_docs(doubled)
-    assert survivors.count() == 50  # originals win (min doc_id)
-    dup_rows = {(r["doc_id"], r["keeper_id"]) for r in dup_map.collect()}
-    assert len(dup_rows) == 10
-    assert all(d.startswith("zdup-") and not k.startswith("zdup-")
-               for d, k in dup_rows)
-
-
-def test_curate_end_to_end_and_resume(spark, tmp_path, corpus):
-    docs, blobs, expected = corpus
-    doubled = _with_dupes(docs)
-    results = SnapshotTable(str(tmp_path / "res"), key_col="doc_id",
-                            n_buckets=4)
-    audit = SnapshotTable(str(tmp_path / "aud"))
-    lineage = SnapshotTable(str(tmp_path / "lin"))
-
-    s1 = curate_and_extract(doubled, blobs, results, audit,
-                            lineage=lineage, count_input=True)
-    assert s1["n_in"] == 60 and s1["n_unique"] == 50 and s1["n_dropped"] == 10
-
-    # dropped-duplicate lineage is queryable: every zdup id maps to its
-    # keeper
-    lin1 = {(r["doc_id"], r["keeper_id"])
-            for r in lineage.read(spark).collect()}
-    assert len(lin1) == 10
-    assert all(d.startswith("zdup-") and d == f"zdup-{k}" for d, k in lin1)
-
-    # results hold exactly the unique docs, equal to goldens
-    final = results.read(spark)
-    assert final.count() == 50
-
-    def canon(df):
-        spans = F.transform(
-            "out_spans",
-            lambda s: F.struct(
-                s["kind"].alias("kind"), s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["order"].cast("int").alias("order"),
-            ),
-        )
-        return df.select(
-            "doc_id",
-            F.md5(F.to_json(F.struct(spans.alias("out_spans"), "codes"))).alias("d"),
-        )
-
-    assert canon(final).exceptAll(canon(expected)).count() == 0
-
-    # resume: rerun with the same input -> everything already committed;
-    # the 10 dup doc_ids are NOT in results, so they re-enter dedup as
-    # cross-run fp-duplicates and drop again; no new extraction happens,
-    # and the rerun's dedup decisions land in lineage too
-    s2 = curate_and_extract(doubled, blobs, results, audit,
-                            lineage=lineage)
-    assert s2["n_unique"] == 0 and s2["results_version"] == s1["results_version"]
-    assert s2["n_dropped"] == 10  # from lineage, no input count scan
-    assert lineage.read(spark).count() == 20
-
-    # audit carries the dedup statistics
-    arow = audit.read(spark).collect()[0]
-    assert arow["phase"] == "curate" and arow["n_dedup_dropped"] == 10
-
-
-def test_lineage_keepers_resolve_in_one_hop(spark, tmp_path, corpus):
-    """An in-batch keeper that is itself dropped as a cross-run
-    fp-duplicate must be rewritten to the committed keeper, so joining
-    lineage.keeper_id to results.doc_id resolves EVERY dropped doc in a
-    single hop (ADVICE round 2: transitive chains broke that join)."""
-    docs, blobs, _ = corpus
-    results = SnapshotTable(str(tmp_path / "res"), key_col="doc_id",
-                            n_buckets=4)
-    audit = SnapshotTable(str(tmp_path / "aud"))
-    lineage = SnapshotTable(str(tmp_path / "lin"))
-
-    curate_and_extract(docs, blobs, results, audit, lineage=lineage)
-
-    # run 2: two NEW ids share the payload of committed doc-00000001.
-    # In-batch dedup keeps "aa-copy" (min id) and maps "ab-copy" to it;
-    # "aa-copy" then drops as a cross-run duplicate of doc-00000001.
-    clones = docs.filter(F.col("doc_id") == "doc-00000001").select(
-        F.lit("aa-copy").alias("doc_id"), "spans"
-    ).unionByName(
-        docs.filter(F.col("doc_id") == "doc-00000001").select(
-            F.lit("ab-copy").alias("doc_id"), "spans"
-        )
-    )
-    s2 = curate_and_extract(clones, blobs, results, audit, lineage=lineage)
-    assert s2["n_unique"] == 0
-
-    lin = {r["doc_id"]: r["keeper_id"]
-           for r in lineage.read(spark).collect()}
-    assert lin == {"aa-copy": "doc-00000001", "ab-copy": "doc-00000001"}
-    committed = {r["doc_id"] for r in results.read(spark).collect()}
-    assert set(lin.values()) <= committed
 
 
 def test_pii_scrub_patterns(spark):
@@ -681,38 +564,55 @@ def test_robots_filter_longest_match_semantics(spark):
 
 def test_robots_filter_randomized_python_reference(spark):
     """200 seeded random URLs x random rule tables vs a pure-Python
-    RFC 9309 longest-match evaluator (allow wins length ties)."""
+    RFC 9309 longest-match evaluator (allow wins length ties; rules
+    match path plus query, the fragment is dropped)."""
     import numpy as np
 
     from ocr_spark.operators.curate import robots_filter
 
     rng = np.random.default_rng(73)
     hosts = [f"h{i}.site{i % 3}.net" for i in range(6)]
-    paths = ["/", "/a", "/a/b", "/a/bc", "/b", "/b/x/y", "/ab"]
+    paths = ["/", "/a", "/a/b", "/a/bc", "/b", "/b/x/y", "/ab",
+             "/search?q=x", "/search?lang=en", "/a?b", "/a/b#frag",
+             "/search#q=x"]
     urls = [
         (i, f"https://{rng.choice(hosts)}{rng.choice(paths)}")
         for i in range(200)
     ]
-    rules = []
-    for h in hosts[:4]:  # hosts 4-5 stay ruleless (default allow)
+    # the query-string case, pinned: Disallow /search?q= on host 5
+    urls += [(200, f"https://{hosts[5]}/search?q=cats"),
+             (201, f"https://{hosts[5]}/search?lang=en"),
+             (202, f"https://{hosts[5]}/search#q=cats")]
+    rules = [(hosts[5], "/search?q=", False)]
+    for h in hosts[:4]:  # host 4 stays ruleless (default allow)
         for _ in range(rng.integers(1, 5)):
-            rules.append((h, str(rng.choice(["", "/a", "/a/b", "/b", "/ab"])),
-                          bool(rng.integers(0, 2))))
+            prefix = rng.choice(["", "/a", "/a/b", "/b", "/ab", "/a?",
+                                 "/search?q="])
+            rules.append((h, str(prefix), bool(rng.integers(0, 2))))
     rules = sorted(set(rules))
 
-    def py_verdict(host, path):
+    def py_verdict(url):
+        rest = url.split("://", 1)[1]
+        cut = min((rest.find(c) for c in "/?#" if c in rest),
+                  default=len(rest))
+        host = rest[:cut].lower().rsplit(":", 1)[0]
+        path = rest[cut:].split("#", 1)[0]
         cands = [(len(p), al, p) for (h, p, al) in rules
                  if h == host and path.startswith(p)]
         if not cands:
             return True
         return max(cands)[1]
 
+    by_id = dict(urls)
     out = robots_filter(
         spark.createDataFrame(urls, "doc_id long, url string"),
         spark.createDataFrame(
             rules, "domain string, path_prefix string, allow boolean"),
     ).collect()
-    assert len(out) == 200
+    assert len(out) == len(urls)
     for r in out:
-        assert r["allowed"] == py_verdict(r["host"], r["path"]), \
-            (r["host"], r["path"])
+        assert r["allowed"] == py_verdict(by_id[r["doc_id"]]), \
+            (by_id[r["doc_id"]], r["path"])
+    verdict = {r["doc_id"]: r["allowed"] for r in out}
+    assert verdict[200] is False
+    assert verdict[201] is True and verdict[202] is True

@@ -11,6 +11,7 @@ import sys
 
 import duckdb
 import pytest
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -59,6 +60,12 @@ ROWS_ONLY = sorted(set(entry_mod.queries()) - set(entry_mod.oracle_sql()))
 def test_query_matches_oracle(spark, duck, name):
     fn = entry_mod.queries()[name]
     df = fn(spark, SF_DIR)
+    if name in entry_mod.DRIVER_CHECKED:
+        # the driver canonicalizes rows through pandas, which cannot
+        # hash nested values: driver-checked outputs must be flat
+        nested = [f.simpleString() for f in df.schema.fields
+                  if isinstance(f.dataType, (ArrayType, MapType, StructType))]
+        assert not nested, f"{name}: nested output columns {nested}"
     spark_cols = df.columns
     spark_rows = [tuple(r) for r in df.collect()]
 
@@ -128,3 +135,17 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert set(df.columns) == {"doc_id", "out_spans", "codes"}
+
+
+def test_default_heap_fits_this_host():
+    """`bench.py` and `entry()` start Spark with no heap given; the
+    derived default must fit in the memory this host has available (a
+    fixed 16g pre-touched heap kept the JVM from starting)."""
+    from ocr_spark.session import _default_driver_memory
+
+    with open("/proc/meminfo") as f:
+        avail = next(int(ln.split()[1]) * 1024 for ln in f
+                     if ln.startswith("MemAvailable:"))
+    heap = _default_driver_memory()
+    assert heap.endswith("m")
+    assert 512 <= int(heap[:-1]) and int(heap[:-1]) << 20 < avail

@@ -136,7 +136,7 @@ def test_budget_guard_fallback_never_rebroadcasts(spark, corpus):
     golden spans."""
     import re
 
-    from ocr_spark.plans.checks import exchange_inputs, explain_formatted
+    from plan_checks import exchange_inputs, explain_formatted
 
     docs, blobs, expected = corpus
     # Distinguish a FORCED broadcast (the defect: an F.broadcast hint that

@@ -7,8 +7,9 @@ import random
 import numpy as np
 import pytest
 
+from bitmap_oracle import decode_bitmap
 from ocr_spark.datagen import generate_corpus
-from ocr_spark.fonts import ALPHABET, decode_bitmap, render_text
+from ocr_spark.fonts import ALPHABET, render_text
 from ocr_spark.functions.boilerplate_core import strip_boilerplate
 from ocr_spark.functions.voucher_core import extract_voucher_codes
 
@@ -127,7 +128,8 @@ def test_rotation_detect_and_decode_roundtrip():
     """M3/M4/M5 parity: rotated renders decode to the same text."""
     import numpy as np
 
-    from ocr_spark.fonts import decode_bitmap, detect_rotation, render_text
+    from bitmap_oracle import decode_bitmap, detect_rotation
+    from ocr_spark.fonts import render_text
 
     texts = ["HELLO WORLD", "CODE 1234 5678 9012 3456\nSECOND LINE",
              "A", "0123456789"]

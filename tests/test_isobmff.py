@@ -13,12 +13,25 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ocr_spark.isobmff import (  # noqa: E402
-    build_avif_container,
+    _box,
+    _build_container,
     decode_isobmff,
     encode_heif_unci,
     parse_isobmff_meta,
 )
 from ocr_spark.png_codec import blob_to_array  # noqa: E402
+
+
+def build_avif_container(av1_payload: bytes, width: int,
+                         height: int) -> bytes:
+    """Wrap an AV1 payload as AVIF.
+
+    av1C config record: marker/version 0x81, profile/level 0,
+    high_bitdepth etc. 0, reserved+initial_presentation 0.
+    """
+    av1c = _box(b"av1C", bytes([0x81, 0x00, 0x00, 0x00]))
+    return _build_container(b"avif", b"av01", width, height,
+                            av1_payload, [av1c])
 
 
 def _img(h=23, w=31, seed=7):

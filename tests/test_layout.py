@@ -65,7 +65,8 @@ def test_extract_links_order_and_empty_pages(spark):
 
 def test_extract_anchor_texts_pairing_stays_synchronized(spark):
     """An anchor WITHOUT href must not shift href/text pairing (the
-    failure mode of two parallel regex scans)."""
+    failure mode of two parallel regex scans); href need not be the
+    first attribute."""
     from ocr_spark.operators.boilerplate import extract_anchor_texts
 
     pages = spark.createDataFrame(
@@ -74,6 +75,7 @@ def test_extract_anchor_texts_pairing_stays_synchronized(spark):
                 '<a href="/b" class="c">second</a>'),
             (2, '<a href="/n"><b>nested markup skipped</b></a>'
                 '<a href="/m">plain</a>'),
+            (3, '<a class="c" href="/x">t</a>'),
         ],
         "doc_id long, html string",
     )
@@ -85,4 +87,5 @@ def test_extract_anchor_texts_pairing_stays_synchronized(spark):
         (1, 0, "/a", "first"),
         (1, 1, "/b", "second"),
         (2, 0, "/m", "plain"),
+        (3, 0, "/x", "t"),
     ]

@@ -64,7 +64,7 @@ def test_tfidf_topk_planted(spark):
 
 
 def test_lm_plans_stay_jvm_side(spark):
-    from ocr_spark.plans.checks import executed_plan
+    from plan_checks import executed_plan
 
     for df in (bigram_perplexity(_docs(spark)), tfidf_topk(_docs(spark))):
         plan = executed_plan(df)

@@ -60,44 +60,3 @@ def test_anomaly_set_partitioning_invariant(spark):
     b = sorted(map(tuple, rate_anomalies(ev.repartition(7)).collect()))
     assert a == b and a
 
-
-def test_silent_hour_flags_only_in_dense_mode(spark):
-    """A source that goes dark mid-series: observed-bucket mode cannot
-    see the missing hour; dense mode materializes it as n=0 and flags
-    it as an infinite-z (or large-z) drop."""
-    from ocr_spark.operators.monitor import (
-        densify_hours,
-        rate_anomalies_dense,
-    )
-
-    # hours 0..11 emit ~10; hour 12 is SILENT; hour 13 resumes
-    series = [10, 11, 9, 10, 12, 10, 9, 11, 10, 10, 11, 9, 0, 10]
-    ev = _events(spark, series)  # hour 12 contributes no events
-    dense = {(r["event_type"], r["hour"]): r["n"]
-             for r in densify_hours(ev).collect()}
-    assert len(dense) == len(series)  # every hour 0..13 materialized
-    sparse_out = rate_anomalies(ev).collect()
-    assert all(r["n"] != 0 for r in sparse_out)
-    dense_out = rate_anomalies_dense(ev).collect()
-    zero_rows = [r for r in dense_out if r["n"] == 0]
-    assert len(zero_rows) == 1 and zero_rows[0]["z2_milli"] > 4000
-
-
-def test_permanently_dark_source_flags_in_dense_mode(spark):
-    """A source that dies and never resumes: its dense span must extend
-    to the GLOBAL last observed hour (driven by a healthy sibling
-    source), so the outage hours exist as n=0 and flag."""
-    from ocr_spark.operators.monitor import rate_anomalies_dense
-
-    healthy = _events(spark, [10] * 16, etype="healthy")
-    dying = _events(spark, [10] * 10, etype="dying")  # dark from hour 10
-    ev = healthy.unionByName(dying)
-    from ocr_spark.operators.monitor import densify_hours
-
-    base = min(r["hour"] for r in densify_hours(ev).collect())
-    out = [r for r in rate_anomalies_dense(ev).collect()
-           if r["event_type"] == "dying"]
-    assert out and all(r["n"] == 0 for r in out)
-    # flags live in the dark tail (hours 10..15 relative to the start);
-    # later dark hours stop flagging as zeros enter the baseline
-    assert {r["hour"] - base for r in out} <= set(range(10, 16))

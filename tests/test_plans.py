@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from ocr_spark.plans.checks import (  # noqa: E402
+from plan_checks import (  # noqa: E402
     exchange_count,
     executed_plan,
     has_broadcast_join,
@@ -92,7 +92,7 @@ def test_extraction_no_pixel_exchange_both_regimes(spark):
     shuffling only (ref, short text)."""
     from ocr_spark.datagen import corpus_dir
     from ocr_spark.operators.extraction import run_extraction
-    from ocr_spark.plans.checks import exchange_inputs
+    from plan_checks import exchange_inputs
 
     cdir = corpus_dir(0.001)
     docs = spark.read.parquet(
@@ -312,7 +312,7 @@ def test_cluster_keep_best_aggregate_not_window(spark):
     mega-cluster must cost one combiner cell, not one task-local sort.
     No Python node anywhere (quality is JVM exprs); document text never
     enters an exchange (only ids/scores/hashes shuffle)."""
-    from ocr_spark.plans.checks import exchange_inputs
+    from plan_checks import exchange_inputs
 
     df = entry_mod.dedup_cluster_keep_best(spark, SF_DIR)
     plan = executed_plan(df)
@@ -327,7 +327,7 @@ def test_line_dedup_aggregate_not_window(spark):
     combine) — a corpus-universal footer line must cost a combiner
     cell, never a single-task window sort. No Python node; only
     (id, pos, line) rows cross exchanges — never the full page."""
-    from ocr_spark.plans.checks import exchange_inputs
+    from plan_checks import exchange_inputs
 
     df = entry_mod.text_line_dedup(spark, SF_DIR)
     plan = executed_plan(df)

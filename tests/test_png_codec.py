@@ -33,7 +33,8 @@ def test_roundtrip_every_filter(ftype):
 
 
 def test_roundtrip_rendered_glyphs():
-    from ocr_spark.fonts import decode_bitmap, render_text
+    from bitmap_oracle import decode_bitmap
+    from ocr_spark.fonts import render_text
 
     img = render_text("GRID VALUE 1234\nTOKEN 5678")
     data = encode_png(img, filter_type=2)
@@ -147,7 +148,7 @@ def test_corpus_ships_all_codecs_and_decodes():
     blob_to_array to ground_text (JPEG's +-1 rounding sits inside the
     binarize margin, so recognition stays exact)."""
     from ocr_spark.datagen import generate_corpus
-    from ocr_spark.fonts import decode_bitmap
+    from bitmap_oracle import decode_bitmap
 
     blobs = generate_corpus(n_docs=120, seed=45)["media_blobs"].to_pylist()
     codecs = {b["codec"] for b in blobs}

@@ -12,7 +12,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ocr_spark.fonts import decode_bitmap, render_text  # noqa: E402
+from bitmap_oracle import decode_bitmap  # noqa: E402
+from ocr_spark.fonts import render_text  # noqa: E402
 from ocr_spark.preprocess import (  # noqa: E402
     CROP_MODES,
     QUARTER_MODES,
@@ -202,7 +203,7 @@ def test_lowcontrast_equalize_roundtrip(text):
     """M9 contrast surface: a flat lit page with ink drop as small as 4
     greys decodes exactly — and ONLY via the equalize router: the fixed
     threshold chain and the adaptive path (c=15 > drop) both fail."""
-    from ocr_spark.fonts import _decode_pass
+    from bitmap_oracle import _decode_pass
     from ocr_spark.preprocess import adaptive_binarize, lit_lowcontrast
 
     img = render_text(text)

@@ -50,64 +50,3 @@ def test_bm25_rank_ties_deterministic(spark):
     again = bm25_topk(docs, ["common"], k=20).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, out))
 
-
-def test_incremental_index_equals_batch(spark, tmp_path):
-    from ocr_spark.sources.snapstore import SnapshotTable
-    from ocr_spark.operators.search import bm25_index_topk, index_commit
-
-    docs = _corpus(spark)
-    postings = SnapshotTable(str(tmp_path / "post"), key_col="pkey",
-                             n_buckets=4)
-    doclens = SnapshotTable(str(tmp_path / "dl"), key_col="id",
-                            n_buckets=4)
-    # three ingest cycles, split by doc_id ranges
-    b1 = docs.filter("doc_id <= 2")
-    b2 = docs.filter("doc_id > 2 and doc_id <= 5")
-    b3 = docs.filter("doc_id > 5")
-    for b in (b1, b2, b3):
-        index_commit(b, postings, doclens)
-
-    got = [(r["doc_id"], r["score_micro"], r["rank"]) for r in
-           bm25_index_topk(spark, postings, doclens,
-                           ["rare", "common"], k=20).collect()]
-    want = [(r["doc_id"], r["score_micro"], r["rank"]) for r in
-            bm25_topk(docs, ["rare", "common"], k=20).collect()]
-    assert got == want
-
-    # crash-replay of the last batch: MERGE overwrites identical rows,
-    # the served ranking does not move
-    index_commit(b3, postings, doclens)
-    again = [(r["doc_id"], r["score_micro"], r["rank"]) for r in
-             bm25_index_topk(spark, postings, doclens,
-                             ["rare", "common"], k=20).collect()]
-    assert again == want
-
-    # df/avgdl are corpus-global: after ONE more batch arrives, the
-    # index-served scores shift exactly to the new batch ranking
-    extra = spark.createDataFrame(
-        [(100, "rare rare filler"), (101, "common filler")],
-        ["doc_id", "text"],
-    )
-    index_commit(extra, postings, doclens)
-    got2 = [(r["doc_id"], r["score_micro"], r["rank"]) for r in
-            bm25_index_topk(spark, postings, doclens,
-                            ["rare", "common"], k=20).collect()]
-    want2 = [(r["doc_id"], r["score_micro"], r["rank"]) for r in
-             bm25_topk(docs.unionByName(extra),
-                       ["rare", "common"], k=20).collect()]
-    assert got2 == want2
-
-
-def test_index_commit_rejects_tab_ids(spark, tmp_path):
-    import pytest as _pytest
-
-    from ocr_spark.sources.snapstore import SnapshotTable
-    from ocr_spark.operators.search import index_commit
-
-    postings = SnapshotTable(str(tmp_path / "p"), key_col="pkey",
-                             n_buckets=2)
-    doclens = SnapshotTable(str(tmp_path / "d"), key_col="id",
-                            n_buckets=2)
-    docs = spark.createDataFrame([("a\tb", "x y")], ["doc_id", "text"])
-    with _pytest.raises(ValueError, match="tabs"):
-        index_commit(docs, postings, doclens)

@@ -62,7 +62,7 @@ def test_kmv_partial_trim_lossless(spark):
 def test_kmv_sketch_shuffles_hashes_not_values(spark):
     """The exchange payload is the 8-byte hash column: no raw value
     column survives past the first projection."""
-    from ocr_spark.plans.checks import executed_plan
+    from plan_checks import executed_plan
 
     df = _rows(spark, {"a": 100})
     out = kmv_distinct(df, ["grp"], "val", k=16)

@@ -192,231 +192,3 @@ def test_live_processing_time_trigger(spark, tmp_path, corpus):
     # the two frames were processed by different micro-batches
     assert len({r["batch_id"] for r in audit_rows}) >= 2
 
-
-def test_stateful_stream_dedup_first_seen(spark, tmp_path, corpus):
-    """applyInPandasWithState dedup: one keeper per distinct payload
-    across micro-batches; in-batch duplicates resolve to min doc_id and
-    re-delivered payloads in later batches are dropped by managed state."""
-    import pyarrow as pa
-
-    from ocr_spark.schemas import DOCUMENTS_SCHEMA
-    from ocr_spark.streaming.stateful import stream_dedup_first_seen
-
-    docs_tbl = corpus["documents_interleaved"]
-
-    def _dup(tbl, lo, hi, prefix):
-        part = tbl.slice(lo, hi - lo)
-        renamed = pa.table({
-            "doc_id": pa.array([f"{prefix}{v}" for v in
-                                part["doc_id"].to_pylist()]),
-            "spans": part["spans"],
-        })
-        return pa.concat_tables([part, renamed])
-
-    inbox = str(tmp_path / "inbox")
-    os.makedirs(inbox)
-    # batch 1: docs 0..10 plus in-batch duplicates of them
-    pq.write_table(_dup(docs_tbl, 0, 10, "zdup-"),
-                   os.path.join(inbox, "b1.parquet"))
-    # batch 2: re-delivery of the same 10 payloads under new ids + 5 new
-    part2 = pa.concat_tables([
-        _dup(docs_tbl, 0, 10, "redeliver-").slice(10, 10),
-        docs_tbl.slice(10, 5),
-    ])
-    pq.write_table(part2, os.path.join(inbox, "b2.parquet"))
-
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inbox)
-    )
-    keepers = stream_dedup_first_seen(stream)
-    sink = str(tmp_path / "keepers")
-    q = (
-        keepers.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = spark.read.schema(keepers.schema).parquet(sink).collect()
-    by_fp = {r["fp"]: r["doc_id"] for r in got}
-    # one keeper per distinct payload; none of the dup/redelivered ids win
-    assert len(got) == len(by_fp)
-    n_distinct_payloads = len({
-        r["fp"] for r in got
-    })
-    assert n_distinct_payloads == 15  # 10 from batch1 + 5 new in batch2
-    assert all(not d.startswith(("zdup-", "redeliver-"))
-               for d in by_fp.values())
-
-
-def test_stream_rate_alarms_matches_batch_and_replays_idempotent(
-    spark, tmp_path
-):
-    """Anomaly alarms over a live stream: batch 1 establishes the
-    baseline (no alarms yet), batch 2 carries a spike that alarms, and
-    the streamed alarm set equals the batch operator run over all
-    events seen. Replaying (fresh checkpoint, same drops) merges onto
-    the same alarm keys instead of duplicating."""
-    import datetime
-
-    from ocr_spark.operators.monitor import rate_anomalies
-    from ocr_spark.streaming.pipeline import stream_rate_alarms
-
-    base = datetime.datetime(2024, 1, 1)
-    series = [10, 11, 9, 10, 12, 10, 9, 11, 10, 10, 11, 9, 100]
-
-    def rows(hours):
-        out = []
-        for h in hours:
-            for j in range(series[h]):
-                out.append(
-                    ("click",
-                     base + datetime.timedelta(hours=h, seconds=j)))
-        return out
-
-    inbox = str(tmp_path / "inbox")
-    os.makedirs(inbox)
-    spark.createDataFrame(rows(range(12)), "event_type string, ts timestamp") \
-        .coalesce(1).write.mode("overwrite").parquet(inbox + "/d1")
-    # file source needs flat files in the inbox dir
-    import glob
-    import shutil
-
-    for i, d in enumerate(("d1",)):
-        src = glob.glob(f"{inbox}/{d}/*.parquet")[0]
-        shutil.move(src, f"{inbox}/batch{i}.parquet")
-        shutil.rmtree(f"{inbox}/{d}")
-
-    counts = SnapshotTable(str(tmp_path / "counts"), key_col="ck")
-    alarms = SnapshotTable(str(tmp_path / "alarms"), key_col="ak")
-
-    q = stream_rate_alarms(spark, inbox, counts, alarms,
-                           str(tmp_path / "ck1"))
-    q.awaitTermination(120)
-    assert alarms.read(spark) is None or alarms.read(spark).count() == 0
-
-    spark.createDataFrame(rows([12]), "event_type string, ts timestamp") \
-        .coalesce(1).write.mode("overwrite").parquet(inbox + "/d2")
-    src = glob.glob(f"{inbox}/d2/*.parquet")[0]
-    shutil.move(src, f"{inbox}/batch1.parquet")
-    shutil.rmtree(f"{inbox}/d2")
-
-    q2 = stream_rate_alarms(spark, inbox, counts, alarms,
-                            str(tmp_path / "ck1"))
-    q2.awaitTermination(120)
-    got = [(r["event_type"], r["hour"], r["n"], r["m"], r["mean_milli"],
-            r["z2_milli"]) for r in alarms.read(spark).collect()]
-    ev = spark.createDataFrame(rows(range(13)),
-                               "event_type string, ts timestamp")
-    want = [(r["event_type"], r["hour"], r["n"], r["m"], r["mean_milli"],
-             r["z2_milli"]) for r in rate_anomalies(ev).collect()]
-    assert sorted(got) == sorted(want) and len(want) == 1
-
-    # replay everything on a FRESH checkpoint: same alarm keys merge,
-    # no duplicates
-    q3 = stream_rate_alarms(spark, inbox, counts, alarms,
-                            str(tmp_path / "ck2"))
-    q3.awaitTermination(120)
-    again = [(r["event_type"], r["hour"]) for r in
-             alarms.read(spark).collect()]
-    assert len(again) == len(set(again)) == 1
-
-
-def test_stream_ingest_dedup_against_committed_store(
-    spark, tmp_path, corpus
-):
-    """Durable incremental dedup: the stream drops replays of content
-    committed BEFORE the stream started (batch-seeded store), dedups
-    across micro-batches through the store, and the final store equals
-    the batch twin (one row per distinct payload, first doc id wins)."""
-    import pyarrow as pa
-
-    from ocr_spark.operators.curate import doc_fingerprint
-    from ocr_spark.streaming.pipeline import stream_ingest_dedup
-
-    docs_tbl = corpus["documents_interleaved"]
-    store = SnapshotTable(str(tmp_path / "store"), key_col="fp",
-                          n_buckets=4)
-    audit = SnapshotTable(str(tmp_path / "aud"), key_col="batch_id",
-                          n_buckets=2)
-
-    # seed the store from the BATCH pipeline: docs 0..10 committed
-    seeded = spark.createDataFrame(docs_tbl.slice(0, 10).to_pandas())
-    store.merge_upsert(
-        doc_fingerprint(seeded)
-        .groupBy("fp").agg(F.min("doc_id").alias("first_doc_id"))
-    )
-    assert store.read(spark).count() == 10
-
-    inbox = str(tmp_path / "inbox")
-    os.makedirs(inbox)
-    # batch 1: replays of committed docs 0..5 under new ids + new 10..20
-    part1 = pa.concat_tables([
-        pa.table({
-            "doc_id": pa.array(["replay-" + v for v in
-                                docs_tbl.slice(0, 5)["doc_id"]
-                                .to_pylist()]),
-            "spans": docs_tbl.slice(0, 5)["spans"],
-        }),
-        docs_tbl.slice(10, 10),
-    ])
-    pq.write_table(part1, os.path.join(inbox, "b1.parquet"))
-    # batch 2: replays of BATCH-1 stream content + new 20..25
-    part2 = pa.concat_tables([
-        pa.table({
-            "doc_id": pa.array(["replay2-" + v for v in
-                                docs_tbl.slice(10, 5)["doc_id"]
-                                .to_pylist()]),
-            "spans": docs_tbl.slice(10, 5)["spans"],
-        }),
-        docs_tbl.slice(20, 5),
-    ])
-    pq.write_table(part2, os.path.join(inbox, "b2.parquet"))
-
-    q = stream_ingest_dedup(
-        read_document_stream(spark, inbox, max_files_per_trigger=1),
-        store, audit, str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-
-    rows = store.read(spark).collect()
-    by_fp = {r["fp"]: r["first_doc_id"] for r in rows}
-    assert len(rows) == len(by_fp) == 25  # 10 seeded + 10 + 5 new
-    # no replay id ever wins a fingerprint
-    assert all(not d.startswith(("replay-", "replay2-"))
-               for d in by_fp.values())
-    # batch twin: dedup over everything-seen gives the same store
-    everything = spark.createDataFrame(
-        docs_tbl.slice(0, 25).to_pandas()
-    )
-    twin = {
-        (r["fp"], r["first_doc_id"]) for r in
-        doc_fingerprint(everything)
-        .groupBy("fp").agg(F.min("doc_id").alias("first_doc_id"))
-        .collect()
-    }
-    assert {(f, d) for f, d in by_fp.items()} == twin
-    # audit: replay counts per batch, overwritten not double-counted
-    arows = {r["batch_id"]: (r["n_seen"], r["n_replayed"])
-             for r in audit.read(spark).collect()}
-    assert arows == {0: (15, 5), 1: (10, 5)}
-
-    # fresh checkpoint, same inbox: every payload is now committed, so
-    # the reprocess merges NOTHING new (durable dedup survives
-    # checkpoint loss — the property managed state cannot give)
-    v_before = store.current_version()
-    q2 = stream_ingest_dedup(
-        read_document_stream(spark, inbox, max_files_per_trigger=1),
-        store, audit, str(tmp_path / "ckpt2"),
-    )
-    q2.awaitTermination(120)
-    assert store.read(spark).count() == 25
-    rows2 = {(r["fp"], r["first_doc_id"])
-             for r in store.read(spark).collect()}
-    assert rows2 == twin
-    assert store.current_version() == v_before  # empty merges, no churn

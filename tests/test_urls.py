@@ -84,7 +84,10 @@ def test_canonicalize_cross_engine_parity(spark):
     rule diverges on a '\\n'-terminated URL (live-confirmed in review)."""
     import duckdb
 
-    from ocr_spark.functions.urls import canonicalize_url_sql
+    from ocr_spark.functions.urls import (
+        canonical_clean_sql,
+        canonical_compose_sql,
+    )
 
     urls = [
         "https://h.com:443/a\n",            # the Java-vs-RE2 $ trap
@@ -103,7 +106,7 @@ def test_canonicalize_cross_engine_parity(spark):
     con = duckdb.connect()
     got_duck = [
         con.sql(
-            f"SELECT {canonicalize_url_sql('url')} "
+            f"SELECT {canonical_compose_sql(canonical_clean_sql('url'))} "
             f"FROM (VALUES (?)) t(url)", params=[u]
         ).fetchone()[0]
         for u in urls
