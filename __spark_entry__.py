@@ -2,10 +2,11 @@
 
 Each ``queries()`` entry is one operator family from SURVEY.md §2 (or a
 training-data-pipeline extension), implemented Spark-first in the
-``ocr_spark`` package; ``oracle_sql()`` carries the DuckDB twin. Column
-names and types are aligned on both sides (counts cast to BIGINT, floats
-rounded identically) because the driver hashes values after sorting
-columns by name.
+``ocr_spark`` package and declared once, by a ``@query(DRIVER)`` or
+``@query(TAIL)`` decorator on its function; ``oracle_sql()`` carries the
+DuckDB twin under the same name. Column names and types are aligned on
+both sides (counts cast to BIGINT, floats rounded identically) because
+the driver hashes values after sorting columns by name.
 
 Numeric discipline: every float aggregate is rounded on BOTH sides;
 dot products are left-fold double sums on both sides (bit-identical,
@@ -23,6 +24,29 @@ from pyspark.sql import Window as W
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+QueryFn = Callable[[SparkSession, str], DataFrame]
+
+# Window tags: DRIVER marks the queries the correctness driver checks
+# (the first DRIVER_CAP rows of queries()), TAIL the ones past the cap.
+DRIVER = "driver"
+TAIL = "tail"
+_REGISTRY: dict[str, tuple[str, QueryFn]] = {}
+
+
+def query(
+    window: str, name: str | None = None,
+) -> Callable[[QueryFn], QueryFn]:
+    """Register the decorated function as query ``name`` (default: the
+    function's own name) in ``window``, DRIVER or TAIL."""
+    def register(fn: QueryFn) -> QueryFn:
+        key = name or fn.__name__
+        if window not in (DRIVER, TAIL) or key in _REGISTRY:
+            raise ValueError(f"query {key!r}: bad window or duplicate name")
+        _REGISTRY[key] = (window, fn)
+        return fn
+    return register
 
 
 # --------------------------------------------------------------------------
@@ -65,6 +89,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # relational operator queries (SURVEY.md §2.2-2.7)
 # --------------------------------------------------------------------------
 
+@query(DRIVER)
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     return (
@@ -82,6 +107,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def q3_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
@@ -101,6 +127,7 @@ def q3_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def a7_priority_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     return (
@@ -110,6 +137,7 @@ def a7_priority_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def j3_semi_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
@@ -118,6 +146,7 @@ def j3_semi_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame
     ).select("c_custkey", "c_name", "c_mktsegment")
 
 
+@query(DRIVER)
 def j1_anti_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti-join with a pushed-down date predicate on the subtracted side:
     customers with NO order since 2000-07-01 (the unpredicated variant is
@@ -133,9 +162,10 @@ def j1_anti_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFr
     ).select("c_custkey", "c_name")
 
 
+@query(DRIVER)
 def j4_positional_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional pairing (reference golden left/right pairs,
-    /root/reference/test/fixtures/expected.json): i-th view joined with
+    reference test/fixtures/expected.json): i-th view joined with
     i-th click per user."""
     ev = _t(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
@@ -157,6 +187,7 @@ def j4_positional_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def w1_first_event_per_user_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     w = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
@@ -167,9 +198,10 @@ def w1_first_event_per_user_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def a5_event_seq_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-preserving group concat (reference section-merge,
-    /root/reference/src/ocr/easyocr_impl.py:183-196): explicit sort_array
+    reference src/ocr/easyocr_impl.py:183-196): explicit sort_array
     over (ts, event_id) — never shuffle-order luck."""
     ev = _t(spark, sf_dir, "events")
     return (
@@ -189,6 +221,7 @@ def a5_event_seq_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def a8_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
@@ -199,6 +232,7 @@ def a8_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def u4_viewers_minus_purchasers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set difference at (user, day) granularity: days on which a user
     viewed but did not purchase. (Plain user-level viewers-minus-
@@ -218,9 +252,10 @@ def u4_viewers_minus_purchasers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return viewers.exceptAll(buyers)
 
 
+@query(DRIVER)
 def p1_token_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered line/token split (reference split-trim-filter,
-    /root/reference/src/ocr/cli.js:21-27) with position preserved."""
+    reference src/ocr/cli.js:21-27) with position preserved."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return docs.select(
         "doc_id",
@@ -230,6 +265,7 @@ def p1_token_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def p6_contains_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     return docs.filter(F.col("text").like("%window%")).select(
@@ -237,9 +273,10 @@ def p6_contains_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def f_hash_surrogates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """md5 / sha256 / short-id derivation (reference JsonDB + URL-cache
-    keying, /root/reference/src/database/jsonDb.py:21-27, src/ocr/cli.py:79,
+    keying, reference src/database/jsonDb.py:21-27, src/ocr/cli.py:79,
     src/utils/express-utils.js:13-22)."""
     cust = _t(spark, sf_dir, "customer")
     return cust.select(
@@ -250,9 +287,10 @@ def f_hash_surrogates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def f1_voucher_extract_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Voucher regex + normalize + length filter over synthesized order
-    texts (semantics of /root/reference/src/shared/extractVoucherCodes.js:
+    texts (semantics of reference src/shared/extractVoucherCodes.js:
     10-27); ~20% of rows carry a 15-digit near-miss that must NOT match."""
     from ocr_spark.functions.vouchers import codes_from_text
 
@@ -276,9 +314,10 @@ def f1_voucher_extract_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def a1_first_occurrence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-preserving first-occurrence dedup, relational form (reference
-    seen-set streaming dedup, /root/reference/src/shared/
+    seen-set streaming dedup, reference src/shared/
     extractVoucherCodes.js:15-22; window pattern per SURVEY.md 2.4 A1):
     per order, keep the first line that mentions each part, with its
     encounter position."""
@@ -294,9 +333,10 @@ def a1_first_occurrence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def j2_merge_array_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional-append merge (reference insert-or-append voucher store,
-    /root/reference/src/database/VoucherDatabase.py:168-198): existing
+    reference src/database/VoucherDatabase.py:168-198): existing
     codes per customer merged with a new batch via full outer + union.
     Arrays sorted for engine-neutral comparison."""
     orders = _t(spark, sf_dir, "orders")
@@ -329,9 +369,10 @@ def j2_merge_array_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def p3_banned_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banned-set filter as a broadcast anti-join (reference always-on
-    server filter, /root/reference/src/database/VoucherDatabase.js:18,
+    server filter, reference src/database/VoucherDatabase.js:18,
     banned set src/shared/bannedVouchers.js:4)."""
     # a VALUES local relation stays entirely JVM-side; createDataFrame of
     # a Python list compiles to applySchemaToPythonRDD — a 32-task Python
@@ -348,9 +389,10 @@ def p3_banned_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("p_partkey", "p_name", "p_type")
 
 
+@query(DRIVER)
 def a6_collect_codes_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-key ordered code collection (reference per-document voucher
-    accumulation across crops, /root/reference/test/tesseract2.js main
+    accumulation across crops, reference test/tesseract2.js main
     loop): explicit sort_array over (pos, code) structs — never
     shuffle-order luck."""
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 50 == 0)
@@ -372,9 +414,10 @@ def a6_collect_codes_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def f6_path_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Path normalize / basename / extension (reference path handling,
-    /root/reference/src/database/VoucherDatabase.py:84-88, src/ocr/
+    reference src/database/VoucherDatabase.py:84-88, src/ocr/
     cli.py:127)."""
     cust = _t(spark, sf_dir, "customer")
     path = F.concat(
@@ -391,9 +434,10 @@ def f6_path_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def w3_seeded_random_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORDER BY RANDOM() with a fixed seed (reference random select,
-    /root/reference/src/database/SQLiteHelper.py:170-172). The seeded
+    reference src/database/SQLiteHelper.py:170-172). The seeded
     permutation is keyed on md5(seed || key) instead of the engine's
     rand(seed) — the same uniform pseudo-random shuffle, but
     engine-neutral, so the DuckDB oracle reproduces it exactly (the
@@ -409,6 +453,7 @@ def w3_seeded_random_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def s5_scan_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     return (
@@ -433,6 +478,7 @@ def s5_scan_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def f11_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("long")
@@ -510,6 +556,7 @@ def _rendered_doc_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return prep.mapInPandas(_render, schema=schema)
 
 
+@query(TAIL)
 def m6_crop_half_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crop-variant cascade (reference M6-M8 split/crop vocabulary): render
     docs, crop top/bottom halves, OCR each crop, return per-crop text."""
@@ -531,6 +578,7 @@ def m6_crop_half_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(TAIL)
 def r4_quadrant_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OCRResult-shaped span records over rendered docs: line_no, text,
     half-section and quarter label (reference EasyOCR span records +
@@ -553,6 +601,7 @@ def r4_quadrant_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # training-data pipeline: text analysis
 # --------------------------------------------------------------------------
 
+@query(DRIVER)
 def q4_windowed_event_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time tumbling-window aggregate — the SAME operator runs over
     readStream with a watermark (ocr_spark/streaming/pipeline.py,
@@ -570,6 +619,7 @@ def q4_windowed_event_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def stream_replay_equals_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured-Streaming replay == batch, as a driver-checked query.
 
@@ -579,7 +629,7 @@ def stream_replay_equals_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches, one file per trigger -> foreachBatch merge_upsert into
     a doc_id-keyed SnapshotTable, so an at-least-once redelivery is
     absorbed idempotently — the reference's Bull-retry + SQLite-upsert
-    contract, /root/reference/src/ocr/ocrQueue.js:14-23 +
+    contract, reference src/ocr/ocrQueue.js:14-23 +
     VoucherDatabase.py:142-201), then folds the final store into
     per-length-class totals. Oracle = the batch twin straight over
     ``documents``: any doc the stream dropped, duplicated, or replayed
@@ -672,6 +722,7 @@ def stream_replay_equals_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, schema=schema)
 
 
+@query(TAIL)
 def text_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-style pre-tokenizer count (GPT-2-ish regex: contractions,
     letter runs, digit runs, punctuation runs with leading space) —
@@ -685,6 +736,7 @@ def text_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(TAIL)
 def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.functions.textstats import token_count
 
@@ -696,6 +748,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(TAIL)
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.functions.textstats import quality_score
 
@@ -703,6 +756,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", quality_score("text").alias("quality"))
 
 
+@query(DRIVER)
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.functions.textstats import lang_id
 
@@ -710,6 +764,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", lang_id("text").alias("lang_pred"))
 
 
+@query(DRIVER)
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.functions.textstats import fingerprint
 
@@ -717,6 +772,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", fingerprint("text").alias("fp"))
 
 
+@query(TAIL)
 def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north rule's headline text op — Readability-style HTML
     boilerplate strip (operators/boilerplate.py, the same Arrow UDF the
@@ -762,6 +818,7 @@ def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(TAIL)
 def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality signals (operators/curate.py
     repetition_metrics): duplicate-word fraction + dominant 2-gram and
@@ -774,6 +831,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_metrics(docs, "doc_id", "text")
 
 
+@query(TAIL, "pack_sequences")
 def pack_sequences_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GPT-style sequence packing (operators/curate.py pack_sequences):
     concatenate documents in doc_id order, chunk into 512-token context
@@ -789,6 +847,7 @@ def pack_sequences_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_sequences(with_tokens, "doc_id", "n_tokens", window=512)
 
 
+@query(TAIL)
 def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination (operators/dedup.py
     ngram_contamination): every 10th document plays the eval set; flag
@@ -806,6 +865,7 @@ def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_contamination(corpus, bench, "doc_id", "text", n=8)
 
 
+@query(TAIL)
 def bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE tokenizer training (operators/bpe.py): 3 merge
     rounds over the documents word vocabulary; returns every word with
@@ -821,6 +881,7 @@ def bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vocab
 
 
+@query(TAIL)
 def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style corpus-LM quality signal (operators/lm.py
     bigram_perplexity): add-one bigram LM trained on the documents
@@ -832,6 +893,7 @@ def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bigram_perplexity(_t(spark, sf_dir, "documents"))
 
 
+@query(TAIL)
 def text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 tf-idf keywords per document (operators/lm.py
     tfidf_topk), idf pinned to the integer micro-nat grid, ties broken
@@ -845,6 +907,7 @@ def text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 # training-data pipeline: deduplication
 # --------------------------------------------------------------------------
 
+@query(TAIL)
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup over documents UNION ALL documents (every doc has
     exactly one duplicate -> n_dups=2, keeper = doc_id)."""
@@ -855,6 +918,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup(doubled, "doc_id", "text")
 
 
+@query(TAIL)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-Jaccard near-dup pairs — the deliberately quadratic oracle for
     the LSH family (quadratic in near-dup CLUSTER size; at 100 TB run it
@@ -867,6 +931,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.9)
 
 
+@query(TAIL)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup candidates (scale path). Full DuckDB oracle:
     the md5-derived affine hash family (functions/hashfam.py) is
@@ -880,6 +945,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(TAIL)
 def q5_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity gap) + per-session
     stats — the batch twin of Structured Streaming session windows,
@@ -897,6 +963,7 @@ def q5_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(TAIL)
 def j5_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AS-OF join: each non-purchase event joined to the user's most
     recent purchase at-or-before it — the carry-forward window
@@ -917,6 +984,7 @@ def j5_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(TAIL)
 def a9_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentile aggregates per event_type (linear interpolation
     — the percentile_cont definition both engines share). At cluster
@@ -932,6 +1000,7 @@ def a9_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.groupBy("event_type").agg(F.count("*").alias("n"), *aggs)
 
 
+@query(TAIL)
 def a10_histogram_percentiles(spark: SparkSession, sf_dir: str
                               ) -> DataFrame:
     """Percentiles from the sparse fixed-bin histogram sketch
@@ -947,6 +1016,7 @@ def a10_histogram_percentiles(spark: SparkSession, sf_dir: str
     return histogram_percentiles(ev, ["event_type"], "value", width=1.0)
 
 
+@query(TAIL)
 def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction (curation before a corpus ships to training):
     emails / card numbers / phone numbers -> typed tokens, all JVM-side
@@ -989,6 +1059,7 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(TAIL)
 def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-stratum sampling (balanced training subsets):
     per event_type keep the 100 rows ranked first by (md5(event_id),
@@ -1001,6 +1072,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_type", "event_id", "sample_rank")
 
 
+@query(TAIL)
 def layout_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-column reading-order inference (the north rule's PDF/layout
     parse): block rectangles are derived deterministically from the
@@ -1043,32 +1115,13 @@ def layout_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate CLUSTERS from near-dup PAIRS: hash-min label propagation
-    over the MinHash-LSH candidate graph. Fixed 2 rounds — near-dup
-    components at >=0.9 est-Jaccard are band-collision near-cliques
-    (diameter <= 2), and the convergence check runs one extra round and
-    RAISES if any label would still move, so a deeper graph becomes a
-    loud error, never a silent under-merge. Full DuckDB oracle: the
-    minhash-pair SQL feeds the same 2 unrolled join+min rounds."""
-    from ocr_spark.operators.dedup import (
-        minhash_lsh_candidates,
-        neardup_components,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_candidates(
-        docs, "doc_id", "text", n=3, num_hashes=64, bands=16, threshold=0.9
-    )
-    return neardup_components(pairs, iters=2, check_converged=True)
-
-
+@query(DRIVER)
 def dedup_components_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION connected-components variant: large-star/small-star
     alternation (Kiveris et al. 2014) over the same MinHash-LSH pair
-    graph — O(log n) rounds regardless of component diameter, where the
-    fixed-round hash-min twin (dedup_components) covers diameter <= iters
-    and raises beyond. Until-fixpoint convergence means the result is the
+    graph — O(log n) rounds regardless of component diameter, where
+    hash-min label propagation needs diameter rounds. Until-fixpoint
+    convergence means the result is the
     EXACT component minimum, so the DuckDB oracle is the exact
     transitive-closure min via a recursive CTE — full value-hash parity,
     no unroll-depth coupling."""
@@ -1084,6 +1137,7 @@ def dedup_components_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bigstar_components(pairs)
 
 
+@query(DRIVER)
 def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-representative selection (SlimPajama/FineWeb): exact
     near-dup components (large-star/small-star fixpoint over the
@@ -1112,6 +1166,7 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
                              score_col="q10k")
 
 
+@query(DRIVER)
 def text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide exact line-level dedup, keep-first (RefinedWeb/Dolma
     rewrite rule) over deterministically synthesized multi-line pages:
@@ -1154,6 +1209,7 @@ _URL_SYNTH_SQL = """
 """
 
 
+@query(DRIVER)
 def url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL-level dedup, the first dedup of every crawl pipeline:
     canonicalize (drop fragment + tracking params, lowercase the
@@ -1191,6 +1247,7 @@ def url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(TAIL)
 def text_winnowing_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing (MOSS) document fingerprints: k-gram rolling hash +
     window-min selection. md5-derived hash family -> full DuckDB oracle."""
@@ -1206,6 +1263,7 @@ def text_winnowing_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumnRenamed("id", "doc_id")
 
 
+@query(TAIL)
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs. Full DuckDB oracle (md5-chunk bit votes);
     pytest-verified vs exact Jaccard overlap as well."""
@@ -1222,6 +1280,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 ANN_QUERY_IDS = [1, 2, 3, 4, 5]
 
 
+@query(TAIL)
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.similarity import cosine_topk
 
@@ -1232,6 +1291,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(TAIL)
 def emb_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.similarity import embedding_neardup_pairs
 
@@ -1242,6 +1302,7 @@ def emb_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_neardup_pairs(emb, "vec_id", "embedding", threshold=0.40)
 
 
+@query(TAIL)
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed ANN (sublinear scale path). Full DuckDB oracle — the
     md5-derived hyperplanes are inlined as SQL literals so buckets are
@@ -1256,6 +1317,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(TAIL)
 def emb_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH-bucketed near-dup pairs — the sublinear scale path
     for embedding near-dup (full DuckDB oracle via inlined md5-derived
@@ -1271,6 +1333,7 @@ def emb_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(TAIL)
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN with a deterministic md5-derived coarse quantizer
     (16 cells, nprobe=2). Full DuckDB oracle: centroids inlined, cell
@@ -1286,6 +1349,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over a TRAINED coarse quantizer: distributed spherical
     k-means (Lloyd, 3 iterations, deterministic md5-hash seeding — no
@@ -1313,6 +1377,7 @@ SEMDEDUP_TAU = 0.35
 SEMCONTAM_TAU = 0.3
 
 
+@query(TAIL)
 def decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic benchmark decontamination (similarity.py
     semantic_contamination): eval set = the ANN query vectors, corpus =
@@ -1330,6 +1395,7 @@ def decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "max_sim")
 
 
+@query(DRIVER, "semantic_dedup")
 def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (arXiv:2303.09540): semantic near-dup pruning inside
     trained k-means cells — same Lloyd quantizer as
@@ -1350,6 +1416,7 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                           num_centroids=16, centroids=cents)
 
 
+@query(TAIL)
 def sketch_distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language distinct 3-word-shingle cardinality via a KMV
     bottom-k sketch (functions/sketches.py) joined against the exact
@@ -1373,6 +1440,7 @@ def sketch_distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exact_distinct")
 
 
+@query(DRIVER)
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the customer->supplier trade graph (nodes =
     customers at 2k, suppliers at 2k+1; edges = distinct (custkey,
@@ -1399,6 +1467,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank(nodes, edges, iters=3)
 
 
+@query(TAIL, "bpe_encode")
 def bpe_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train-then-apply tokenizer completion: learn 3 BPE merges on the
     documents vocabulary, then tokenize the corpus by joining each
@@ -1415,6 +1484,7 @@ def bpe_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "n_bpe_tokens")
 
 
+@query(DRIVER)
 def dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact shared-substring detection (Lee et al. 2022): maximal
     cross-document word runs of >= 8 tokens via k-gram postings + the
@@ -1428,6 +1498,7 @@ def dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared_substring_runs(docs, "doc_id", "text", k=8, max_df=64)
 
 
+@query(DRIVER)
 def dedup_substring_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lee et al. 2022 part two: rewrite documents with duplicated
     substrings cut (operators/dedup.py trim_duplicate_substrings —
@@ -1442,6 +1513,7 @@ def dedup_substring_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      max_df=64)
 
 
+@query(DRIVER)
 def monitor_rate_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pipeline telemetry alarm (operators/monitor.py rate_anomalies):
     hourly per-type event counts vs their trailing 24-bucket baseline,
@@ -1453,6 +1525,7 @@ def monitor_rate_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rate_anomalies(_t(spark, sf_dir, "events"))
 
 
+@query(TAIL)
 def sample_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 90/5/5 train/val/test assignment (operators/
     curate.py split_assign): md5-bucket ranges on the doc id, so
@@ -1464,6 +1537,7 @@ def sample_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return split_assign(docs, "doc_id")
 
 
+@query(DRIVER, "curation_funnel")
 def curation_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end C4/Gopher curation decision (operators/curate.py
     curation_funnel): four exact signals joined, ordered gates, verdict
@@ -1476,6 +1550,7 @@ def curation_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curation_funnel(_t(spark, sf_dir, "documents"))
 
 
+@query(DRIVER)
 def curate_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source retention cap (the per-domain/host cap of C4 and
     RefinedWeb): keep the top-2 documents of each source by (quality
@@ -1498,6 +1573,7 @@ def curate_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 BM25_TERMS = ["spark", "join", "customer"]
 
 
+@query(DRIVER)
 def search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus retrieval with BM25 (operators/search.py bm25_topk):
     top-20 documents for a 3-term query, Lucene idf pinned to the
@@ -1511,6 +1587,7 @@ def search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_topk(docs, BM25_TERMS, k=20)
 
 
+@query(TAIL)
 def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document Shannon character entropy in exact integer
     micro-nats (operators/lm.py char_entropy): each c*ln(c) term is
@@ -1521,6 +1598,7 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return char_entropy(_t(spark, sf_dir, "documents"))
 
 
+@query(TAIL)
 def sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-2 mixture sampling over the source column
     (operators/curate.py temperature_mixture_sample): quotas
@@ -1535,6 +1613,7 @@ def sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "source", "sample_rank", "quota")
 
 
+@query(DRIVER)
 def nb_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-based curation (the FineWeb-Edu/DCLM pattern): the corpus
     quality heuristic plays the expensive judge, labeling documents
@@ -1559,6 +1638,7 @@ def nb_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("doc_id"), "label", "score1", "score0", "pred")
 
 
+@query(DRIVER)
 def curate_url_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain-blocklist filter with dot-boundary suffix semantics (the
     UT1-style pre-content filter of RefinedWeb/FineWeb), via
@@ -1596,6 +1676,7 @@ def curate_url_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "host", "blocked")
 
 
+@query(DRIVER)
 def text_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide top-40 word bigrams (curate.top_ngrams): one hash
     aggregate with map-side partial combine, then TakeOrderedAndProject
@@ -1609,6 +1690,7 @@ def text_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def shard_assign_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic training-shard export assignment
     (curate.shard_assign): shard = first 16 bits of md5(doc_id) mod 16,
@@ -1622,6 +1704,7 @@ def shard_assign_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shard_assign(docs, id_col="doc_id", num_shards=16)
 
 
+@query(DRIVER, "dedup_incremental")
 def dedup_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ingest dedup (dedup.dedup_incremental): the day's
     batch (docs with id%4==3, every other one carrying the text of an
@@ -1651,6 +1734,7 @@ def dedup_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-weighted sampling without replacement (curate.
     weighted_sample, Efraimidis-Spirakis 2006): 150 docs selected with
@@ -1672,6 +1756,7 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def html_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link-graph construction from HTML anchors
     (boilerplate.extract_links): each synthesized page carries three
@@ -1713,6 +1798,7 @@ def html_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def html_anchor_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anchor-text aggregation per link target
     (boilerplate.extract_anchor_texts): the off-page signal crawlers
@@ -1753,6 +1839,7 @@ def html_anchor_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(DRIVER)
 def curate_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFC 9309 robots-exclusion gate (curate.robots_filter): hosts
     h<k>.example.com with k%3==0 publish Disallow /p/ + Allow /p/1
@@ -1799,6 +1886,7 @@ def curate_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "host", "path", "allowed")
 
 
+@query(DRIVER)
 def link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the EXTRACTED crawl link graph — the composition
     that closes the loop: html_link_graph's synth edges (next-link,
@@ -1826,6 +1914,7 @@ def link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank(nodes, edges, iters=3)
 
 
+@query(DRIVER)
 def crawl_frontier_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The crawl-side capstone COMPOSITION — next-fetch selection from
     the full gate chain, one plan: candidate URLs pass the
@@ -1896,230 +1985,15 @@ def crawl_frontier_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The correctness driver oracles the FIRST ``DRIVER_CAP`` registry rows.
 DRIVER_CAP = 50
-
-# Round-5 driver-checked window, explicit by name so a registry edit can
-# never silently move a row in or out of it (the round-4 boundary was
-# implicit — "count the first 50" — flagged in ADVICE r4). Ordering is by
-# evidence need, computed from CORRECTNESS_r01..r04:
-#   1. never driver-checked (the round-5 additions: streaming replay,
-#      URL blocklist, top-ngrams, shard export, incremental dedup,
-#      weighted sampling, link graph, anchor signals, robots gate,
-#      link-graph PageRank, frontier composition);
-#   2. the 25 rows whose LAST driver green is r03 (rotated past the cap
-#      in round 4 under the documented long-green policy);
-#   3. round-4 additions whose ONLY green round is r04 (a second
-#      consecutive green is the strongest remaining evidence gain).
-# Rotated to the tail to make room for the ten new round-5 rows: the
-# three two-green rows (emb_neardup_lsh / ann_ivf_topk green r02+r04;
-# dedup_components r03+r04) and three single-green-r04 rows chosen for
-# the strongest pytest backstops (sample_split_assign's md5-bucket
-# ranges, text_char_entropy's planted known-entropy values,
-# sample_mixture's bit-exact quota arithmetic,
-# a10_histogram_percentiles' error-bound + mergeability pins,
-# decontaminate_semantic's paraphrase/tie/self-flag semantics,
-# sketch_distinct_tokens' 4-sigma error + trim-losslessness pins,
-# bpe_encode's monotone-under-merges + whitespace pins).
-DRIVER_CHECKED: tuple[str, ...] = (
-    "stream_replay_equals_batch",
-    "curate_url_blocklist",
-    "text_top_ngrams",
-    "shard_assign_rank",
-    "dedup_incremental",
-    "sample_weighted",
-    "html_link_graph",
-    "html_anchor_signals",
-    "curate_robots_filter",
-    "link_pagerank",
-    "crawl_frontier_rank",
-    # -- last green r03 -------------------------------------------------
-    "text_lang_id",
-    "text_fingerprint",
-    "q4_windowed_event_rate",
-    "f1_voucher_extract_synth",
-    "w3_seeded_random_order",
-    "q1_pricing_summary",
-    "q3_revenue_by_nation",
-    "a7_priority_count",
-    "j3_semi_customers_with_orders",
-    "j1_anti_customers_without_orders",
-    "j4_positional_pairs",
-    "w1_first_event_per_user_type",
-    "a5_event_seq_concat",
-    "a8_event_stats",
-    "u4_viewers_minus_purchasers",
-    "p1_token_explode",
-    "p6_contains_search",
-    "f_hash_surrogates",
-    "a1_first_occurrence_dedup",
-    "j2_merge_array_union",
-    "p3_banned_anti_join",
-    "a6_collect_codes_per_key",
-    "f6_path_functions",
-    "s5_scan_filter_project",
-    "f11_json_props",
-    # -- single green round (r04) ----------------------------------------
-    "dedup_components_bigstar",
-    "dedup_cluster_keep_best",
-    "text_line_dedup",
-    "url_canonical_dedup",
-    "curate_domain_cap",
-    "ann_ivf_trained_topk",
-    "semantic_dedup",
-    "graph_pagerank",
-    "nb_quality_classifier",
-    "dedup_substring_runs",
-    "dedup_substring_trim",
-    "search_bm25",
-    "curation_funnel",
-    "monitor_rate_anomalies",
-)
-
-# Long-green tail, past the driver cap: every row here was driver-green
-# in round 4 and at least one earlier round (the first four rotated out
-# of the round-5 window per the note above); all stay pytest-oracled at
-# three SFs (tests/test_entry_contract.py runs the FULL map).
-LONG_GREEN_TAIL: tuple[str, ...] = (
-    "bpe_encode",
-    "sketch_distinct_tokens",
-    "decontaminate_semantic",
-    "a10_histogram_percentiles",
-    "text_char_entropy",
-    "sample_mixture",
-    "sample_split_assign",
-    "emb_neardup_lsh",
-    "ann_ivf_topk",
-    "dedup_components",
-    "emb_neardup_pairs",
-    "ann_lsh_topk",
-    "ann_cosine_topk",
-    "dedup_simhash",
-    "text_winnowing_fp",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_exact",
-    "decontaminate_ngrams",
-    "layout_reading_order",
-    "text_pii_scrub",
-    "sample_stratified",
-    "q5_sessionization",
-    "j5_asof_last_purchase",
-    "a9_value_percentiles",
-    "bpe_learn",
-    "lm_perplexity",
-    "text_tfidf_keywords",
-    "pack_sequences",
-    "text_boilerplate_strip",
-    "text_repetition",
-    "text_token_count_bpe",
-    "m6_crop_half_ocr",
-    "r4_quadrant_spans",
-    "text_token_count",
-    "text_quality_score",
-)
+DRIVER_CHECKED: tuple[str, ...] = tuple(
+    name for name, (window, _) in _REGISTRY.items() if window == DRIVER)
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Query registry: DRIVER_CHECKED window first, long-green tail after.
-
-    The correctness driver checks the FIRST ``DRIVER_CAP`` entries against
-    the DuckDB oracles; the window membership is the explicit
-    ``DRIVER_CHECKED`` tuple above (asserted against this map in
-    tests/test_entry_contract.py so edits keep the boundary visible).
-    """
-    fns: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        "stream_replay_equals_batch": stream_replay_equals_batch,
-        "curate_url_blocklist": curate_url_blocklist,
-        "text_top_ngrams": text_top_ngrams,
-        "shard_assign_rank": shard_assign_rank,
-        "dedup_incremental": dedup_incremental_q,
-        "sample_weighted": sample_weighted,
-        "html_link_graph": html_link_graph,
-        "html_anchor_signals": html_anchor_signals,
-        "curate_robots_filter": curate_robots_filter,
-        "link_pagerank": link_pagerank,
-        "crawl_frontier_rank": crawl_frontier_rank,
-        "dedup_components_bigstar": dedup_components_bigstar,
-        "dedup_cluster_keep_best": dedup_cluster_keep_best,
-        "text_line_dedup": text_line_dedup,
-        "url_canonical_dedup": url_canonical_dedup,
-        "curate_domain_cap": curate_domain_cap,
-        "ann_ivf_trained_topk": ann_ivf_trained_topk,
-        "semantic_dedup": semantic_dedup_q,
-        "sketch_distinct_tokens": sketch_distinct_tokens,
-        "graph_pagerank": graph_pagerank,
-        "nb_quality_classifier": nb_quality_classifier,
-        "bpe_encode": bpe_encode_q,
-        "text_char_entropy": text_char_entropy,
-        "sample_mixture": sample_mixture,
-        "dedup_substring_runs": dedup_substring_runs,
-        "dedup_substring_trim": dedup_substring_trim,
-        "a10_histogram_percentiles": a10_histogram_percentiles,
-        "decontaminate_semantic": decontaminate_semantic,
-        "search_bm25": search_bm25,
-        "curation_funnel": curation_funnel_q,
-        "monitor_rate_anomalies": monitor_rate_anomalies,
-        "sample_split_assign": sample_split_assign,
-        "emb_neardup_pairs": emb_neardup_pairs,
-        "emb_neardup_lsh": emb_neardup_lsh,
-        "ann_lsh_topk": ann_lsh_topk,
-        "ann_ivf_topk": ann_ivf_topk,
-        "ann_cosine_topk": ann_cosine_topk,
-        "dedup_components": dedup_components,
-        "dedup_simhash": dedup_simhash,
-        "text_winnowing_fp": text_winnowing_fp,
-        "dedup_minhash_lsh": dedup_minhash_lsh,
-        "dedup_ngram_jaccard": dedup_ngram_jaccard,
-        "dedup_exact": dedup_exact,
-        "decontaminate_ngrams": decontaminate_ngrams,
-        "layout_reading_order": layout_reading_order,
-        "text_pii_scrub": text_pii_scrub,
-        "sample_stratified": sample_stratified,
-        "q5_sessionization": q5_sessionization,
-        "j5_asof_last_purchase": j5_asof_last_purchase,
-        "a9_value_percentiles": a9_value_percentiles,
-        "bpe_learn": bpe_learn,
-        "lm_perplexity": lm_perplexity,
-        "text_tfidf_keywords": text_tfidf_keywords,
-        "pack_sequences": pack_sequences_q,
-        "text_boilerplate_strip": text_boilerplate_strip,
-        "text_repetition": text_repetition,
-        "text_token_count_bpe": text_token_count_bpe,
-        "m6_crop_half_ocr": m6_crop_half_ocr,
-        "r4_quadrant_spans": r4_quadrant_spans,
-        "text_token_count": text_token_count,
-        "text_quality_score": text_quality_score,
-        "text_lang_id": text_lang_id,
-        "text_fingerprint": text_fingerprint,
-        "q4_windowed_event_rate": q4_windowed_event_rate,
-        "f1_voucher_extract_synth": f1_voucher_extract_synth,
-        "w3_seeded_random_order": w3_seeded_random_order,
-        "q1_pricing_summary": q1_pricing_summary,
-        "q3_revenue_by_nation": q3_revenue_by_nation,
-        "a7_priority_count": a7_priority_count,
-        "j3_semi_customers_with_orders": j3_semi_customers_with_orders,
-        "j1_anti_customers_without_orders": j1_anti_customers_without_orders,
-        "j4_positional_pairs": j4_positional_pairs,
-        "w1_first_event_per_user_type": w1_first_event_per_user_type,
-        "a5_event_seq_concat": a5_event_seq_concat,
-        "a8_event_stats": a8_event_stats,
-        "u4_viewers_minus_purchasers": u4_viewers_minus_purchasers,
-        "p1_token_explode": p1_token_explode,
-        "p6_contains_search": p6_contains_search,
-        "f_hash_surrogates": f_hash_surrogates,
-        "a1_first_occurrence_dedup": a1_first_occurrence_dedup,
-        "j2_merge_array_union": j2_merge_array_union,
-        "p3_banned_anti_join": p3_banned_anti_join,
-        "a6_collect_codes_per_key": a6_collect_codes_per_key,
-        "f6_path_functions": f6_path_functions,
-        "s5_scan_filter_project": s5_scan_filter_project,
-        "f11_json_props": f11_json_props,
-    }
-    ordered = DRIVER_CHECKED + LONG_GREEN_TAIL
-    assert len(DRIVER_CHECKED) == DRIVER_CAP, len(DRIVER_CHECKED)
-    assert sorted(ordered) == sorted(fns), (
-        set(ordered) ^ set(fns)
-    )
-    return {name: fns[name] for name in ordered}
+def queries() -> dict[str, QueryFn]:
+    """Query registry: the DRIVER-tagged queries first, the TAIL after,
+    each in declaration order."""
+    ordered = sorted(_REGISTRY.items(), key=lambda kv: kv[1][0] == TAIL)
+    return {name: fn for name, (_, fn) in ordered}
 
 
 # --------------------------------------------------------------------------
@@ -2471,36 +2345,6 @@ _LAYOUT_READING_ORDER_ORACLE = """
              ORDER BY col_idx, y0, x0, block_id) AS read_order
     FROM c
 """
-
-
-def _dedup_components_oracle(iters: int = 4) -> str:
-    """DuckDB twin of dedup.neardup_components over the minhash-LSH pair
-    graph: the pair oracle becomes a CTE, then `iters` unrolled rounds of
-    (join labels to edges, min-aggregate) — exactly the Spark loop. The
-    Spark side's convergence check guarantees the fixed unroll depth is
-    sufficient (it raises rather than under-merging)."""
-    rounds = "".join(
-        f""", l{i + 1} AS (
-          SELECT id, min(label) AS label FROM (
-            SELECT e.dst AS id, l.label
-            FROM edges e JOIN l{i} l ON e.src = l.id
-            UNION ALL
-            SELECT id, label FROM l{i}
-          ) GROUP BY id
-        )"""
-        for i in range(iters)
-    )
-    return f"""
-        WITH pairs AS ({_minhash_lsh_oracle()}
-        ), edges AS (
-          SELECT id_a AS src, id_b AS dst FROM pairs
-          UNION
-          SELECT id_b AS src, id_a AS dst FROM pairs
-        ), l0 AS (
-          SELECT DISTINCT src AS id, src AS label FROM edges
-        ){rounds}
-        SELECT id AS doc_id, label AS component_id FROM l{iters}
-    """
 
 
 def _bigstar_components_oracle() -> str:
@@ -2989,7 +2833,7 @@ _VOUCHER = r"\b\d{4}\s*\d{4}\s*\d{4}\s*\d{4}\b"
 
 # DuckDB twin of textstats.quality_score — shared between the
 # text_quality_score oracle and every oracle that needs the judge label
-# (nb_quality_classifier).
+# (nb_quality_classifier, sample_weighted, curation_funnel).
 _QUALITY_SELECT = rf"""
     SELECT doc_id,
            round(
@@ -3002,6 +2846,77 @@ _QUALITY_SELECT = rf"""
                      1.0) * 0.3,
            4) AS quality
     FROM documents
+"""
+
+
+# The token-count, repetition and char-entropy oracles are shared between
+# their own queries and the curation_funnel oracle that composes them.
+_TOKEN_COUNT_ORACLE = r"""
+    SELECT doc_id,
+           CASE WHEN length(trim(text)) = 0 THEN 0
+                ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
+           n_chars
+    FROM documents
+"""
+
+
+_REPETITION_ORACLE = r"""
+    WITH w AS (
+      SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
+      FROM documents
+    ), wc AS (
+      SELECT doc_id, word, count(*) AS cnt
+      FROM (SELECT doc_id, unnest(w) AS word FROM w)
+      GROUP BY 1, 2
+    ), dup AS (
+      SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_words,
+             floor((sum(CASE WHEN cnt > 1 THEN cnt ELSE 0 END)
+                    * 1.0 / sum(cnt)) * 1000000 + 0.5) / 1000000
+               AS dup_word_frac
+      FROM wc GROUP BY 1
+    ), bgc AS (
+      SELECT doc_id, bigram, count(*) AS cnt
+      FROM (
+        SELECT doc_id, w[i] || ' ' || w[i+1] AS bigram
+        FROM w, UNNEST(generate_series(1, len(w) - 1)) AS s(i)
+        WHERE len(w) >= 2
+      ) GROUP BY 1, 2
+    ), top AS (
+      SELECT doc_id, bigram, cnt,
+             sum(cnt) OVER (PARTITION BY doc_id) AS n_bigrams,
+             row_number() OVER (
+               PARTITION BY doc_id ORDER BY cnt DESC, bigram ASC
+             ) AS rn
+      FROM bgc
+    )
+    SELECT d.doc_id, d.n_words, d.dup_word_frac,
+           t.bigram AS top_bigram,
+           floor((t.cnt * 1.0 / t.n_bigrams) * 1000000 + 0.5)
+             / 1000000 AS top_bigram_frac
+    FROM dup d LEFT JOIN top t
+      ON d.doc_id = t.doc_id AND t.rn = 1
+"""
+
+
+_CHAR_ENTROPY_ORACLE = """
+    WITH ch AS (
+      SELECT doc_id, unnest(string_split(text, '')) AS ch
+      FROM documents
+    ), f AS (
+      SELECT doc_id, ch, count(*) AS c
+      FROM ch WHERE ch <> '' GROUP BY doc_id, ch
+    ), per AS (
+      SELECT doc_id,
+             CAST(sum(c) AS BIGINT) AS n_chars_counted,
+             CAST(sum(CAST(floor(c * ln(c) * 1000000 + 0.5)
+                           AS BIGINT)) AS BIGINT) AS t
+      FROM f GROUP BY doc_id
+    )
+    SELECT doc_id, n_chars_counted,
+           CAST(floor(ln(n_chars_counted) * 1000000 + 0.5)
+                AS BIGINT)
+           - t // n_chars_counted AS entropy_micro
+    FROM per
 """
 
 
@@ -3073,264 +2988,6 @@ def _nb_quality_classifier_oracle(num_buckets: int = 64,
 
 
 def oracle_sql() -> dict[str, str]:
-    d = _oracle_sql_base()
-    # Round-5 additions. url_blocklist: the oracle spells the generic
-    # suffix rule out per-entry (exact OR dot-suffix LIKE) over the same
-    # synth hosts; h14.example.com proves the dot boundary.
-    d["curate_url_blocklist"] = """
-        WITH u AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 5 = 0
-                      THEN 'm' || (doc_id // 20) || '.ads.net'
-                      ELSE 'h' || (doc_id // 20) || '.example.com'
-                 END AS host
-          FROM documents
-        )
-        SELECT doc_id, host,
-               (host = 'ads.net' OR host LIKE '%.ads.net'
-                OR host = 'h1.example.com'
-                OR host = 'h4.example.com') AS blocked
-        FROM u
-    """
-    d["text_top_ngrams"] = """
-        WITH ws AS (
-          SELECT list_filter(
-                   string_split_regex(lower(text), '[^a-z0-9]+'),
-                   x -> x <> '') AS w
-          FROM documents
-        ), g AS (
-          SELECT ws.w[i] || ' ' || ws.w[i+1] AS ngram
-          FROM ws, UNNEST(generate_series(1, len(ws.w) - 1)) AS t(i)
-        ), c AS (
-          SELECT ngram, CAST(count(*) AS BIGINT) AS cnt
-          FROM g GROUP BY ngram
-        )
-        SELECT ngram, cnt FROM c ORDER BY cnt DESC, ngram ASC LIMIT 40
-    """
-    d["shard_assign_rank"] = """
-        WITH k AS (
-          SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS key
-          FROM documents
-        ), s AS (
-          SELECT doc_id, key,
-                 CAST(('0x' || substr(key, 1, 4)) AS BIGINT) % 16 AS shard
-          FROM k
-        )
-        SELECT doc_id, CAST(shard AS BIGINT) AS shard,
-               CAST(row_number() OVER (
-                 PARTITION BY shard ORDER BY key, doc_id
-               ) AS BIGINT) AS pos
-        FROM s
-    """
-    d["sample_weighted"] = f"""
-        WITH q AS ({_QUALITY_SELECT}),
-        w AS (
-          SELECT doc_id,
-                 CAST(floor(quality * 10000 + 0.5) AS BIGINT) + 1 AS w
-          FROM q
-        ), k AS (
-          SELECT doc_id, w,
-                 CAST(floor(
-                   (ln(CAST(('0x' ||
-                        substr(md5(CAST(doc_id AS VARCHAR)), 1, 13))
-                        AS BIGINT) + 1.0) - 52.0 * ln(2.0))
-                   / CAST(w AS DOUBLE) * 1e9 + 0.5) AS BIGINT) AS es_key
-          FROM w
-        )
-        SELECT doc_id, w, es_key FROM k
-        ORDER BY es_key DESC, doc_id ASC LIMIT 150
-    """
-    d["html_link_graph"] = """
-        WITH p AS (
-          SELECT doc_id,
-                 '<html><body><p>intro</p><a href="/doc/'
-                 || (doc_id + 11)
-                 || '">n</a><a href="https://h' || (doc_id % 20)
-                 || '.example.com/doc/' || (doc_id + 23)
-                 || '?utm_source=x">f</a><a href="/doc/'
-                 || ((doc_id % 7) * 3)
-                 || '">b</a></body></html>' AS html
-          FROM documents
-        ), l AS (
-          SELECT doc_id AS src,
-                 unnest(regexp_extract_all(
-                   html, '<a\\b[^>]*href="([^"]*)"', 1)) AS href
-          FROM p
-        )
-        SELECT CAST(regexp_extract(href, '/doc/([0-9]+)', 1) AS BIGINT)
-                 AS target,
-               CAST(count(*) AS BIGINT) AS in_degree,
-               CAST(count(DISTINCT src) AS BIGINT) AS n_srcs,
-               min(src) AS min_src
-        FROM l GROUP BY 1
-    """
-    d["curate_robots_filter"] = """
-        WITH u AS (
-          SELECT doc_id, host,
-                 regexp_extract('https://' || host || '/p/' || doc_id,
-                   '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) AS path
-          FROM (SELECT doc_id,
-                       CASE WHEN doc_id % 5 = 0
-                            THEN 'm' || (doc_id // 20) || '.ads.net'
-                            ELSE 'h' || (doc_id // 20) || '.example.com'
-                       END AS host
-                FROM documents)
-        ), r AS (
-          SELECT 'h' || k || '.example.com' AS host,
-                 v.pp AS path_prefix, v.al AS allow
-          FROM (SELECT DISTINCT doc_id // 20 AS k FROM documents) t,
-               (VALUES ('/p/', false), ('/p/1', true)) AS v(pp, al)
-          WHERE k % 3 = 0
-        ), m AS (
-          SELECT u.doc_id, r.allow,
-                 row_number() OVER (
-                   PARTITION BY u.doc_id
-                   ORDER BY length(r.path_prefix) DESC, r.allow DESC,
-                            r.path_prefix DESC
-                 ) AS rn
-          FROM u JOIN r
-            ON u.host = r.host AND starts_with(u.path, r.path_prefix)
-        )
-        SELECT u.doc_id, u.host, u.path,
-               coalesce(m.allow, true) AS allowed
-        FROM u LEFT JOIN m ON m.doc_id = u.doc_id AND m.rn = 1
-    """
-    d["crawl_frontier_rank"] = f"""
-        WITH pr AS ({_link_pagerank_oracle()}),
-        u AS (
-          SELECT doc_id, host,
-                 regexp_extract('https://' || host || '/p/' || doc_id,
-                   '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) AS path
-          FROM (SELECT doc_id,
-                       CASE WHEN doc_id % 5 = 0
-                            THEN 'm' || (doc_id // 20) || '.ads.net'
-                            ELSE 'h' || (doc_id // 20) || '.example.com'
-                       END AS host
-                FROM documents)
-        ), nb AS (
-          SELECT * FROM u
-          WHERE NOT (host = 'ads.net' OR host LIKE '%.ads.net'
-                     OR host = 'h1.example.com'
-                     OR host = 'h4.example.com')
-        ), rr AS (
-          SELECT 'h' || k || '.example.com' AS host,
-                 v.pp AS path_prefix, v.al AS allow
-          FROM (SELECT DISTINCT doc_id // 20 AS k FROM documents) t,
-               (VALUES ('/p/', false), ('/p/1', true)) AS v(pp, al)
-          WHERE k % 3 = 0
-        ), m AS (
-          SELECT nb.doc_id, rr.allow,
-                 row_number() OVER (
-                   PARTITION BY nb.doc_id
-                   ORDER BY length(rr.path_prefix) DESC, rr.allow DESC,
-                            rr.path_prefix DESC
-                 ) AS rn
-          FROM nb JOIN rr
-            ON nb.host = rr.host AND starts_with(nb.path, rr.path_prefix)
-        ), g AS (
-          SELECT nb.doc_id, nb.host
-          FROM nb LEFT JOIN m ON m.doc_id = nb.doc_id AND m.rn = 1
-          WHERE coalesce(m.allow, true)
-        ), f AS (
-          SELECT g.doc_id, g.host, pr.rank_nano,
-                 row_number() OVER (
-                   PARTITION BY g.host
-                   ORDER BY pr.rank_nano DESC, g.doc_id ASC
-                 ) AS rnk
-          FROM g JOIN pr ON pr.node = g.doc_id
-        )
-        SELECT doc_id, host, rank_nano, CAST(rnk AS BIGINT) AS rank
-        FROM f WHERE rnk <= 2
-    """
-    d["html_anchor_signals"] = """
-        WITH p AS (
-          SELECT doc_id,
-                 '<p>x</p><a href="/doc/' || (doc_id + 11)
-                 || '">next ' || (doc_id % 5)
-                 || '</a><a href="/doc/' || ((doc_id % 7) * 3)
-                 || '" rel="nofollow">hub ' || (doc_id % 3)
-                 || '</a>' AS html
-          FROM documents
-        ), t AS (
-          SELECT doc_id AS src,
-                 unnest(regexp_extract_all(
-                   html, '<a\\b[^>]*\\bhref="[^"]*"[^>]*>[^<]*</a>', 0))
-                   AS tag
-          FROM p
-        )
-        SELECT CAST(regexp_extract(
-                 regexp_extract(tag, 'href="([^"]*)"', 1),
-                 '/doc/([0-9]+)', 1) AS BIGINT) AS target,
-               CAST(count(*) AS BIGINT) AS n_anchors,
-               array_to_string(list_sort(list_distinct(
-                 list(regexp_extract(tag, '>([^<]*)</a>', 1)))), '|')
-                 AS anchors
-        FROM t GROUP BY 1
-    """
-    d["dedup_incremental"] = """
-        WITH f AS (
-          SELECT doc_id, md5(text) AS fp FROM documents
-        ), h AS (
-          SELECT fp FROM f WHERE doc_id % 4 <> 3
-        ), b AS (
-          SELECT d.doc_id, f.fp
-          FROM documents d
-          JOIN f ON f.doc_id = CASE WHEN d.doc_id % 8 = 3
-                                    THEN d.doc_id - 1
-                                    ELSE d.doc_id END
-          WHERE d.doc_id % 4 = 3
-        )
-        SELECT b.doc_id, b.fp,
-               NOT EXISTS (SELECT 1 FROM h WHERE h.fp = b.fp) AS is_new
-        FROM b
-    """
-    # The funnel oracle composes four signal oracles as CTEs (nested
-    # WITH inside a parenthesized CTE body is legal DuckDB), so its
-    # exactness is inherited from theirs. Thresholds mirror
-    # operators/curate.curation_funnel defaults.
-    d["curation_funnel"] = f"""
-        WITH q AS ({d["text_quality_score"]}),
-             r AS ({d["text_repetition"]}),
-             e AS ({d["text_char_entropy"]}),
-             t AS ({d["text_token_count"]})
-        SELECT q.doc_id, q.quality, r.dup_word_frac, e.entropy_micro,
-               CAST(t.n_tokens AS BIGINT) AS n_tokens,
-               CASE
-                 WHEN q.quality < 0.40 THEN 'quality'
-                 WHEN r.dup_word_frac > 0.93 THEN 'repetition'
-                 WHEN e.entropy_micro < 2600000 THEN 'entropy'
-                 WHEN t.n_tokens < 10 OR t.n_tokens > 90 THEN 'length'
-                 ELSE 'keep'
-               END AS verdict
-        FROM q JOIN r USING (doc_id) JOIN e USING (doc_id)
-               JOIN t USING (doc_id)
-    """
-    # Batch twin of the streaming replay: the Spark side pushes every doc
-    # through readStream micro-batches + snapshot-store MERGE before the
-    # fold; the oracle folds documents directly. Equality proves the
-    # stream neither dropped, duplicated, nor double-merged any doc.
-    d["stream_replay_equals_batch"] = r"""
-        WITH stats AS (
-          SELECT doc_id,
-                 CASE WHEN length(trim(text)) = 0 THEN 0
-                      ELSE len(string_split_regex(trim(text), '\s+'))
-                 END AS n_tokens,
-                 length(text) AS n_chars
-          FROM documents
-        )
-        SELECT CASE WHEN n_tokens < 50 THEN 'short'
-                    WHEN n_tokens < 200 THEN 'medium'
-                    ELSE 'long' END AS len_class,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens,
-               CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-        FROM stats
-        GROUP BY 1
-    """
-    return d
-
-
-def _oracle_sql_base() -> dict[str, str]:
     # lazy, like every per-query import in this module: it keeps
     # importing __spark_entry__ itself (and with it queries() and every
     # Spark-side query) independent of the urls helper. A urls defect
@@ -3553,13 +3210,7 @@ def _oracle_sql_base() -> dict[str, str]:
                      AS n_bpe_tokens
             FROM documents
         """,
-        "text_token_count": r"""
-            SELECT doc_id,
-                   CASE WHEN length(trim(text)) = 0 THEN 0
-                        ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
-                   n_chars
-            FROM documents
-        """,
+        "text_token_count": _TOKEN_COUNT_ORACLE,
         "text_quality_score": _QUALITY_SELECT,
         "text_lang_id": rf"""
             SELECT doc_id,
@@ -3616,42 +3267,7 @@ def _oracle_sql_base() -> dict[str, str]:
         # Same word split, same two signals; the top bigram ties break to
         # (count DESC, bigram ASC) on both engines; fractions land on the
         # floor(x*1e6+0.5)/1e6 grid (BASELINE.md rounding note).
-        "text_repetition": r"""
-            WITH w AS (
-              SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-              FROM documents
-            ), wc AS (
-              SELECT doc_id, word, count(*) AS cnt
-              FROM (SELECT doc_id, unnest(w) AS word FROM w)
-              GROUP BY 1, 2
-            ), dup AS (
-              SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_words,
-                     floor((sum(CASE WHEN cnt > 1 THEN cnt ELSE 0 END)
-                            * 1.0 / sum(cnt)) * 1000000 + 0.5) / 1000000
-                       AS dup_word_frac
-              FROM wc GROUP BY 1
-            ), bgc AS (
-              SELECT doc_id, bigram, count(*) AS cnt
-              FROM (
-                SELECT doc_id, w[i] || ' ' || w[i+1] AS bigram
-                FROM w, UNNEST(generate_series(1, len(w) - 1)) AS s(i)
-                WHERE len(w) >= 2
-              ) GROUP BY 1, 2
-            ), top AS (
-              SELECT doc_id, bigram, cnt,
-                     sum(cnt) OVER (PARTITION BY doc_id) AS n_bigrams,
-                     row_number() OVER (
-                       PARTITION BY doc_id ORDER BY cnt DESC, bigram ASC
-                     ) AS rn
-              FROM bgc
-            )
-            SELECT d.doc_id, d.n_words, d.dup_word_frac,
-                   t.bigram AS top_bigram,
-                   floor((t.cnt * 1.0 / t.n_bigrams) * 1000000 + 0.5)
-                     / 1000000 AS top_bigram_frac
-            FROM dup d LEFT JOIN top t
-              ON d.doc_id = t.doc_id AND t.rn = 1
-        """,
+        "text_repetition": _REPETITION_ORACLE,
         "dedup_exact": r"""
             WITH doubled AS (
               SELECT * FROM documents UNION ALL SELECT * FROM documents
@@ -3742,7 +3358,6 @@ def _oracle_sql_base() -> dict[str, str]:
             FROM e
         """,
         "dedup_minhash_lsh": _minhash_lsh_oracle(),
-        "dedup_components": _dedup_components_oracle(iters=2),
         "dedup_components_bigstar": _bigstar_components_oracle(),
         "dedup_cluster_keep_best": f"""
             WITH comp AS ({_bigstar_components_oracle()}
@@ -4175,26 +3790,7 @@ def _oracle_sql_base() -> dict[str, str]:
                      AS est_value
             FROM cand WHERE rn = 1
         """,
-        "text_char_entropy": """
-            WITH ch AS (
-              SELECT doc_id, unnest(string_split(text, '')) AS ch
-              FROM documents
-            ), f AS (
-              SELECT doc_id, ch, count(*) AS c
-              FROM ch WHERE ch <> '' GROUP BY doc_id, ch
-            ), per AS (
-              SELECT doc_id,
-                     CAST(sum(c) AS BIGINT) AS n_chars_counted,
-                     CAST(sum(CAST(floor(c * ln(c) * 1000000 + 0.5)
-                                   AS BIGINT)) AS BIGINT) AS t
-              FROM f GROUP BY doc_id
-            )
-            SELECT doc_id, n_chars_counted,
-                   CAST(floor(ln(n_chars_counted) * 1000000 + 0.5)
-                        AS BIGINT)
-                   - t // n_chars_counted AS entropy_micro
-            FROM per
-        """,
+        "text_char_entropy": _CHAR_ENTROPY_ORACLE,
         "sample_mixture": """
             WITH f AS (
               SELECT source, count(*) AS f FROM documents GROUP BY source
@@ -4232,5 +3828,258 @@ def _oracle_sql_base() -> dict[str, str]:
                      ) AS pos
               FROM customer
             ) WHERE pos <= 100
+        """,
+        # url_blocklist: the oracle spells the generic suffix rule out
+        # per-entry (exact OR dot-suffix LIKE) over the same synth hosts;
+        # h14.example.com proves the dot boundary.
+        "curate_url_blocklist": """
+            WITH u AS (
+              SELECT doc_id,
+                     CASE WHEN doc_id % 5 = 0
+                          THEN 'm' || (doc_id // 20) || '.ads.net'
+                          ELSE 'h' || (doc_id // 20) || '.example.com'
+                     END AS host
+              FROM documents
+            )
+            SELECT doc_id, host,
+                   (host = 'ads.net' OR host LIKE '%.ads.net'
+                    OR host = 'h1.example.com'
+                    OR host = 'h4.example.com') AS blocked
+            FROM u
+        """,
+        "text_top_ngrams": """
+            WITH ws AS (
+              SELECT list_filter(
+                       string_split_regex(lower(text), '[^a-z0-9]+'),
+                       x -> x <> '') AS w
+              FROM documents
+            ), g AS (
+              SELECT ws.w[i] || ' ' || ws.w[i+1] AS ngram
+              FROM ws, UNNEST(generate_series(1, len(ws.w) - 1)) AS t(i)
+            ), c AS (
+              SELECT ngram, CAST(count(*) AS BIGINT) AS cnt
+              FROM g GROUP BY ngram
+            )
+            SELECT ngram, cnt FROM c ORDER BY cnt DESC, ngram ASC LIMIT 40
+        """,
+        "shard_assign_rank": """
+            WITH k AS (
+              SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS key
+              FROM documents
+            ), s AS (
+              SELECT doc_id, key,
+                     CAST(('0x' || substr(key, 1, 4)) AS BIGINT) % 16 AS shard
+              FROM k
+            )
+            SELECT doc_id, CAST(shard AS BIGINT) AS shard,
+                   CAST(row_number() OVER (
+                     PARTITION BY shard ORDER BY key, doc_id
+                   ) AS BIGINT) AS pos
+            FROM s
+        """,
+        "sample_weighted": f"""
+            WITH q AS ({_QUALITY_SELECT}),
+            w AS (
+              SELECT doc_id,
+                     CAST(floor(quality * 10000 + 0.5) AS BIGINT) + 1 AS w
+              FROM q
+            ), k AS (
+              SELECT doc_id, w,
+                     CAST(floor(
+                       (ln(CAST(('0x' ||
+                            substr(md5(CAST(doc_id AS VARCHAR)), 1, 13))
+                            AS BIGINT) + 1.0) - 52.0 * ln(2.0))
+                       / CAST(w AS DOUBLE) * 1e9 + 0.5) AS BIGINT) AS es_key
+              FROM w
+            )
+            SELECT doc_id, w, es_key FROM k
+            ORDER BY es_key DESC, doc_id ASC LIMIT 150
+        """,
+        "html_link_graph": """
+            WITH p AS (
+              SELECT doc_id,
+                     '<html><body><p>intro</p><a href="/doc/'
+                     || (doc_id + 11)
+                     || '">n</a><a href="https://h' || (doc_id % 20)
+                     || '.example.com/doc/' || (doc_id + 23)
+                     || '?utm_source=x">f</a><a href="/doc/'
+                     || ((doc_id % 7) * 3)
+                     || '">b</a></body></html>' AS html
+              FROM documents
+            ), l AS (
+              SELECT doc_id AS src,
+                     unnest(regexp_extract_all(
+                       html, '<a\\b[^>]*href="([^"]*)"', 1)) AS href
+              FROM p
+            )
+            SELECT CAST(regexp_extract(href, '/doc/([0-9]+)', 1) AS BIGINT)
+                     AS target,
+                   CAST(count(*) AS BIGINT) AS in_degree,
+                   CAST(count(DISTINCT src) AS BIGINT) AS n_srcs,
+                   min(src) AS min_src
+            FROM l GROUP BY 1
+        """,
+        "curate_robots_filter": """
+            WITH u AS (
+              SELECT doc_id, host,
+                     regexp_extract('https://' || host || '/p/' || doc_id,
+                       '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) AS path
+              FROM (SELECT doc_id,
+                           CASE WHEN doc_id % 5 = 0
+                                THEN 'm' || (doc_id // 20) || '.ads.net'
+                                ELSE 'h' || (doc_id // 20) || '.example.com'
+                           END AS host
+                    FROM documents)
+            ), r AS (
+              SELECT 'h' || k || '.example.com' AS host,
+                     v.pp AS path_prefix, v.al AS allow
+              FROM (SELECT DISTINCT doc_id // 20 AS k FROM documents) t,
+                   (VALUES ('/p/', false), ('/p/1', true)) AS v(pp, al)
+              WHERE k % 3 = 0
+            ), m AS (
+              SELECT u.doc_id, r.allow,
+                     row_number() OVER (
+                       PARTITION BY u.doc_id
+                       ORDER BY length(r.path_prefix) DESC, r.allow DESC,
+                                r.path_prefix DESC
+                     ) AS rn
+              FROM u JOIN r
+                ON u.host = r.host AND starts_with(u.path, r.path_prefix)
+            )
+            SELECT u.doc_id, u.host, u.path,
+                   coalesce(m.allow, true) AS allowed
+            FROM u LEFT JOIN m ON m.doc_id = u.doc_id AND m.rn = 1
+        """,
+        "crawl_frontier_rank": f"""
+            WITH pr AS ({_link_pagerank_oracle()}),
+            u AS (
+              SELECT doc_id, host,
+                     regexp_extract('https://' || host || '/p/' || doc_id,
+                       '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) AS path
+              FROM (SELECT doc_id,
+                           CASE WHEN doc_id % 5 = 0
+                                THEN 'm' || (doc_id // 20) || '.ads.net'
+                                ELSE 'h' || (doc_id // 20) || '.example.com'
+                           END AS host
+                    FROM documents)
+            ), nb AS (
+              SELECT * FROM u
+              WHERE NOT (host = 'ads.net' OR host LIKE '%.ads.net'
+                         OR host = 'h1.example.com'
+                         OR host = 'h4.example.com')
+            ), rr AS (
+              SELECT 'h' || k || '.example.com' AS host,
+                     v.pp AS path_prefix, v.al AS allow
+              FROM (SELECT DISTINCT doc_id // 20 AS k FROM documents) t,
+                   (VALUES ('/p/', false), ('/p/1', true)) AS v(pp, al)
+              WHERE k % 3 = 0
+            ), m AS (
+              SELECT nb.doc_id, rr.allow,
+                     row_number() OVER (
+                       PARTITION BY nb.doc_id
+                       ORDER BY length(rr.path_prefix) DESC, rr.allow DESC,
+                                rr.path_prefix DESC
+                     ) AS rn
+              FROM nb JOIN rr
+                ON nb.host = rr.host AND starts_with(nb.path, rr.path_prefix)
+            ), g AS (
+              SELECT nb.doc_id, nb.host
+              FROM nb LEFT JOIN m ON m.doc_id = nb.doc_id AND m.rn = 1
+              WHERE coalesce(m.allow, true)
+            ), f AS (
+              SELECT g.doc_id, g.host, pr.rank_nano,
+                     row_number() OVER (
+                       PARTITION BY g.host
+                       ORDER BY pr.rank_nano DESC, g.doc_id ASC
+                     ) AS rnk
+              FROM g JOIN pr ON pr.node = g.doc_id
+            )
+            SELECT doc_id, host, rank_nano, CAST(rnk AS BIGINT) AS rank
+            FROM f WHERE rnk <= 2
+        """,
+        "html_anchor_signals": """
+            WITH p AS (
+              SELECT doc_id,
+                     '<p>x</p><a href="/doc/' || (doc_id + 11)
+                     || '">next ' || (doc_id % 5)
+                     || '</a><a href="/doc/' || ((doc_id % 7) * 3)
+                     || '" rel="nofollow">hub ' || (doc_id % 3)
+                     || '</a>' AS html
+              FROM documents
+            ), t AS (
+              SELECT doc_id AS src,
+                     unnest(regexp_extract_all(
+                       html, '<a\\b[^>]*\\bhref="[^"]*"[^>]*>[^<]*</a>', 0))
+                       AS tag
+              FROM p
+            )
+            SELECT CAST(regexp_extract(
+                     regexp_extract(tag, 'href="([^"]*)"', 1),
+                     '/doc/([0-9]+)', 1) AS BIGINT) AS target,
+                   CAST(count(*) AS BIGINT) AS n_anchors,
+                   array_to_string(list_sort(list_distinct(
+                     list(regexp_extract(tag, '>([^<]*)</a>', 1)))), '|')
+                     AS anchors
+            FROM t GROUP BY 1
+        """,
+        "dedup_incremental": """
+            WITH f AS (
+              SELECT doc_id, md5(text) AS fp FROM documents
+            ), h AS (
+              SELECT fp FROM f WHERE doc_id % 4 <> 3
+            ), b AS (
+              SELECT d.doc_id, f.fp
+              FROM documents d
+              JOIN f ON f.doc_id = CASE WHEN d.doc_id % 8 = 3
+                                        THEN d.doc_id - 1
+                                        ELSE d.doc_id END
+              WHERE d.doc_id % 4 = 3
+            )
+            SELECT b.doc_id, b.fp,
+                   NOT EXISTS (SELECT 1 FROM h WHERE h.fp = b.fp) AS is_new
+            FROM b
+        """,
+        # The funnel oracle composes four signal oracles as CTEs (nested
+        # WITH inside a parenthesized CTE body is legal DuckDB), so its
+        # exactness is inherited from theirs. Thresholds mirror
+        # operators/curate.curation_funnel defaults.
+        "curation_funnel": f"""
+            WITH q AS ({_QUALITY_SELECT}),
+                 r AS ({_REPETITION_ORACLE}),
+                 e AS ({_CHAR_ENTROPY_ORACLE}),
+                 t AS ({_TOKEN_COUNT_ORACLE})
+            SELECT q.doc_id, q.quality, r.dup_word_frac, e.entropy_micro,
+                   CAST(t.n_tokens AS BIGINT) AS n_tokens,
+                   CASE
+                     WHEN q.quality < 0.40 THEN 'quality'
+                     WHEN r.dup_word_frac > 0.93 THEN 'repetition'
+                     WHEN e.entropy_micro < 2600000 THEN 'entropy'
+                     WHEN t.n_tokens < 10 OR t.n_tokens > 90 THEN 'length'
+                     ELSE 'keep'
+                   END AS verdict
+            FROM q JOIN r USING (doc_id) JOIN e USING (doc_id)
+                   JOIN t USING (doc_id)
+        """,
+        # Batch twin of the streaming replay: the Spark side pushes every doc
+        # through readStream micro-batches + snapshot-store MERGE before the
+        # fold; the oracle folds documents directly. Equality proves the
+        # stream neither dropped, duplicated, nor double-merged any doc.
+        "stream_replay_equals_batch": r"""
+            WITH stats AS (
+              SELECT doc_id,
+                     CASE WHEN length(trim(text)) = 0 THEN 0
+                          ELSE len(string_split_regex(trim(text), '\s+'))
+                     END AS n_tokens,
+                     length(text) AS n_chars
+              FROM documents
+            )
+            SELECT CASE WHEN n_tokens < 50 THEN 'short'
+                        WHEN n_tokens < 200 THEN 'medium'
+                        ELSE 'long' END AS len_class,
+                   CAST(COUNT(*) AS BIGINT) AS n_docs,
+                   CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens,
+                   CAST(SUM(n_chars) AS BIGINT) AS sum_chars
+            FROM stats
+            GROUP BY 1
         """,
     }

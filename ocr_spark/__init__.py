@@ -1,7 +1,7 @@
 """ocr_spark — a PySpark-native document-extraction analytics engine.
 
 A from-scratch re-expression of the capabilities of the reference OCR
-pipeline (dimaslanjaka/ocr, studied read-only at /root/reference) as a
+pipeline (dimaslanjaka/ocr, studied read-only) as a
 single declarative Spark job over tables of interleaved text + media
 documents:
 

@@ -18,7 +18,7 @@ ground_text (the renderer/recognizer pair in fonts.py is exactly
 invertible). Expected codes run the tiny inspectable voucher oracle
 (functions/voucher_core.py) over the in-order extracted texts, mirroring
 the reference pipeline order OCR text -> lines -> codes
-(/root/reference/src/ocr/cli.js:21-27, src/ocr/ocrQueue.js:45-61).
+(reference src/ocr/cli.js:21-27, src/ocr/ocrQueue.js:45-61).
 
 Corpus knobs follow FIXTURES.md: ~60/40 text/media span mix, ~2%
 media-heavy skew documents (32-128 media spans), edge documents (empty

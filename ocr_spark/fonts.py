@@ -7,7 +7,7 @@ north-rule span-sequence-equality gate is a strict equality test
 recognizer (ocr_spark.operators.ocr) recovers it bit-exactly via
 binarize -> row-projection line segmentation -> fixed-pitch template
 classification — the same binarize/segment/classify vocabulary the
-reference uses (cf. /root/reference/src/ocr/focus_impl.py:21-51,
+reference uses (cf. reference src/ocr/focus_impl.py:21-51,
 image_utils.py:123-235), with a deterministic classifier standing in for
 the Tesseract LSTM.
 

@@ -7,7 +7,7 @@ keep only content blocks. The reference repo consumes OCR text rather than
 HTML, so this operator's *spec* comes from the north rule's
 "HTML boilerplate strip, DOM heuristics" requirement; its line-oriented
 output discipline mirrors the reference's ordered line pipeline
-(/root/reference/src/ocr/cli.js:21-27 split-trim-filter).
+(reference src/ocr/cli.js:21-27 split-trim-filter).
 
 The rules (deterministic, shared verbatim by the data generator's oracle
 and re-implemented vectorized in operators/boilerplate.py):

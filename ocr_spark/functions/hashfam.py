@@ -18,7 +18,7 @@ row (50 s at sf0.1); here each shingle is md5-hashed ONCE and the 64
 signature lanes are two integer ops each, all inside whole-stage codegen.
 
 Reference parity: the reference keys caches by md5 of content
-(/root/reference/src/ocr/utils/cache.py:15, ocr.share.js:33); md5 as the
+(reference src/ocr/utils/cache.py:15, ocr.share.js:33); md5 as the
 canonical cross-engine hash keeps that convention.
 """
 

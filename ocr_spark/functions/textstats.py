@@ -6,7 +6,7 @@ twin used as the DuckDB oracle in __spark_entry__.py (note: DuckDB's
 regexp_replace needs the 'g' flag to match Spark's replace-all default).
 
 These extend the reference's text pipeline (ordered line split + regex
-extraction, /root/reference/src/ocr/cli.js:21-27) with the analysis ops a
+extraction, reference src/ocr/cli.js:21-27) with the analysis ops a
 100 TB corpus pipeline needs for filtering/curation.
 """
 
@@ -88,7 +88,7 @@ def lang_id(text: Column | str) -> Column:
 def fingerprint(text: Column | str) -> Column:
     """Whitespace-normalized lowercase md5 — stable doc fingerprint for
     exact dedup (mirrors the reference's md5 content keys,
-    /root/reference/src/database/jsonDb.py:21-27)."""
+    reference src/database/jsonDb.py:21-27)."""
     return F.md5(F.regexp_replace(F.lower(F.trim(text)), WS_SPLIT, " "))
 
 

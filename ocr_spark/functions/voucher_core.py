@@ -1,7 +1,7 @@
 """Pure-Python voucher-extraction semantics (the correctness oracle).
 
 Re-implements, from observed behavior, the reference's code-extraction
-pipeline (studied at /root/reference/src/shared/extractVoucherCodes.js:10-27
+pipeline (studied at reference src/shared/extractVoucherCodes.js:10-27
 and src/database/VoucherDatabase.py:39-70):
 
   1. scan text with the voucher regex \\b\\d{4}\\s*\\d{4}\\s*\\d{4}\\s*\\d{4}\\b

@@ -1,7 +1,7 @@
 """Voucher-code extraction as pure Catalyst column expressions.
 
 Independent Spark re-expression of the semantics in voucher_core.py
-(reference behavior: /root/reference/src/shared/extractVoucherCodes.js:10-27,
+(reference behavior: reference src/shared/extractVoucherCodes.js:10-27,
 src/database/VoucherDatabase.py:39-70). Everything stays JVM-side inside
 whole-stage codegen — regexp_extract_all, transform, filter, array_distinct
 — no Python in the hot path.

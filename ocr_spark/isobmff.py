@@ -1,7 +1,7 @@
 """From-scratch ISOBMFF/HEIF container codec (AVIF's wrapper format).
 
 The reference accepts AVIF inputs and canonicalizes them through an
-image decode before OCR (/root/reference/src/ocr/cli.py:100-112 imageio
+image decode before OCR (reference src/ocr/cli.py:100-112 imageio
 fallback; test fixture test/fixtures/noise.avif). AVIF is an AV1
 payload inside an ISOBMFF/HEIF container (ISO/IEC 14496-12 boxes,
 ISO/IEC 23008-12 image items). This module implements that container

@@ -3,7 +3,7 @@
 PNG closed the "real corpus arrives encoded" gap for lossless inputs
 (png_codec.py); JPEG is the other format every real crawl is full of.
 The reference canonicalizes arbitrary encoded inputs (JPEG included)
-through its decode step before OCR (/root/reference/src/ocr/cli.py:
+through its decode step before OCR (reference src/ocr/cli.py:
 100-112 — PIL opens any format; sharp likewise in the Node path). This
 module implements the decode for baseline JPEG — and the matching
 encoder so the synthetic corpus can ship real JPEG payloads — from the

@@ -29,7 +29,7 @@ def strip_boilerplate_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     # iterator form: one-time per-worker setup would go here (none needed —
     # the regexes in boilerplate_core are compiled at import, once per
     # Python worker, mirroring the reference's shared-worker pattern at
-    # /root/reference/src/ocr/tesseract.js:13-29).
+    # reference src/ocr/tesseract.js:13-29).
     for series in batches:
         yield series.map(strip_boilerplate, na_action="ignore").fillna("")
 

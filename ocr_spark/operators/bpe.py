@@ -30,9 +30,9 @@ without cross-symbol false matches (``a ab c`` never matches pair
 ``b c``). That makes the whole training loop value-checkable by an
 unrolled SQL oracle (the trained-IVF device).
 
-Iterative-lineage discipline per the neardup_components lesson: each
-round's vocab is persisted and materialized before the parent is
-released.
+Iterative-lineage discipline: each round's vocab is persisted and
+materialized before the parent is released, because an unpersisted loop
+re-derives every earlier round (exponential recompute).
 """
 
 from __future__ import annotations

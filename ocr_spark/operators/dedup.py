@@ -377,118 +377,6 @@ def simhash_neardup_pairs(
     )
 
 
-def neardup_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    iters: int = 4,
-    check_converged: bool = True,
-) -> DataFrame:
-    """Connected components of the near-dup pair graph: the bridge from
-    candidate PAIRS (minhash_lsh_candidates / simhash_neardup_pairs /
-    similarity.lsh_neardup_pairs) to duplicate CLUSTERS, so curation can
-    keep one representative per component instead of per pair (the
-    reference dedups whole duplicate groups, not edges — cf. its
-    first-occurrence discipline, /root/reference/src/ocr/cli.js:21-27).
-
-    Hash-min label propagation with a FIXED iteration count: every vertex
-    starts labeled with itself; each round every vertex takes the min
-    label over itself and its neighbors. After k rounds a vertex holds
-    the min id within its k-hop neighborhood, so components converge once
-    iters >= graph diameter. Near-dup components are band-collision
-    near-cliques (diameter 1-2 in practice); `iters` defaults to 4 for
-    slack, and `check_converged` (DEFAULT ON — the extra round is one
-    cheap join; a caller must opt OUT of the protection, never silently
-    miss it) runs one extra round and raises if any label would still
-    move — turning a too-small `iters` into a loud error instead of a
-    silent under-merge.
-
-    The fixed iteration count is what makes the op SQL-oracle-able (the
-    DuckDB twin unrolls the same k join+group rounds). For adversarial
-    long-chain graphs at cluster scale (templated-spam near-dup chains
-    whose diameter exceeds any fixed `iters`), use `bigstar_components`
-    below — the O(log n)-round large-star/small-star variant behind the
-    same (pairs) -> (doc_id, component_id) contract. The per-round shape
-    here is already the scale-safe one — one shuffle join of edges to
-    labels on the vertex id plus one min-aggregate, no driver-side state,
-    labels never wider than one id.
-
-    Returns (doc_id, component_id): one row per vertex that appears in
-    `pairs`, component_id = min doc id of its component. Isolated docs
-    (no pairs) are by construction absent; callers wanting a total
-    assignment coalesce with the identity on the doc table.
-    """
-    # Iterative-lineage discipline: every round references `edges` once
-    # and `lab` twice, so without caching the logical plan re-derives
-    # the (expensive) pair pipeline per round and the lab subtree
-    # doubles each round — exponential recompute. Persist the edge set
-    # once and each round's labels; materialize the final labels, then
-    # drop only the intermediates (the returned frame stays cached so
-    # consuming it is a cache read, not a chain replay).
-    # `half` feeds both directions of the symmetric union — persist it so
-    # an expensive upstream pair pipeline (minhash/simhash) runs once,
-    # not twice.
-    half = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    ).persist()
-    edges = half.union(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().persist()
-    lab = edges.select(F.col("src").alias("id")).distinct().select(
-        "id", F.col("id").alias("label")
-    )
-
-    def _round(lab: DataFrame) -> DataFrame:
-        msgs = edges.join(
-            lab.withColumnRenamed("id", "src"), "src"
-        ).select(F.col("dst").alias("id"), "label")
-        return msgs.union(lab).groupBy("id").agg(
-            F.min("label").alias("label")
-        )
-
-    # checkpoint_truncate per round (localCheckpoint by default,
-    # reliable checkpoint when the session sets a checkpoint dir — see
-    # session.py for the fault-tolerance trade), not persist: each
-    # round references `lab`
-    # twice (join + union), so the LOGICAL plan doubles per round — at
-    # iters~12 the 2^12-node tree OOMs the planner's own toString before
-    # any data moves. Checkpointing truncates the plan each round;
-    # persist alone only truncates recompute.
-    steps = []
-    for _ in range(iters):
-        lab = checkpoint_truncate(_round(lab))
-        steps.append(lab)
-    try:
-        if check_converged:
-            moved = (
-                _round(lab)
-                .withColumnRenamed("label", "next_label")
-                .join(lab, "id")
-                .filter(F.col("next_label") != F.col("label"))
-                .count()
-            )
-            if moved:
-                raise ValueError(
-                    f"neardup_components: {moved} labels still moving "
-                    f"after {iters} iterations — raise `iters` "
-                    f"(graph diameter exceeds it)"
-                )
-        return lab.select(
-            F.col("id").alias("doc_id"),
-            F.col("label").alias("component_id"),
-        )
-    finally:
-        # `half`/`edges` are CacheManager persists — unpersist releases
-        # them now. The per-round `steps` are localCheckpoint frames:
-        # Dataset.unpersist is a NO-OP for those (their blocks were
-        # never registered with the CacheManager); they release via the
-        # ContextCleaner once this scope's references drop and a GC
-        # runs. The returned final step stays referenced by the
-        # caller's plan, so it survives exactly as long as the result.
-        half.unpersist(blocking=False)
-        edges.unpersist(blocking=False)
-
-
 def _bigstar_edges(
     pairs: DataFrame, id_a: str, id_b: str, max_rounds: int,
 ) -> tuple[DataFrame, int]:
@@ -603,16 +491,18 @@ def bigstar_components(
 ) -> DataFrame:
     """Connected components in O(log n) rounds: the large-star/small-star
     alternation (Kiveris et al. 2014, "Connected Components in MapReduce
-    and Beyond"), behind the same (pairs) -> (doc_id, component_id)
-    contract as `neardup_components`.
+    and Beyond"): the bridge from candidate PAIRS (minhash_lsh_candidates
+    / simhash_neardup_pairs / similarity.lsh_neardup_pairs) to duplicate
+    CLUSTERS, so curation can keep one representative per component
+    instead of per pair.
 
-    This is the production variant for graphs whose diameter no fixed
-    iteration count covers — adversarial near-dup CHAINS (templated spam
-    where doc i pairs only with doc i+1) at corpus scale. Hash-min
-    propagation needs diameter rounds; the star alternation converges in
-    O(log^2 n) rounds worst-case (the paper's bound) and ~log2(n) rounds
-    on chains in practice, because large-star halves every path to the
-    component minimum and small-star flattens the resulting trees.
+    It covers graphs whose diameter no fixed iteration count covers —
+    adversarial near-dup CHAINS (templated spam where doc i pairs only
+    with doc i+1) at corpus scale. Hash-min label propagation needs
+    diameter rounds; the star alternation converges in O(log^2 n) rounds
+    worst-case (the paper's bound) and ~log2(n) rounds on chains in
+    practice, because large-star halves every path to the component
+    minimum and small-star flattens the resulting trees.
 
     Per-round cost: two groupBy shuffles over the current edge set plus
     one count+hash signature agg for convergence — no driver-side state,
@@ -621,10 +511,9 @@ def bigstar_components(
     minimal). `max_rounds=50` is a runaway backstop (2^50 vertices), not
     a tuning knob — hitting it raises loudly.
 
-    The fixed-round `neardup_components` stays the SQL-oracle-able twin
-    (its DuckDB oracle unrolls k join+min rounds; an until-fixpoint loop
-    is not expressible as one ANSI query) — tests pin that both produce
-    identical components on the same pair sets.
+    Because the loop runs to a fixpoint, the result is the exact
+    component minimum: its DuckDB oracle is a recursive-CTE reachability
+    minimum, and tests check it against a pure-Python union-find.
 
     Fault tolerance: per-round lineage truncation defaults to
     localCheckpoint (executor-local blocks — an executor loss mid-query
@@ -633,8 +522,8 @@ def bigstar_components(
     see session.checkpoint_truncate for the trade.
 
     Returns (doc_id, component_id), component_id = min doc id of the
-    component; vertices absent from `pairs` are absent (same contract as
-    neardup_components).
+    component. Vertices absent from `pairs` are absent; callers wanting
+    a total assignment coalesce with the identity on the doc table.
     """
     edges, _ = _bigstar_edges(pairs, id_a, id_b, max_rounds)
     roots = edges.select(F.col("b").alias("doc_id")).distinct().select(
@@ -906,7 +795,7 @@ def cluster_keep_best(
 
     Inputs: `scored` = (id, score) for EVERY document (score must be an
     integer grid — no float comparisons); `labels` = (doc_id,
-    component_id) from `neardup_components`/`bigstar_components`, which
+    component_id) from `bigstar_components`, which
     only covers documents that appear in the pair graph. Unpaired
     documents become singleton clusters of themselves.
 
@@ -967,7 +856,7 @@ def dedup_lines(
     footers, cookie banners and navigation chrome collapse to one copy
     corpus-wide). First = lowest (id, position), the same
     first-occurrence discipline as the reference's dedup
-    (/root/reference/src/ocr/cli.js:21-27), applied per line instead of
+    (reference src/ocr/cli.js:21-27), applied per line instead of
     per code.
 
     Returns (id, n_lines_before, n_removed, cleaned_text) with

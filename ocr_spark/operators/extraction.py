@@ -17,7 +17,7 @@ DataFrame API so Catalyst owns the physical plan:
                                                    #   shuffle-order luck
 
 Replaces the reference's four-boundary imperative flow (HTTP -> Redis ->
-child process -> worker thread; /root/reference/src/ocr/ocrQueue.js:40-66,
+child process -> worker thread; reference src/ocr/ocrQueue.js:40-66,
 src/ocr/cli.js:12-29) with one declarative plan whose only wide exchanges
 are the media-ref dedup/join and the final per-document reassembly.
 
@@ -27,10 +27,6 @@ Scale design (100 TB / 10^12 docs):
   * Media-heavy skew documents (FIXTURES.md: 2% docs with 32-128 media
     spans) do not skew OCR (per-blob, deduped) and reassembly skew is
     bounded by max spans/doc; AQE skew-join handles hot media_refs.
-  * `repartition_spans` salts the span stream before the UDF stage when a
-    corpus has pathological doc-size skew, trading one extra exchange for
-    even UDF work — opt-in, measured, off by default because the UDFs run
-    map-side in the scan stage otherwise.
 """
 
 from __future__ import annotations
@@ -60,28 +56,14 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     )
 
 
-def repartition_spans(spans: DataFrame, salt_buckets: int = 0) -> DataFrame:
-    """Optional salted repartition to even out media-heavy document skew."""
-    if salt_buckets <= 0:
-        return spans
-    return spans.repartition(
-        F.pmod(
-            F.hash("doc_id", F.pmod(F.coalesce("offset", F.lit(0)),
-                                    F.lit(salt_buckets))),
-            F.lit(spans.sparkSession.sparkContext.defaultParallelism * 4),
-        )
-    )
-
-
 def extract_spans(
-    docs: DataFrame, blobs: DataFrame, salt_buckets: int = 0,
-    broadcast_ok: bool = True,
+    docs: DataFrame, blobs: DataFrame, broadcast_ok: bool = True,
 ) -> DataFrame:
     """Per-span extraction: (doc_id, offset, kind, text, media_ref).
 
     text = stripped main content for text spans, recognized text for media
     spans ('' for unresolvable refs — mirrors the reference's empty-OCR
-    fallback, /root/reference/src/ocr/focus_pytesseract.py:49-55).
+    fallback, reference src/ocr/focus_pytesseract.py:49-55).
 
     broadcast_ok: whether the distinct-ref set and the recognized
     (media_ref, text) relation fit a broadcast. The in-row mode's budget
@@ -103,7 +85,7 @@ def extract_spans(
         ref strings and short recognized text cross exchanges; unreferenced
         blobs simply don't match the left join, so results are identical.
     """
-    spans = repartition_spans(explode_spans(docs), salt_buckets)
+    spans = explode_spans(docs)
 
     text_spans = spans.filter(F.col("kind") == "text").select(
         "doc_id", "offset", "kind",
@@ -191,10 +173,7 @@ def reassemble(extracted: DataFrame, all_doc_ids: DataFrame) -> DataFrame:
 
 
 def run_extraction(
-    docs: DataFrame, blobs: DataFrame, salt_buckets: int = 0,
-    broadcast_ok: bool = True,
+    docs: DataFrame, blobs: DataFrame, broadcast_ok: bool = True,
 ) -> DataFrame:
     """documents_interleaved + media_blobs -> expected_spans-shaped result."""
-    extracted = extract_spans(
-        docs, blobs, salt_buckets=salt_buckets, broadcast_ok=broadcast_ok)
-    return reassemble(extracted, docs)
+    return reassemble(extract_spans(docs, blobs, broadcast_ok), docs)

@@ -26,7 +26,7 @@ where recognized text outgrows a broadcast, fall back to
 operators/extraction.py (same results — tests assert equality of both
 modes), or partition media refs into broadcastable generations.
 
-Replaces the reference's per-image imperative flow (/root/reference/
+Replaces the reference's per-image imperative flow (reference
 src/ocr/ocrQueue.js:40-66 one-job-per-image; src/ocr/focus_pytesseract.py:
 56-77 in-order crop merge) with one declarative pass per document batch.
 """
@@ -169,12 +169,7 @@ MAX_BROADCAST_REFS = 2_000_000
 MAX_BROADCAST_EST_BYTES = 512 << 20
 
 
-def run_extraction_inrow(
-    docs: DataFrame,
-    blobs: DataFrame,
-    max_refs: int = MAX_BROADCAST_REFS,
-    max_est_bytes: int = MAX_BROADCAST_EST_BYTES,
-) -> DataFrame:
+def run_extraction_inrow(docs: DataFrame, blobs: DataFrame) -> DataFrame:
     """documents_interleaved + media_blobs -> (doc_id, out_spans, codes).
 
     Same contract and results as run_extraction; shuffle-free on the doc
@@ -200,7 +195,8 @@ def run_extraction_inrow(
             F.sum(F.col("width").cast("long") * F.col("height")).alias("px"),
         ).first()
         est_bytes = (stats["px"] or 0) // 60  # >= chars upper bound per cell
-        if stats["n_refs"] > max_refs or est_bytes > max_est_bytes:
+        if (stats["n_refs"] > MAX_BROADCAST_REFS
+                or est_bytes > MAX_BROADCAST_EST_BYTES):
             # Cold-media fallback: the same batch that overflows the
             # driver broadcast here would also overflow a forced
             # F.broadcast in shuffle mode — thread the verdict through so

@@ -57,9 +57,8 @@ def pagerank(
     broadcast-or-shuffle join of the (n_nodes)-row rank table against
     the co-located edges. Ranks/degrees are node-sized (tiny relative to
     edges); dangling mass is one scalar aggregate per round. Each
-    round's rank table is persisted and the previous round unpersisted —
-    the iterative-lineage lesson from neardup_components (unpersisted
-    loops recompute exponentially).
+    round's rank table is persisted and the previous round unpersisted,
+    because unpersisted loops recompute exponentially.
 
     Lifecycle contract: the RETURNED frame is the final round's
     persisted table (releasing it before return would re-run the whole

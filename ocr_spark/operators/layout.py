@@ -18,7 +18,7 @@ column-major: (column, y0, x0, block id).
 
 One level of cutting is the newspaper/two-column-paper case the
 reference's page crops model (its quarters/halves vocabulary,
-/root/reference/src/ocr/tesseract.js:131-183, is a fixed two-cut grid);
+reference src/ocr/tesseract.js:131-183, is a fixed two-cut grid);
 deeper nesting = re-apply `reading_order` within a column's blocks.
 
 Scale shape: everything is Catalyst window functions over ONE hash

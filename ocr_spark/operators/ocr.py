@@ -4,7 +4,7 @@ Tesseract-style recognition re-expressed for Spark (north rule): per blob,
 binarize -> fixed-geometry line segmentation -> template character
 classification. The recognizer is a per-executor lazy singleton built once
 per Python worker process (iterator mapInPandas), mirroring the reference's
-shared Tesseract worker lifecycle (/root/reference/src/ocr/tesseract.js:13-47:
+shared Tesseract worker lifecycle (reference src/ocr/tesseract.js:13-47:
 init once, reuse across jobs, terminate at shutdown) — the canonical Spark
 pattern for amortizing heavy model init.
 
@@ -125,7 +125,7 @@ class _Recognizer:
 
     def _best_grid(self, binary: np.ndarray):
         """Upright gate + corrective rotate fused with classification
-        (reference skew pipeline, /root/reference/src/ocr/
+        (reference skew pipeline, reference src/ocr/
         focus_pytesseract.py:36-48): try 0/90/180/270, keep the grid with
         the best template alignment; upright renders score 0 on the first
         candidate so the common case classifies ONCE. Returns
@@ -233,7 +233,7 @@ def _line_spans(recognizer: "_Recognizer", pixels: bytes, height: int,
     """Per-line OCR spans with bbox + confidence + section.
 
     Mirrors the reference's EasyOCR record shape `{bbox: [[x,y]x4],
-    text, confidence, section}` (/root/reference/src/ocr/
+    text, confidence, section}` (reference src/ocr/
     easyocr_impl.py:25-29, 108-129): bbox corners are TL/TR/BR/BL of the
     fixed-pitch line band; confidence = fraction of the line's non-space
     chars whose cell matches its template pixel-exactly (min-Hamming 0) —
@@ -318,7 +318,7 @@ def crop_blob_variants(blobs: DataFrame, modes: tuple[str, ...] | None = None,
                        ratio: float = 0.5) -> DataFrame:
     """Explode each blob into named crop variants (reference
     cropImageVariants halves + quarter splits + ratio splits,
-    /root/reference/src/ocr/image_utils.js:23-67,
+    reference src/ocr/image_utils.js:23-67,
     image_utils/split-image.js:31-101, image_utils.py:60-114).
 
     Scale note: this multiplies pixel bytes by len(modes) — in the

@@ -3,7 +3,7 @@
 North-rule requirements wired together:
 
   * results land via MERGE upsert into a SnapshotTable (the reference's
-    insert-or-append voucher store, /root/reference/src/database/
+    insert-or-append voucher store, reference src/database/
     VoucherDatabase.py:142-201, re-expressed as snapshot CoW);
   * every run appends per-partition lineage + extraction metrics to an
     append-only audit SnapshotTable (the reference's per-job log with
@@ -54,19 +54,15 @@ def run_extraction_resumable(
     blobs: DataFrame,
     results: SnapshotTable,
     audit: SnapshotTable,
-    salt_buckets: int = 0,
-    count_skipped: bool = False,
 ) -> dict:
     """Extract only not-yet-committed documents; MERGE + audit commit.
 
-    Returns run stats: docs processed/skipped, snapshot versions, wall time.
+    Returns run stats: docs processed, snapshot versions, wall time.
 
     Scan discipline (10^12-row inputs): the input is read ONCE — by the
     extraction job itself. ``n_processed`` comes from counting the
-    persisted OUTPUT (cheap; the merge re-reads it anyway), and
-    ``n_skipped`` is an opt-in extra scan (``count_skipped=True``); by
-    default it is derived as committed-total minus nothing-new, i.e.
-    reported as None — restart metrics live in the audit table, not in
+    persisted OUTPUT (cheap; the merge re-reads it anyway). Skipped docs
+    are not counted: restart metrics live in the audit table, not in
     repeated full-table counts.
     """
     spark = docs.sparkSession
@@ -78,20 +74,13 @@ def run_extraction_resumable(
         todo = docs.join(done_ids, "doc_id", "left_anti")
     else:
         todo = docs
-    n_skipped = None
-    if count_skipped:
-        n_done = committed.count() if committed is not None else 0
-        # committed ids are a subset of the input in the resume contract,
-        # so the skipped count is the committed count — no input scan
-        n_skipped = n_done
 
-    out = run_extraction(todo, blobs, salt_buckets=salt_buckets).persist()
+    out = run_extraction(todo, blobs).persist()
     try:
         n_todo = out.count()  # first materialization of the one input scan
         if n_todo == 0:
             return {
                 "n_processed": 0,
-                "n_skipped": n_skipped,
                 "results_version": results.current_version(),
                 "audit_version": audit.current_version(),
                 "wall_sec": round(time.monotonic() - t0, 3),
@@ -109,7 +98,6 @@ def run_extraction_resumable(
         out.unpersist()
     return {
         "n_processed": n_todo,
-        "n_skipped": n_skipped,
         "results_version": rv,
         "audit_version": av,
         "wall_sec": round(time.monotonic() - t0, 3),

@@ -3,7 +3,7 @@
 The reference canonicalizes EVERY input image through a real PNG decode
 before OCR — sharp.toFormat('png') in the Node path and PIL/imageio
 (incl. the AVIF fallback) in the Python path
-(/root/reference/src/ocr/cli.py:100-112, 129-137). Until round 3 this
+(reference src/ocr/cli.py:100-112, 129-137). Until round 3 this
 engine's media domain was raw uncompressed bitmaps only; this module
 closes that gap with a complete 8-bit PNG encoder/decoder built on
 stdlib ``zlib`` + numpy — no codec library, nothing external.

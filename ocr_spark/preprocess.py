@@ -3,16 +3,16 @@
 The reference preprocesses every image before recognition:
 
   * dewarp: adaptive threshold -> largest contour -> 4-corner perspective
-    rectify (/root/reference/src/ocr/image_utils.py:123-235), run on every
+    rectify (reference src/ocr/image_utils.py:123-235), run on every
     image in both the CLI path (cli.py:148-157) and the focus path
     (focus_pytesseract.py:49-55).
   * optimizeForOCR: grayscale -> upscale x2 (cubic) -> contrast/brightness
     -> sharpen -> median denoise -> normalize
-    (/root/reference/src/ocr/image_utils/optimize-image.js:11-62,
+    (reference src/ocr/image_utils/optimize-image.js:11-62,
     focus_impl.py:21-51).
   * crop variants: full / top_half / bottom_half / left_half / right_half
     and quarters, driving the recall cascade
-    (/root/reference/src/ocr/image_utils.js:23-67,
+    (reference src/ocr/image_utils.js:23-67,
     image_utils/split-image.js:31-101, image_utils.py:60-114).
 
 Those operators are continuous-image transforms; this engine's correctness
@@ -203,7 +203,7 @@ def rotate_small(img: np.ndarray, a: int, ink: int = 255) -> np.ndarray:
     Paeth's three-shear decomposition (shear-x, shear-y, shear-x), each
     shear an integer per-row/column shift — the rasterized analog of the
     reference's continuous-angle corrective rotation
-    (/root/reference/src/ocr/focus_pytesseract.py:41-48,
+    (reference src/ocr/focus_pytesseract.py:41-48,
     image_utils.py:268-306), built exactly invertible: try_derotate
     recovers the framed upright image bit-for-bit.
     """
@@ -385,7 +385,7 @@ def add_speckles(img: np.ndarray, rng, n: int, ink: int = 255) -> np.ndarray:
 LIT_BG_MIN = 80
 # Local-mean adaptive threshold parameters — the reference's
 # cv2.adaptiveThreshold(gray, 255, ADAPTIVE_THRESH_GAUSSIAN_C,
-# THRESH_BINARY, 21, 15) (/root/reference/src/ocr/image_utils.py:153-155),
+# THRESH_BINARY, 21, 15) (reference src/ocr/image_utils.py:153-155),
 # restated mean-based so the exactness argument below is closed-form.
 ADAPTIVE_BLOCK = 21
 ADAPTIVE_C = 15
@@ -396,7 +396,7 @@ SHADED_INK_DROP = 64
 def equalize_hist(img: np.ndarray,
                   hist: np.ndarray | None = None) -> np.ndarray:
     """Histogram equalization, exact cv2.equalizeHist semantics
-    (/root/reference/src/ocr/focus_impl.py:37): LUT(v) = round((cdf(v) -
+    (reference src/ocr/focus_impl.py:37): LUT(v) = round((cdf(v) -
     cdf_min) / (n - cdf_min) * 255), cdf_min = cdf at the lowest occupied
     bin. Any two-valued low-contrast page maps to full-range {0, 255}
     regardless of its absolute levels — which is why it rescues pages a

@@ -20,23 +20,9 @@ DOCUMENTS_SCHEMA = T.StructType([
     T.StructField("spans", T.ArrayType(SPAN_TYPE)),
 ])
 
-MEDIA_BLOBS_SCHEMA = T.StructType([
-    T.StructField("media_ref", T.StringType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("pixels", T.BinaryType()),
-    T.StructField("ground_text", T.StringType()),
-])
-
 OUT_SPAN_TYPE = T.StructType([
     T.StructField("kind", T.StringType()),
     T.StructField("text", T.StringType()),
     T.StructField("media_ref", T.StringType()),
     T.StructField("order", T.IntegerType()),
-])
-
-EXPECTED_SPANS_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType()),
-    T.StructField("out_spans", T.ArrayType(OUT_SPAN_TYPE)),
-    T.StructField("codes", T.ArrayType(T.StringType())),
 ])

@@ -3,7 +3,7 @@
 Re-expresses the reference's persistence vocabulary Spark-first:
 
   * SQLite PK-upsert (insert-or-append codes per image,
-    /root/reference/src/database/VoucherDatabase.py:142-201 and
+    reference src/database/VoucherDatabase.py:142-201 and
     src/database/SQLiteHelper.js:203-222 ``updateOrInsert``)  -> ``merge_upsert``
   * DB backup / dump / restore (SQLiteHelper.py:245-365)       -> snapshot
     versions + ``read(version=...)`` time travel
@@ -217,7 +217,7 @@ class SnapshotTable:
 
         WHEN MATCHED: for each column, ``merge_exprs[col](old, new)`` if
         given (e.g. ``F.array_union`` for append-if-absent code semantics,
-        /root/reference/src/database/VoucherDatabase.py:168-198), else the
+        reference src/database/VoucherDatabase.py:168-198), else the
         update row's value.  WHEN NOT MATCHED: insert the update row.
 
         Only buckets containing updated keys are read and rewritten; all

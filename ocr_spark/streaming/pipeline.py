@@ -1,7 +1,7 @@
 """Structured Streaming twin of the reference's job queue.
 
 The reference feeds OCR work through a Redis-backed Bull queue with
-at-least-once redelivery (stalled-job retry, /root/reference/src/ocr/
+at-least-once redelivery (stalled-job retry, reference src/ocr/
 ocrQueue.js:14-23, 40-66) and clients poll job state over HTTP
 (src/routes/upload.js:82-97). Spark-first replacement:
 
@@ -68,7 +68,7 @@ def stream_extraction(
     Trigger modes: ``available_now=True`` drains the backlog and stops
     (batch-resume shape); ``available_now=False`` keeps the query live on
     a processing-time trigger — the reference's 200 ms live-frame cadence
-    (/root/reference/src/public/live.js:56-81), hence the default
+    (reference src/public/live.js:56-81), hence the default
     interval.
     """
 

@@ -1,5 +1,6 @@
-"""Reachability census: every top-level function and class in ``ocr_spark/``
-must be reached from a production root, not only from tests.
+"""Reachability census: every top-level function, class and module-level
+constant in ``ocr_spark/`` must be reached from a production root, not
+only from tests.
 
 Roots are ``__spark_entry__.py``, ``bench.py`` and ``perfbench/*.py``. A
 definition is reachable when its name is used in a root, in module-level
@@ -26,6 +27,8 @@ ALLOWED = {
         "caller of extraction and of merge_upsert with overlapping keys",
     "ocr_spark/streaming/pipeline.py:read_document_stream":
         "the inbox reader that feeds stream_extraction",
+    "ocr_spark/__init__.py:__version__":
+        "package metadata, read by packaging tools and users, not by code",
 }
 
 
@@ -44,6 +47,20 @@ def _names(node: ast.AST) -> set[str]:
     return out
 
 
+def _defined_name(st: ast.stmt) -> str | None:
+    """The name a top-level statement defines: a function, a class, or a
+    constant bound by ``NAME = ...`` or ``NAME: T = ...``."""
+    if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return st.name
+    if (isinstance(st, ast.Assign) and len(st.targets) == 1
+            and isinstance(st.targets[0], ast.Name)):
+        return st.targets[0].id
+    if (isinstance(st, ast.AnnAssign) and st.value is not None
+            and isinstance(st.target, ast.Name)):
+        return st.target.id
+    return None
+
+
 def _parse(path: str) -> ast.Module:
     with open(path) as f:
         return ast.parse(f.read(), path)
@@ -59,13 +76,13 @@ def census() -> tuple[dict[str, int], set[str]]:
     for path in sorted(glob.glob(pkg, recursive=True)):
         rel = os.path.relpath(path, REPO)
         for st in _parse(path).body:
-            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef,
-                               ast.ClassDef)):
-                key = f"{rel}:{st.name}"
-                bodies[key] = (st.name, _names(st))
-                sizes[key] = st.end_lineno - st.lineno + 1
-            else:
+            name = _defined_name(st)
+            if name is None:
                 live |= _names(st)
+                continue
+            key = f"{rel}:{name}"
+            bodies[key] = (name, _names(st))
+            sizes[key] = st.end_lineno - st.lineno + 1
     roots = [os.path.join(REPO, "__spark_entry__.py"),
              os.path.join(REPO, "bench.py"),
              *glob.glob(os.path.join(REPO, "perfbench", "*.py"))]

@@ -45,7 +45,7 @@ def test_span_equality_under_shuffled_partitioning(corpus_tables):
     docs = corpus_tables["docs"].repartition(13)
     blobs = corpus_tables["blobs"].repartition(7)
     expected = corpus_tables["expected"]
-    got = _rows_to_dict(run_extraction(docs, blobs, salt_buckets=8).collect())
+    got = _rows_to_dict(run_extraction(docs, blobs).collect())
     want = _rows_to_dict(expected.collect())
     assert got == want
 

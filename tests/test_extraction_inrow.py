@@ -12,6 +12,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ocr_spark.datagen import generate_corpus  # noqa: E402
 from ocr_spark.operators.extraction import run_extraction  # noqa: E402
+from ocr_spark.operators import extraction_inrow  # noqa: E402
 from ocr_spark.operators.extraction_inrow import (  # noqa: E402
     recognized_map,
     run_extraction_inrow,
@@ -82,18 +83,6 @@ def test_inrow_sorts_out_of_order_offsets(spark, corpus):
     assert b.exceptAll(a).count() == 0
 
 
-def test_salted_repartition_preserves_equality(spark, corpus):
-    """Skew path: salted repartition before the UDF stage must not change
-    results (north-rule skew handling; SURVEY.md 7.4 risk #1 — ordering
-    must be explicit, never shuffle luck)."""
-    docs, blobs, expected = corpus
-    salted = run_extraction(docs, blobs, salt_buckets=7)
-    a = _canon(salted)
-    b = _canon(expected)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
 def test_recognized_map_covers_exactly_used_refs(spark, corpus):
     docs, blobs, _ = corpus
     m = recognized_map(docs, blobs)
@@ -107,13 +96,15 @@ def test_recognized_map_covers_exactly_used_refs(spark, corpus):
     assert set(m) == used & have
 
 
-def test_budget_guard_falls_back_to_shuffle_mode(spark, corpus):
+def test_budget_guard_falls_back_to_shuffle_mode(spark, corpus, monkeypatch):
     """A batch whose recognized-media map exceeds the broadcast budget must
     auto-fall-back to the shuffle-mode plan (no silent driver OOM path),
     with identical results."""
     docs, blobs, expected = corpus
 
-    out = run_extraction_inrow(docs, blobs, max_refs=1)
+    with monkeypatch.context() as m:
+        m.setattr(extraction_inrow, "MAX_BROADCAST_REFS", 1)
+        out = run_extraction_inrow(docs, blobs)
     # fallback plan reassembles via shuffle -> it has exchanges, unlike
     # the zero-exchange in-row plan (tests/test_plans.py pins that)
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -122,12 +113,13 @@ def test_budget_guard_falls_back_to_shuffle_mode(spark, corpus):
     assert out.count() == expected.count()
 
     # byte-budget trips identically
-    out2 = run_extraction_inrow(docs, blobs, max_est_bytes=10)
+    monkeypatch.setattr(extraction_inrow, "MAX_BROADCAST_EST_BYTES", 10)
+    out2 = run_extraction_inrow(docs, blobs)
     plan2 = out2._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" in plan2
 
 
-def test_budget_guard_fallback_never_rebroadcasts(spark, corpus):
+def test_budget_guard_fallback_never_rebroadcasts(spark, corpus, monkeypatch):
     """Round-3 VERDICT defect: the shuffle-mode fallback used to force
     F.broadcast on the same corpus-proportional recognized relation whose
     size tripped the guard. Pin the fix: when the guard trips, NO
@@ -147,7 +139,8 @@ def test_budget_guard_fallback_never_rebroadcasts(spark, corpus):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        out = run_extraction_inrow(docs, blobs, max_est_bytes=1)
+        monkeypatch.setattr(extraction_inrow, "MAX_BROADCAST_EST_BYTES", 1)
+        out = run_extraction_inrow(docs, blobs)
 
         # pixels never cross any exchange (the 100-TB invariant)
         for cols in exchange_inputs(out):

@@ -77,7 +77,7 @@ def test_confidence_degrades_on_speckles(blob_spans):
 
 def test_section_grouping_a5(spark, blob_spans):
     """Reference A5: group spans by section, concat texts in order
-    (/root/reference/src/ocr/easyocr_impl.py:183-196)."""
+    (reference src/ocr/easyocr_impl.py:183-196)."""
     rows, _, _ = blob_spans
     df = spark.createDataFrame(rows)
     grouped = (

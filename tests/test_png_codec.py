@@ -5,7 +5,7 @@ stream below is assembled chunk-by-chunk in the test with an independent
 scalar filterer, covering mixed per-row filters (incl. Average/Paeth,
 which the corpus encoder never emits), split IDAT chunks, and ancillary
 chunks. Mirrors the reference's canonical-PNG input contract
-(/root/reference/src/ocr/cli.py:100-112)."""
+(reference src/ocr/cli.py:100-112)."""
 
 import struct
 import zlib

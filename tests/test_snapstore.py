@@ -95,19 +95,20 @@ def test_resume_skips_committed_docs(spark, tmp_path, tiny_corpus):
 
     # run 1: first half only (simulates a job killed mid-corpus)
     half = docs.filter(F.col("doc_id") < "doc-00000030")
-    s1 = run_extraction_resumable(half, blobs, results, audit,
-                                  count_skipped=True)
-    assert s1["n_processed"] == 30 and s1["n_skipped"] == 0
+    s1 = run_extraction_resumable(half, blobs, results, audit)
+    assert s1["n_processed"] == 30
+    assert results.read(spark).count() == 30
 
     # run 2: full input -> must process ONLY the uncommitted half
-    s2 = run_extraction_resumable(docs, blobs, results, audit,
-                                  count_skipped=True)
-    assert s2["n_processed"] == 30 and s2["n_skipped"] == 30
+    s2 = run_extraction_resumable(docs, blobs, results, audit)
+    assert s2["n_processed"] == 30
     assert s2["results_version"] == 2
+    assert results.read(spark).count() == 60
 
-    # run 3: nothing left to do (default: no skip-count scan -> None)
+    # run 3: nothing left to do, and nothing is committed again
     s3 = run_extraction_resumable(docs, blobs, results, audit)
-    assert s3["n_processed"] == 0 and s3["n_skipped"] is None
+    assert s3["n_processed"] == 0
+    assert s3["results_version"] == 2
 
     # final state equals the golden span sequences exactly
     def _canon(df):
