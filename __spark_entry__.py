@@ -54,17 +54,19 @@ def query(
 # --------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: the FULL interleaved pipeline — text spans through the
-    boilerplate stripper, media spans through the batched recognizer
+    """Flagship: the FULL interleaved pipeline through the one extraction
+    entry (in-row, or its cold-media fallback when the recognized media
+    fail the broadcast budget) — text spans through the boilerplate
+    stripper, media spans through the batched recognizer
     (dewarp/denoise/de-upscale/de-rotate variants included), order-exact
-    reassembly, voucher codes. Runs on the deterministic sf0.001 synthetic
+    spans, voucher codes. Runs on the deterministic sf0.001 synthetic
     corpus (generated on first call, cached under data/interleaved/);
     additionally wraps the driver's relational documents table as
     single-text-span docs so the testdata path is exercised too."""
     import os
 
     from ocr_spark.datagen import corpus_dir
-    from ocr_spark.operators.extraction import run_extraction
+    from ocr_spark.operators.extraction_inrow import run_extraction_inrow
 
     cdir = corpus_dir(0.001)
     docs = spark.read.parquet(
@@ -82,7 +84,7 @@ def entry(spark: SparkSession) -> DataFrame:
             )
         ).alias("spans"),
     )
-    return run_extraction(docs.unionByName(extra), blobs)
+    return run_extraction_inrow(docs.unionByName(extra), blobs)
 
 
 # --------------------------------------------------------------------------

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from .voucher_core import BANNED_VOUCHERS, VOUCHER_PATTERN
+from .voucher_core import BANNED_VOUCHERS, JS_SPACE, VOUCHER_PATTERN
 
 BANNED_LIST = sorted(BANNED_VOUCHERS)
 
@@ -37,7 +37,7 @@ def raw_voucher_matches(col: Column | str) -> Column:
 
 
 def normalize_code(col: Column) -> Column:
-    return F.regexp_replace(col, r"\s+", "")
+    return F.regexp_replace(col, JS_SPACE + "+", "")
 
 
 def codes_from_text(col: Column | str) -> Column:

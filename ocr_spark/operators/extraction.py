@@ -1,32 +1,36 @@
-"""Flagship pipeline: interleaved documents -> ordered extracted spans.
+"""Cold-media fallback plan: interleaved documents -> ordered spans.
 
-The end-to-end job the north rule specifies, declared entirely with the
-DataFrame API so Catalyst owns the physical plan:
+The one extraction entry is ``extraction_inrow.run_extraction_inrow``. It
+runs this plan only when its budget check finds that the recognized media
+of a batch would not fit a driver broadcast (cold media: distinct refs
+grow with spans). The plan is declared with the DataFrame API so Catalyst
+owns it:
 
     documents_interleaved(doc_id, spans)
-      posexplode_outer(spans)                      # span rows, offset kept;
-                                                   #   empty docs survive
-      kind='text'  -> strip_boilerplate_udf        # Arrow pandas UDF
-      kind='media' -> distinct media_ref
-                      -> semi-join prune blobs     # OCR once per blob
-                      -> recognize_blobs           # mapInPandas singleton
-                      -> join text back to spans
-      union -> codes per doc (Catalyst exprs)
-      groupBy(doc_id).agg(sort_array(collect_list(struct(order, ...))))
-                                                   # explicit order, never
-                                                   #   shuffle-order luck
+      posexplode_outer(spans)                 # span rows keep offset and
+                                              #   input position; empty
+                                              #   docs survive
+      kind = 'text'   -> strip_boilerplate_udf
+      any other kind  -> left join recognize_blobs(blobs) on media_ref
+                         ('' for refs with no blob)
+      union -> groupBy(doc_id)
+               sort_array(collect_list(struct(offset, pos, ...)))
+      -> codes per doc (Catalyst exprs)
+
+Pixel bytes never cross an exchange: every blob is recognized map-side in
+its scan stage (with cold media most blobs are referenced, so a prune would
+save little, and a shuffle semi-join would exchange the pixel column). Only
+(ref, short text) shuffles into the span join, and nothing is broadcast, so
+the corpus-sized recognized relation that failed the budget is never built
+on the driver.
+
+The span rules are the in-row plan's, so both plans return the same rows:
+every span whose kind is not 'text' resolves as media, null offsets sort
+first, and spans with equal offsets keep their input order.
 
 Replaces the reference's four-boundary imperative flow (HTTP -> Redis ->
 child process -> worker thread; reference src/ocr/ocrQueue.js:40-66,
-src/ocr/cli.js:12-29) with one declarative plan whose only wide exchanges
-are the media-ref dedup/join and the final per-document reassembly.
-
-Scale design (100 TB / 10^12 docs):
-  * Pixel bytes never shuffle on doc_id — recognition output (short text)
-    is what joins back to spans. The heavy columns stay in the scan stage.
-  * Media-heavy skew documents (FIXTURES.md: 2% docs with 32-128 media
-    spans) do not skew OCR (per-blob, deduped) and reassembly skew is
-    bounded by max spans/doc; AQE skew-join handles hot media_refs.
+src/ocr/cli.js:12-29) with one declarative plan.
 """
 
 from __future__ import annotations
@@ -41,78 +45,33 @@ from .ocr import recognize_blobs
 SPAN_SEP = "\n"
 
 
-def explode_spans(docs: DataFrame) -> DataFrame:
-    """(doc_id, spans) -> one row per span; empty docs keep a null row."""
-    return docs.select(
-        "doc_id",
-        F.posexplode_outer("spans").alias("pos", "span"),
-    ).select(
-        "doc_id",
-        "pos",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
+def extract_spans(docs: DataFrame, blobs: DataFrame) -> DataFrame:
+    """Per-span rows: (doc_id, offset, pos, kind, text, media_ref).
 
-
-def extract_spans(
-    docs: DataFrame, blobs: DataFrame, broadcast_ok: bool = True,
-) -> DataFrame:
-    """Per-span extraction: (doc_id, offset, kind, text, media_ref).
-
-    text = stripped main content for text spans, recognized text for media
-    spans ('' for unresolvable refs — mirrors the reference's empty-OCR
-    fallback, reference src/ocr/focus_pytesseract.py:49-55).
-
-    broadcast_ok: whether the distinct-ref set and the recognized
-    (media_ref, text) relation fit a broadcast. The in-row mode's budget
-    guard (extraction_inrow.py) passes False when they don't — the
-    cold-media regime. The invariant that holds in BOTH regimes is "pixel
-    bytes never cross an exchange" (pinned in tests/test_plans.py), NOT
-    "broadcast everything":
-
-      * True (hot media, the common web-corpus case): prune blobs with a
-        broadcast semi-join on the distinct refs, broadcast the small
-        recognized relation into the span join — zero shuffles on either.
-      * False (cold media, refs ~ spans): a shuffle semi-join to prune
-        blobs would EXCHANGE THE PIXEL COLUMN, and broadcasting the
-        corpus-sized recognized map would OOM the driver (the round-3
-        fallback defect). Instead skip the prune entirely — recognize
-        every blob map-side in its scan stage (cold media means the prune
-        saves little: most blobs are referenced) — and join the recognized
-        (ref, short text) output to spans with a plain shuffle join. Only
-        ref strings and short recognized text cross exchanges; unreferenced
-        blobs simply don't match the left join, so results are identical.
+    text = stripped main content for text spans, recognized text for all
+    other spans ('' for unresolvable refs — mirrors the reference's
+    empty-OCR fallback, reference src/ocr/focus_pytesseract.py:49-55).
     """
-    spans = explode_spans(docs)
-
+    spans = docs.select(
+        "doc_id", F.posexplode_outer("spans").alias("pos", "span"),
+    ).select(
+        "doc_id", "pos", "span.kind", "span.text", "span.media_ref",
+        "span.offset",
+    )
     text_spans = spans.filter(F.col("kind") == "text").select(
-        "doc_id", "offset", "kind",
+        "doc_id", "offset", "pos", "kind",
         strip_boilerplate_udf("text").alias("text"),
         "media_ref",
     )
-
-    media_spans = spans.filter(F.col("kind") == "media").select(
-        "doc_id", "offset", "kind", "media_ref"
-    )
-    if broadcast_ok:
-        # broadcast both small sides explicitly: `needed` is a distinct-ref
-        # set and `recognized` is (media_ref, short text) — without the
-        # hints Spark may plan sort-merge joins that SHUFFLE PIXEL BYTES
-        # (observed: a 32-partition exchange of the blob table at sf1.0).
-        needed = media_spans.select("media_ref").distinct()
-        pruned = blobs.join(F.broadcast(needed), "media_ref", "left_semi")
-        recognized = F.broadcast(recognize_blobs(pruned))
-    else:
-        recognized = recognize_blobs(blobs)
-    media_out = (
-        media_spans.join(recognized, "media_ref", "left")
-        .select(
-            "doc_id", "offset", "kind",
-            F.coalesce("text", F.lit("")).alias("text"),
-            "media_ref",
-        )
+    media_spans = spans.filter(
+        F.col("pos").isNotNull() & ~F.col("kind").eqNullSafe("text")
+    ).drop("text")
+    media_out = media_spans.join(
+        recognize_blobs(blobs), "media_ref", "left"
+    ).select(
+        "doc_id", "offset", "pos", "kind",
+        F.coalesce("text", F.lit("")).alias("text"),
+        "media_ref",
     )
     return text_spans.unionByName(media_out)
 
@@ -120,9 +79,10 @@ def extract_spans(
 def reassemble(extracted: DataFrame, all_doc_ids: DataFrame) -> DataFrame:
     """Span rows -> (doc_id, out_spans, codes), order-exact.
 
-    sort_array over offset-first structs makes ordering explicit and
-    shuffle-independent (SURVEY.md section 7.4 risk #1). all_doc_ids keeps
-    empty-span documents in the result (left join).
+    sort_array over (offset, pos)-first structs makes ordering explicit and
+    shuffle-independent (SURVEY.md section 7.4 risk #1); ascending order
+    puts null offsets first. all_doc_ids keeps empty-span documents in the
+    result (left join).
     """
     per_doc = (
         extracted.groupBy("doc_id")
@@ -131,7 +91,7 @@ def reassemble(extracted: DataFrame, all_doc_ids: DataFrame) -> DataFrame:
                 F.collect_list(
                     F.struct(
                         F.col("offset").alias("order"),
-                        "kind", "text", "media_ref",
+                        "pos", "kind", "text", "media_ref",
                     )
                 )
             ).alias("_sorted")
@@ -172,8 +132,6 @@ def reassemble(extracted: DataFrame, all_doc_ids: DataFrame) -> DataFrame:
     )
 
 
-def run_extraction(
-    docs: DataFrame, blobs: DataFrame, broadcast_ok: bool = True,
-) -> DataFrame:
+def run_extraction_cold(docs: DataFrame, blobs: DataFrame) -> DataFrame:
     """documents_interleaved + media_blobs -> expected_spans-shaped result."""
-    return reassemble(extract_spans(docs, blobs, broadcast_ok), docs)
+    return reassemble(extract_spans(docs, blobs), docs)

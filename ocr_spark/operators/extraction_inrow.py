@@ -1,14 +1,14 @@
-"""In-row extraction: zero document-byte shuffle (hot-media regime).
+"""The one extraction entry: documents -> ordered spans -> codes.
 
-The general-case plan (operators/extraction.py) posexplodes spans and
-reassembles them with a groupBy shuffle — at sf1.0 that exchange carries
-every stripped span text (~the whole corpus payload) and the doc table is
-scanned once per branch. This operator keeps each document IN ITS ROW:
+``run_extraction_inrow`` is what every caller runs (``__spark_entry__``'s
+entry(), resumable commits, the streaming foreachBatch, bench.py and
+perfbench). It keeps each document IN ITS ROW, with no document-byte
+shuffle:
 
     docs ──(nested-pruned scan: spans.media_ref only)── distinct refs
          ⋉ blobs  -> recognize_blobs (Arrow mapInPandas, per-blob dedup)
          -> collected to a broadcast map {media_ref: text}   (small)
-    docs ──(full scan, ONE pass)── mapInPandas:
+    docs ──(full scan, ONE pass)── mapInArrow:
            per row: strip text spans, substitute media text from the
            broadcast map, emit out_spans in offset order
          -> codes via Catalyst regexp over the in-order span texts
@@ -18,13 +18,13 @@ Shuffle inventory: ONE exchange over the distinct media_ref strings.
 Document payload bytes never leave their scan stage; span order never
 depends on shuffle order at all (it is preserved in-row).
 
-Scale regime: correct whenever the *distinct recognized media* of the
-batch fits in a broadcast (hot-media sharing — the FIXTURES.md corpus
-model, where the blob pool grows sublinearly in docs; in web corpora
-media dedup hit rates make this the common case). For cold-media corpora
-where recognized text outgrows a broadcast, fall back to
-operators/extraction.py (same results — tests assert equality of both
-modes), or partition media refs into broadcastable generations.
+Scale regime: in-row needs the *distinct recognized media* of the batch to
+fit a driver broadcast (hot-media sharing — the FIXTURES.md corpus model,
+where the blob pool grows sublinearly in docs; in web corpora media dedup
+hit rates make this the common case). A budget check decides before any
+recognition; a cold-media batch that fails it runs the shuffle plan in
+operators/extraction.py, which follows the same span rules and gives the
+same rows.
 
 Replaces the reference's per-image imperative flow (reference
 src/ocr/ocrQueue.js:40-66 one-job-per-image; src/ocr/focus_pytesseract.py:
@@ -37,6 +37,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -44,6 +45,7 @@ from pyspark.sql import types as T
 from ..functions.boilerplate_core import strip_boilerplate
 from ..functions.vouchers import codes_from_text
 from ..schemas import OUT_SPAN_TYPE
+from .extraction import run_extraction_cold
 from .ocr import recognize_blobs
 
 _SPANS_SCHEMA = T.StructType([
@@ -71,19 +73,12 @@ def _needed_refs(docs: DataFrame) -> DataFrame:
     )
 
 
-def recognized_map(docs: DataFrame, blobs: DataFrame,
-                   pruned: DataFrame | None = None) -> dict[str, str]:
-    """{media_ref: recognized_text} for exactly the refs `docs` uses.
-
-    One nested-pruned scan of docs (only spans.media_ref is read), one
-    broadcast semi-join prune of blobs, one Arrow OCR pass per distinct
-    blob. Collected via the Arrow path (toPandas), not row-pickled.
-    Returns a plain dict for sc.broadcast.
+def recognized_map(pruned: DataFrame) -> dict[str, str]:
+    """{media_ref: recognized_text} for the blobs pruned to the refs the
+    documents use: one Arrow OCR pass per distinct blob, collected via the
+    Arrow path (toPandas), not row-pickled. Returns a plain dict for
+    sc.broadcast.
     """
-    if pruned is None:
-        pruned = blobs.join(
-            F.broadcast(_needed_refs(docs)), "media_ref", "left_semi"
-        )
     pdf = recognize_blobs(pruned).toPandas()
     return dict(zip(pdf["media_ref"], pdf["text"]))
 
@@ -94,9 +89,10 @@ def _transform_batch(batch: pa.RecordBatch,
 
     Only the flat `text` child array is rebuilt in Python (that work is
     the actual extraction); kind/media_ref/offset children and the list
-    offsets are reused zero-copy. Rows whose spans are not already
-    offset-sorted (contract allows it; our corpus always is) take a rare
-    per-row reorder path.
+    offsets are reused zero-copy. Every span whose kind is not 'text'
+    resolves as media. Within a row, spans are ordered by offset with
+    nulls first, and equal offsets keep their input order; the children
+    are permuted only when some row is out of that order.
     """
     spans = batch.column("spans")
     if spans.null_count:
@@ -105,57 +101,47 @@ def _transform_batch(batch: pa.RecordBatch,
     lengths = np.asarray(spans.value_lengths().fill_null(0))
     offsets = np.zeros(len(lengths) + 1, dtype=np.int32)
     np.cumsum(lengths, out=offsets[1:])
+    # flatten() gives a null span null fields, whatever its children hold
+    field = dict(zip((f.name for f in flat.type), flat.flatten()))
+    kind_arr, ref_arr, order_arr = (
+        field["kind"], field["media_ref"], field["offset"])
 
     # kind dispatch stays in Arrow/numpy: only the strings each branch
     # actually consumes are materialized as Python objects (media-heavy
     # batches skip building every null text value; the per-string regex
     # work in strip_boilerplate is the only inherently-Python part)
-    import pyarrow.compute as pc
-
     is_text = np.asarray(
-        pc.fill_null(pc.equal(flat.field("kind"), "text"), False)
+        pc.fill_null(pc.equal(kind_arr, "text"), False)
     )
     idx_text = np.flatnonzero(is_text)
     idx_media = np.flatnonzero(~is_text)
     out = np.empty(len(is_text), dtype=object)
     out[idx_text] = [
         strip_boilerplate(t)
-        for t in flat.field("text").take(pa.array(idx_text)).to_pylist()
+        for t in field["text"].take(pa.array(idx_text)).to_pylist()
     ]
     out[idx_media] = [
         media_text.get(r, "")
-        for r in flat.field("media_ref").take(pa.array(idx_media)).to_pylist()
+        for r in ref_arr.take(pa.array(idx_media)).to_pylist()
     ]
-    out_texts = out.tolist()
 
-    kind_arr = flat.field("kind")
-    ref_arr = flat.field("media_ref")
-    order_arr = flat.field("offset")
-
-    # contract safety: if any row's offsets are not ascending, reorder it
-    offs_np = np.asarray(order_arr.to_pandas(), dtype=np.int64)
-    order_ok = True
-    for i in range(len(lengths)):
-        seg = offs_np[offsets[i]:offsets[i + 1]]
-        if seg.size > 1 and np.any(np.diff(seg) < 0):
-            order_ok = False
-            break
-    if not order_ok:
-        perm = np.arange(len(offs_np))
-        for i in range(len(lengths)):
-            lo, hi = offsets[i], offsets[i + 1]
-            perm[lo:hi] = lo + np.argsort(offs_np[lo:hi], kind="stable")
+    # one stable sort of all spans by (row, offset nulls first); input
+    # order breaks ties
+    row = np.repeat(np.arange(len(lengths)), lengths)
+    perm = np.lexsort((np.asarray(order_arr.fill_null(0)),
+                       np.asarray(order_arr.is_valid()), row))
+    if np.any(perm != np.arange(len(perm))):
         take = pa.array(perm)
         kind_arr = kind_arr.take(take)
         ref_arr = ref_arr.take(take)
         order_arr = order_arr.take(take)
-        out_texts = [out_texts[j] for j in perm]
+        out = out[perm]
 
     # mapInArrow does not coerce returned types to the declared schema —
     # cast explicitly (input `offset` may arrive int64 via pandas-built
     # DataFrames; declared OUT_SPAN_TYPE.order is int32)
     new_values = pa.StructArray.from_arrays(
-        [kind_arr.cast(pa.string()), pa.array(out_texts, pa.string()),
+        [kind_arr.cast(pa.string()), pa.array(out.tolist(), pa.string()),
          ref_arr.cast(pa.string()), order_arr.cast(pa.int32())],
         names=["kind", "text", "media_ref", "order"],
     )
@@ -172,16 +158,16 @@ MAX_BROADCAST_EST_BYTES = 512 << 20
 def run_extraction_inrow(docs: DataFrame, blobs: DataFrame) -> DataFrame:
     """documents_interleaved + media_blobs -> (doc_id, out_spans, codes).
 
-    Same contract and results as run_extraction; shuffle-free on the doc
-    payload (see module docstring for the regime argument).
+    Shuffle-free on the doc payload (see module docstring for the regime
+    argument).
 
     Budget guard: the in-row mode is only correct to RUN when the
     recognized-media map fits a driver broadcast. Before recognizing, one
     column-pruned aggregate over the pruned blob METADATA (width/height —
     pixels are not read) bounds the map size: recognized text is at most
     one char per 6x10 glyph cell. A cold-media batch that exceeds the
-    budget automatically falls back to the shuffle-mode plan
-    (operators/extraction.py) instead of silently OOMing the driver.
+    budget runs the cold-media shuffle plan (operators/extraction.py)
+    instead of silently OOMing the driver.
     """
     spark = docs.sparkSession
     # the distinct-ref set (tiny: ref strings only) feeds two jobs — the
@@ -197,17 +183,11 @@ def run_extraction_inrow(docs: DataFrame, blobs: DataFrame) -> DataFrame:
         est_bytes = (stats["px"] or 0) // 60  # >= chars upper bound per cell
         if (stats["n_refs"] > MAX_BROADCAST_REFS
                 or est_bytes > MAX_BROADCAST_EST_BYTES):
-            # Cold-media fallback: the same batch that overflows the
-            # driver broadcast here would also overflow a forced
-            # F.broadcast in shuffle mode — thread the verdict through so
-            # the fallback plan uses plain shuffle joins on (ref, text)
-            # and never rebuilds the oversized broadcast it exists to
+            # Cold-media fallback: plain shuffle joins on (ref, text);
+            # it never rebuilds the oversized broadcast it exists to
             # avoid (round-3 VERDICT "What's wrong #1").
-            from .extraction import run_extraction
-
-            return run_extraction(docs, blobs, broadcast_ok=False)
-        bc = spark.sparkContext.broadcast(
-            recognized_map(docs, blobs, pruned))
+            return run_extraction_cold(docs, blobs)
+        bc = spark.sparkContext.broadcast(recognized_map(pruned))
     finally:
         needed.unpersist()
 

@@ -10,8 +10,9 @@ pattern for amortizing heavy model init.
 
 Scale notes (100 TB):
   * OCR runs on the *deduplicated blob set*, not per span — the pipeline
-    (operators/extraction.py) semi-joins blobs against distinct media_refs
-    first, so a blob referenced by 10^4 documents is recognized once.
+    (operators/extraction_inrow.py) semi-joins blobs against distinct
+    media_refs first, so a blob referenced by 10^4 documents is recognized
+    once.
   * The operator is a mapInPandas projection: no shuffle of pixel data
     beyond the pruning semi-join; output is (media_ref, text) — orders of
     magnitude smaller than the input — so downstream joins move text, not

@@ -30,7 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.snapstore import SnapshotTable
-from .extraction import run_extraction
+# bound under this name so perfbench can trace and corrupt the call
+from .extraction_inrow import run_extraction_inrow as run_extraction
 
 
 def partition_metrics(result: DataFrame, phase: str) -> DataFrame:
@@ -59,8 +60,9 @@ def run_extraction_resumable(
 
     Returns run stats: docs processed, snapshot versions, wall time.
 
-    Scan discipline (10^12-row inputs): the input is read ONCE — by the
-    extraction job itself. ``n_processed`` comes from counting the
+    Scan discipline (10^12-row inputs): the input is read twice — first
+    the key-only needed-refs scan of the extraction entry (spans.media_ref
+    only), then the main pass. ``n_processed`` comes from counting the
     persisted OUTPUT (cheap; the merge re-reads it anyway). Skipped docs
     are not counted: restart metrics live in the audit table, not in
     repeated full-table counts.
@@ -77,7 +79,7 @@ def run_extraction_resumable(
 
     out = run_extraction(todo, blobs).persist()
     try:
-        n_todo = out.count()  # first materialization of the one input scan
+        n_todo = out.count()  # materializes the main pass
         if n_todo == 0:
             return {
                 "n_processed": 0,

@@ -9,8 +9,9 @@ ocrQueue.js:14-23, 40-66) and clients poll job state over HTTP
     directory of documents_interleaved parquet drops (each drop = a batch
     of uploaded jobs; the camera live path, src/public/live.js:56-81, is
     the same shape at a 200 ms cadence);
-  * the worker       -> ``foreachBatch`` running the SAME batch extraction
-    plan (operators/extraction.py) — one code path for batch and stream;
+  * the worker       -> ``foreachBatch`` running the SAME extraction entry
+    as batch jobs (operators/extraction_inrow.py) — one code path for
+    batch and stream;
   * at-least-once + idempotent store -> exactly-once results: Bull may
     redeliver a stalled job, and so may foreachBatch after a crash; the
     snapshot MERGE by doc_id absorbs replays identically to the
@@ -32,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.extraction import run_extraction
+from ..operators.extraction_inrow import run_extraction_inrow
 from ..operators.resumable import partition_metrics
 from ..schemas import DOCUMENTS_SCHEMA
 from ..sources.snapstore import SnapshotTable
@@ -75,7 +76,7 @@ def stream_extraction(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        out = run_extraction(batch_df, blobs).persist()
+        out = run_extraction_inrow(batch_df, blobs).persist()
         try:
             rv = results.merge_upsert(
                 out,

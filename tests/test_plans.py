@@ -70,57 +70,28 @@ def test_extraction_needed_scan_prunes_nested_text(spark):
     assert "text" not in schemas, schemas
 
 
-def test_extraction_shuffle_budget(spark):
-    """General-mode extraction: the only hash exchanges are the media-ref
-    distinct and the final reassembly — document payload shuffles once."""
+def test_inrow_extraction_has_no_doc_shuffle(spark, monkeypatch):
+    """In-row mode: zero hash exchanges in the main pass (the OCR-side
+    distinct runs in its own tiny job), and the blob prune that feeds the
+    recognizer moves ref strings, never pixel bytes."""
     from ocr_spark.datagen import corpus_dir
-    from ocr_spark.operators.extraction import run_extraction
-
-    cdir = corpus_dir(0.001)
-    docs = spark.read.parquet(
-        os.path.join(cdir, "documents_interleaved.parquet"))
-    blobs = spark.read.parquet(os.path.join(cdir, "media_blobs.parquet"))
-    n = exchange_count(run_extraction(docs, blobs))
-    assert n <= 3, f"shuffle budget exceeded: {n} exchanges"
-
-
-def test_extraction_no_pixel_exchange_both_regimes(spark):
-    """The invariant that holds in BOTH extraction regimes is 'pixel bytes
-    never cross an exchange' — not 'broadcast everything'. The hot-media
-    plan achieves it with broadcast hints; the cold-media (over-budget
-    fallback) plan achieves it by recognizing all blobs map-side and
-    shuffling only (ref, short text)."""
-    from ocr_spark.datagen import corpus_dir
-    from ocr_spark.operators.extraction import run_extraction
+    from ocr_spark.operators import extraction_inrow
     from plan_checks import exchange_inputs
 
     cdir = corpus_dir(0.001)
     docs = spark.read.parquet(
         os.path.join(cdir, "documents_interleaved.parquet"))
     blobs = spark.read.parquet(os.path.join(cdir, "media_blobs.parquet"))
-    for broadcast_ok in (True, False):
-        out = run_extraction(docs, blobs, broadcast_ok=broadcast_ok)
-        inputs = exchange_inputs(out)
-        # both regimes shuffle at least the reassembly — an empty list
-        # would mean the Exchange-Input regex went vacuous, not that the
-        # plan is shuffle-free
-        assert inputs, "exchange_inputs matched nothing"
-        for cols in inputs:
-            assert "pixels" not in cols, (broadcast_ok, cols)
-
-
-def test_inrow_extraction_has_no_doc_shuffle(spark):
-    """In-row mode: zero hash exchanges in the main pass (the OCR-side
-    distinct runs in its own tiny job)."""
-    from ocr_spark.datagen import corpus_dir
-    from ocr_spark.operators.extraction_inrow import run_extraction_inrow
-
-    cdir = corpus_dir(0.001)
-    docs = spark.read.parquet(
-        os.path.join(cdir, "documents_interleaved.parquet"))
-    blobs = spark.read.parquet(os.path.join(cdir, "media_blobs.parquet"))
-    out = run_extraction_inrow(docs, blobs)
+    pruned = []
+    real = extraction_inrow.recognized_map
+    monkeypatch.setattr(extraction_inrow, "recognized_map",
+                        lambda p: pruned.append(p) or real(p))
+    out = extraction_inrow.run_extraction_inrow(docs, blobs)
     assert exchange_count(out) == 0, executed_plan(out)
+    inputs = exchange_inputs(pruned[0])
+    assert inputs, "exchange_inputs matched nothing"
+    for cols in inputs:
+        assert "pixels" not in cols, cols
 
 
 def test_minhash_signature_agg_is_partial(spark):

@@ -16,8 +16,15 @@ def _random_text(rng: random.Random) -> str:
         roll = rng.random()
         if roll < 0.4:
             code = "".join(str(rng.randrange(10)) for _ in range(16))
-            sep = rng.choice(["", " ", "  ", "\n"])
+            # NBSP and em space are whitespace to both engines' patterns
+            sep = rng.choice(["", " ", "  ", "\n", "\xa0", "\u2003"])
             parts.append(sep.join(code[i : i + 4] for i in range(0, 16, 4)))
+        elif roll < 0.45:
+            # Arabic-Indic digits are not [0-9]; a letter outside ASCII
+            # glued to a code is no word character
+            code = "".join(str(rng.randrange(10)) for _ in range(12))
+            parts.append(rng.choice(["\u0661\u0662\u0663\u0664" + code,
+                                     "caf\xe9" + code + "1234"]))
         elif roll < 0.5:
             parts.append("1234 1234 1234 1234")  # banned
         elif roll < 0.6:
