@@ -10,7 +10,6 @@ holds both plans to the pure-Python span rules on adversarial input.
 from __future__ import annotations
 
 import random
-import re
 
 from pyspark.sql import functions as F
 
@@ -168,46 +167,6 @@ def test_budget_guard_falls_back_to_shuffle_mode(corpus_tables, monkeypatch):
     out2 = run_extraction_inrow(docs, blobs)
     plan2 = out2._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" in plan2
-
-
-def test_budget_guard_fallback_never_rebroadcasts(spark, corpus_tables,
-                                                  monkeypatch):
-    """Round-3 VERDICT defect: the shuffle-mode fallback used to force
-    F.broadcast on the same corpus-proportional recognized relation whose
-    size tripped the guard. Pin the fix: when the guard trips, NO
-    BroadcastExchange carries the recognized (media_ref, text) relation,
-    no exchange carries pixel bytes, and results are still exactly the
-    golden spans."""
-    from plan_checks import exchange_inputs, explain_formatted
-
-    docs, blobs = corpus_tables["docs"], corpus_tables["blobs"]
-    # Distinguish a FORCED broadcast (the defect: an F.broadcast hint that
-    # overrides the planner even on a corpus-sized relation) from a
-    # stats-based planner choice (fine — at real scale the stats say huge
-    # and the planner won't pick it): with auto-broadcast disabled, only a
-    # hint can still produce a BroadcastExchange on the recognized side.
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        monkeypatch.setattr(extraction_inrow, "MAX_BROADCAST_EST_BYTES", 1)
-        out = run_extraction_inrow(docs, blobs)
-
-        # pixels never cross any exchange (the 100-TB invariant); an empty
-        # list would mean the Exchange-Input regex went vacuous, not that
-        # the plan is shuffle-free
-        inputs = exchange_inputs(out)
-        assert inputs, "exchange_inputs matched nothing"
-        for cols in inputs:
-            assert "pixels" not in cols, cols
-        plan = explain_formatted(out)
-        for cols in re.findall(
-            r"\(\d+\) BroadcastExchange\nInput \[\d+\]: \[([^\]]*)\]", plan
-        ):
-            assert not ("media_ref" in cols and "text#" in cols), cols
-
-        _assert_golden(out, corpus_tables["expected"])
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 # --------------------------------------------------------------------------

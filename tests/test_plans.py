@@ -70,6 +70,38 @@ def test_extraction_needed_scan_prunes_nested_text(spark):
     assert "text" not in schemas, schemas
 
 
+def test_extraction_no_pixel_exchange_both_regimes(spark, monkeypatch):
+    """The invariant that holds in BOTH extraction regimes is 'pixel bytes
+    never cross an exchange' — not 'broadcast everything'. The hot-media
+    front door achieves it by pruning blobs with a broadcast semi-join on
+    the needed refs before recognizing; the cold-media (over-budget
+    fallback) plan by recognizing all blobs map-side and shuffling only
+    (ref, short text)."""
+    from ocr_spark.datagen import corpus_dir
+    from ocr_spark.operators import extraction_inrow
+    from ocr_spark.operators.extraction import run_extraction_cold
+    from plan_checks import exchange_inputs
+
+    cdir = corpus_dir(0.001)
+    docs = spark.read.parquet(
+        os.path.join(cdir, "documents_interleaved.parquet"))
+    blobs = spark.read.parquet(os.path.join(cdir, "media_blobs.parquet"))
+    pruned = []
+    real = extraction_inrow.recognized_map
+    monkeypatch.setattr(extraction_inrow, "recognized_map",
+                        lambda p: pruned.append(p) or real(p))
+    extraction_inrow.run_extraction_inrow(docs, blobs)
+    regimes = {"hot": pruned[0], "cold": run_extraction_cold(docs, blobs)}
+    for regime, df in regimes.items():
+        inputs = exchange_inputs(df)
+        # both regimes shuffle something — an empty list would mean the
+        # Exchange-Input regex went vacuous, not that the plan is
+        # shuffle-free
+        assert inputs, (regime, "exchange_inputs matched nothing")
+        for cols in inputs:
+            assert "pixels" not in cols, (regime, cols)
+
+
 def test_inrow_extraction_has_no_doc_shuffle(spark, monkeypatch):
     """In-row mode: zero hash exchanges in the main pass (the OCR-side
     distinct runs in its own tiny job), and the blob prune that feeds the
