@@ -7,14 +7,13 @@ documents:
 
     documents_interleaved(doc_id string,
                           spans array<struct<kind,text,media_ref,offset>>)
-      -> posexplode(spans)
-      -> text branch:  boilerplate strip (vectorized pandas UDF)
-      -> media branch: synthetic OCR (binarize -> line segment -> classify)
-                       inside Arrow-batched mapInPandas, executor-singleton
-                       recognizer
+      -> media lookup: synthetic OCR (binarize -> line segment -> classify)
+                       of the referenced blobs inside Arrow-batched
+                       mapInPandas, executor-singleton recognizer
+      -> one in-row Arrow pass per batch: boilerplate-strip text spans,
+         substitute media text, order spans by offset
       -> voucher-code extraction (regexp + banned anti-join +
          first-occurrence window dedup)
-      -> order-exact reassembly: sort_array(collect_list(struct(...)))
       -> snapshot-committed results + audit/lineage tables
 
 Everything is DataFrame/SQL-first: Catalyst handles pushdown, pruning,

@@ -385,11 +385,14 @@ def url_blocklist_filter(
     nested-loop — O(rows x blocklist) with no hash pruning. Instead the
     hostname is exploded into its dot-suffixes (``a.b.c`` -> [a.b.c,
     b.c, c] — bounded by label count, ~4-6 per host), and the suffixes
-    hash-join the blocklist. With the usual few-MB blocklist that is a
-    broadcast HASH join per suffix row: no shuffle of the URL side at
-    all, and at 10^12 rows the cost is linear with a small constant.
-    Blocklist entries are matched case-insensitively on the registered
-    form (lowercased, no leading dot).
+    hash-join the broadcast blocklist (the usual few MB). Blocking
+    depends on the host alone, so only the distinct hosts are exploded,
+    and the blocked-host set joins back on ``host``: a null in any other
+    column cannot break the match. That set grows with distinct hosts,
+    not rows, so the planner picks its join strategy from its size; no
+    corpus-sized relation is forced into a broadcast. Blocklist entries
+    are matched case-insensitively on the registered form (lowercased,
+    no leading dot).
 
     Returns the input rows plus (``host``, ``blocked``) — callers keep
     ``~blocked`` for the survivor stream and route ``blocked`` rows to
@@ -398,42 +401,30 @@ def url_blocklist_filter(
     host = F.lower(
         F.regexp_extract(F.col(url_col), r"^[A-Za-z][A-Za-z0-9+.-]*://([^/:?#]+)", 1)
     )
-    labeled = urls.withColumn("host", host).withColumn(
-        "_parts", F.split(F.col("host"), r"\.")
-    )
-    suffixes = labeled.select(
-        *urls.columns,
+    labeled = urls.withColumn("host", host)
+    parts = F.split(F.col("host"), r"\.")
+    suffixes = labeled.select("host").distinct().select(
         "host",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.size("_parts") - 1),
+                F.sequence(F.lit(0), F.size(parts) - 1),
                 lambda i: F.array_join(
-                    F.slice(
-                        F.col("_parts"), i + 1, F.size("_parts")
-                    ),
-                    ".",
-                ),
+                    F.slice(parts, i + 1, F.size(parts)), "."),
             )
         ).alias("_suffix"),
     )
     bl = blocklist.select(
         F.lower(F.col(domain_col)).alias("_suffix")
     ).distinct()
-    blocked_ids = (
+    blocked_hosts = (
         suffixes.join(F.broadcast(bl), "_suffix", "left_semi")
-        .select(*urls.columns, "host")
+        .select("host")
         .distinct()
+        .withColumn("blocked", F.lit(True))
     )
-    return (
-        labeled.drop("_parts")
-        .join(
-            F.broadcast(
-                blocked_ids.withColumn("blocked", F.lit(True))
-            ),
-            [*urls.columns, "host"],
-            "left",
-        )
-        .withColumn("blocked", F.coalesce("blocked", F.lit(False)))
+    return labeled.join(blocked_hosts, "host", "left").select(
+        *urls.columns, "host",
+        F.coalesce("blocked", F.lit(False)).alias("blocked"),
     )
 
 

@@ -50,6 +50,25 @@ def partition_metrics(result: DataFrame, phase: str) -> DataFrame:
     )
 
 
+def commit_results(out: DataFrame, results: SnapshotTable,
+                   audit: SnapshotTable, phase: str,
+                   batch_id: int | None = None) -> tuple[int, int]:
+    """The results-store merge rule, for every writer of extraction output:
+    MERGE ``out`` into ``results`` by doc_id (idempotent; codes
+    append-if-absent preserves the reference's conditional-append store
+    semantics), then append one lineage row per partition to ``audit``,
+    stamped with the new results version and, for a stream, the
+    micro-batch id. Returns (results_version, audit_version)."""
+    rv = results.merge_upsert(
+        out, merge_exprs={"codes": lambda old, new: F.array_union(old, new)}
+    )
+    metrics = partition_metrics(out, phase).withColumn(
+        "results_version", F.lit(rv))
+    if batch_id is not None:
+        metrics = metrics.withColumn("batch_id", F.lit(batch_id))
+    return rv, audit.append(metrics)
+
+
 def run_extraction_resumable(
     docs: DataFrame,
     blobs: DataFrame,
@@ -87,15 +106,7 @@ def run_extraction_resumable(
                 "audit_version": audit.current_version(),
                 "wall_sec": round(time.monotonic() - t0, 3),
             }
-        # idempotent by doc_id; codes append-if-absent preserves the
-        # reference's conditional-append store semantics
-        rv = results.merge_upsert(
-            out, merge_exprs={"codes": lambda old, new: F.array_union(old, new)}
-        )
-        metrics = partition_metrics(out, phase="extract").withColumn(
-            "results_version", F.lit(rv)
-        )
-        av = audit.append(metrics)
+        rv, av = commit_results(out, results, audit, phase="extract")
     finally:
         out.unpersist()
     return {

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.extraction_inrow import run_extraction_inrow
-from ..operators.resumable import partition_metrics
+from ..operators.resumable import commit_results
 from ..schemas import DOCUMENTS_SCHEMA
 from ..sources.snapstore import SnapshotTable
 
@@ -78,16 +78,8 @@ def stream_extraction(
             return
         out = run_extraction_inrow(batch_df, blobs).persist()
         try:
-            rv = results.merge_upsert(
-                out,
-                merge_exprs={"codes": lambda old, new: F.array_union(old, new)},
-            )
-            metrics = (
-                partition_metrics(out, phase="stream")
-                .withColumn("results_version", F.lit(rv))
-                .withColumn("batch_id", F.lit(batch_id))
-            )
-            audit.append(metrics)
+            commit_results(out, results, audit, phase="stream",
+                           batch_id=batch_id)
         finally:
             out.unpersist()
 

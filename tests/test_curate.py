@@ -285,15 +285,16 @@ def test_url_blocklist_suffix_semantics(spark):
 
     urls = spark.createDataFrame(
         [
-            (1, "https://x.ads.net/a"),        # subdomain of blocked
-            (2, "https://ads.net/b"),          # exact blocked
-            (3, "https://roads.net/c"),        # NOT a dot-suffix match
-            (4, "https://h1.example.com/d"),   # exact blocked
-            (5, "https://h14.example.com/e"),  # prefix-similar, survives
-            (6, "https://deep.x.ads.net:8080/f?q=1"),  # nested subdomain
-            (7, "https://H1.EXAMPLE.com/g"),   # case-folded host
+            (1, "https://x.ads.net/a", "t"),       # subdomain of blocked
+            (2, "https://ads.net/b", "t"),         # exact blocked
+            (3, "https://roads.net/c", "t"),       # NOT a dot-suffix match
+            (4, "https://h1.example.com/d", "t"),  # exact blocked
+            (5, "https://h14.example.com/e", "t"),  # prefix-similar, kept
+            (6, "https://deep.x.ads.net:8080/f?q=1", "t"),  # nested sub
+            (7, "https://H1.EXAMPLE.com/g", "t"),  # case-folded host
+            (8, "https://x.ads.net/a", None),      # null in another column
         ],
-        "doc_id long, url string",
+        "doc_id long, url string, title string",
     )
     bl = spark.createDataFrame(
         [("ads.net",), ("H1.example.com",)], "domain string"
@@ -309,7 +310,8 @@ def test_url_blocklist_suffix_semantics(spark):
     assert out[5] == ("h14.example.com", False)
     assert out[6] == ("deep.x.ads.net", True)
     assert out[7] == ("h1.example.com", True)
-    assert len(out) == 7  # one row per input, no explode leakage
+    assert out[8] == ("x.ads.net", True)
+    assert len(out) == 8  # one row per input, no explode leakage
 
 
 def test_url_blocklist_plan_is_broadcast_hash(spark):

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from ocr_spark.functions.boilerplate_core import strip_boilerplate
 from ocr_spark.functions.voucher_core import extract_voucher_codes
 from ocr_spark.operators import extraction_inrow
-from ocr_spark.operators.extraction import extract_spans
 from ocr_spark.operators.extraction_inrow import run_extraction_inrow
 from ocr_spark.operators.ocr import recognize_blobs
 from ocr_spark.schemas import DOCUMENTS_SCHEMA
@@ -27,17 +26,23 @@ def _force_cold(monkeypatch) -> None:
     monkeypatch.setattr(extraction_inrow, "MAX_BROADCAST_REFS", -1)
 
 
+def _row(r):
+    """(doc_id, [(kind, text, media_ref, order)], codes) of one result row."""
+    return (
+        r["doc_id"],
+        [(s["kind"], s["text"], s["media_ref"], s["order"])
+         for s in r["out_spans"]],
+        list(r["codes"]),
+    )
+
+
 def _rows_to_dict(rows):
-    return {
-        r["doc_id"]: (
-            [
-                (s["kind"], s["text"], s["media_ref"], s["order"])
-                for s in r["out_spans"]
-            ],
-            list(r["codes"]),
-        )
-        for r in rows
-    }
+    return {d: (spans, codes) for d, spans, codes in map(_row, rows)}
+
+
+def _multiset(rows):
+    """Rows as a sorted list: documents that share a doc_id stay apart."""
+    return sorted(rows, key=repr)
 
 
 def _assert_golden(out, expected) -> None:
@@ -80,15 +85,21 @@ def test_empty_docs_survive(corpus_tables, monkeypatch):
         assert out.count() == n_docs
 
 
-def test_extracted_spans_shape(corpus_tables):
-    ext = extract_spans(corpus_tables["docs"], corpus_tables["blobs"])
-    assert set(ext.columns) == {
-        "doc_id", "offset", "pos", "kind", "text", "media_ref"}
-    # media spans got recognized text; text spans keep media_ref null
-    sample = ext.filter(F.col("kind") == "media").filter(
-        F.length("text") > 0
-    )
-    assert sample.count() > 0
+def test_extracted_spans_shape(corpus_tables, monkeypatch):
+    """Each out_spans element is (kind, text, media_ref, order), and media
+    spans get recognized text, in both regimes."""
+    for cold in (False, True):
+        if cold:
+            _force_cold(monkeypatch)
+        out = run_extraction_inrow(
+            corpus_tables["docs"], corpus_tables["blobs"])
+        span_type = out.schema["out_spans"].dataType.elementType
+        assert span_type.fieldNames() == [
+            "kind", "text", "media_ref", "order"]
+        media = out.select(F.explode(
+            F.filter("out_spans", lambda s: s["kind"] == F.lit("media"))
+        ).alias("s"))
+        assert media.filter(F.length("s.text") > 0).count() > 0, cold
 
 
 def test_ocr_singleton_initialized_once():
@@ -148,16 +159,16 @@ def test_recognized_map_covers_exactly_used_refs(corpus_tables, monkeypatch):
 
 def test_budget_guard_falls_back_to_shuffle_mode(corpus_tables, monkeypatch):
     """A batch whose recognized-media map exceeds the broadcast budget must
-    auto-fall-back to the shuffle-mode plan (no silent driver OOM path),
-    with identical results."""
+    auto-fall-back to the per-document media join (no silent driver OOM
+    path), with identical results."""
     docs, blobs = corpus_tables["docs"], corpus_tables["blobs"]
     expected = corpus_tables["expected"]
 
     with monkeypatch.context() as m:
         m.setattr(extraction_inrow, "MAX_BROADCAST_REFS", 1)
         out = run_extraction_inrow(docs, blobs)
-    # fallback plan reassembles via shuffle -> it has exchanges, unlike
-    # the zero-exchange in-row plan (tests/test_plans.py pins that)
+    # the fallback joins each document to its media -> it has exchanges,
+    # unlike the zero-exchange broadcast plan (tests/test_plans.py pins it)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" in plan
     _assert_golden(out, expected)
@@ -196,12 +207,16 @@ _TEXTS = [
 def _random_docs(rng: random.Random, refs: list[str], n_docs: int):
     rows = []
     for i in range(n_docs):
+        # a few rows reuse an earlier doc_id, and one in ~30 has none
+        roll = rng.random()
+        doc_id = (rng.choice(rows)[0] if rows and roll < 0.1
+                  else None if roll < 0.13 else f"d{i}")
         roll = rng.random()
         if roll < 0.08:
-            rows.append((f"d{i}", None))
+            rows.append((doc_id, None))
             continue
         if roll < 0.16:
-            rows.append((f"d{i}", []))
+            rows.append((doc_id, []))
             continue
         spans = []
         for _ in range(rng.randint(1, 7)):
@@ -214,15 +229,16 @@ def _random_docs(rng: random.Random, refs: list[str], n_docs: int):
                 rng.choice(refs + ["no-such-blob", None]),
                 rng.choice([None, rng.randint(0, 3), rng.randint(0, 900)]),
             ))
-        rows.append((f"d{i}", spans))
+        rows.append((doc_id, spans))
     return rows
 
 
 def _python_rules(rows, recognized: dict[str, str]):
     """The span rules in plain Python: sort by (offset nulls first, input
     position); text spans strip, every other span takes its recognized
-    text ('' without a blob); codes over the texts joined by newlines."""
-    out = {}
+    text ('' without a blob); codes over the texts joined by newlines.
+    Returns the rows as a multiset of (doc_id, spans, codes)."""
+    out = []
     for doc_id, spans in rows:
         spans = [s or (None, None, None, None) for s in spans or []]
         ordered = sorted(
@@ -238,38 +254,45 @@ def _python_rules(rows, recognized: dict[str, str]):
                 ref, offset,
             ))
         codes = extract_voucher_codes("\n".join(t for _, t, _, _ in res))
-        out[doc_id] = (res, codes)
-    return out
+        out.append((doc_id, res, codes))
+    return _multiset(out)
 
 
 def test_differential_front_door_fallback_python(spark, corpus_tables,
                                                  monkeypatch):
     """Random span arrays at three seeds: null/empty/null-element arrays,
     unsorted, tied and null offsets, null and unknown kinds, refs without a
-    blob, HTML edge cases and non-ASCII whitespace. The in-row path, the
-    forced fallback and the pure-Python rules agree row for row."""
+    blob, HTML edge cases and non-ASCII whitespace, and rows that share a
+    doc_id or have none. The in-row path, the forced fallback and the
+    pure-Python rules agree row for row."""
     all_refs = sorted(
         r[0] for r in corpus_tables["blobs"].select("media_ref").collect())
     pool = random.Random(5).sample(all_refs, min(16, len(all_refs)))
-    # a few blobs no span uses stay in the frame: the fallback recognizes
-    # them and must drop them in its left join
+    # blobs no span uses stay in the frame: the fallback recognizes them
+    # and must drop them in its join
     blobs = corpus_tables["blobs"].where(F.col("media_ref").isin(pool))
     pdf = recognize_blobs(blobs).toPandas()
     recognized = dict(zip(pdf["media_ref"], pdf["text"]))
     assert any(recognized.values())
+    # a null doc_id row whose ref no other row uses: in the cold regime
+    # only its own media column can resolve it
+    lone = next(r for r in pool[12:] if recognized.get(r))
 
     for seed in (1, 2, 3):
         rng = random.Random(seed)
         rows = _random_docs(rng, pool[:12], 60)
+        rows.append((None, [("media", None, lone, 0)]))
+        ids = [r[0] for r in rows if r[0] is not None]
+        assert len(set(ids)) < len(ids), "no doc_id repeats"
         docs = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
         want = _python_rules(rows, recognized)
         with monkeypatch.context() as m:
-            front = _rows_to_dict(run_extraction_inrow(docs, blobs).collect())
+            front = run_extraction_inrow(docs, blobs).collect()
             _force_cold(m)
-            cold = _rows_to_dict(run_extraction_inrow(docs, blobs).collect())
+            cold = run_extraction_inrow(docs, blobs).collect()
         for name, got in (("front door", front), ("fallback", cold)):
-            bad = [d for d in want if got.get(d) != want[d]]
-            assert set(got) == set(want) and not bad, (
-                f"seed {seed}, {name}: {len(bad)} docs differ; first "
-                f"{bad[:1]}: got={got.get(bad[0]) if bad else None}, "
-                f"want={want[bad[0]] if bad else None}")
+            got = _multiset(map(_row, got))
+            bad = [(g, w) for g, w in zip(got, want) if g != w]
+            assert len(got) == len(want) and not bad, (
+                f"seed {seed}, {name}: {len(got)} rows vs {len(want)}, "
+                f"{len(bad)} differ; first (got, want): {bad[:1]}")

@@ -41,7 +41,7 @@ def test_inrow_matches_golden(corpus_tables):
 
 def test_budget_guard_fallback_never_rebroadcasts(spark, corpus_tables,
                                                   monkeypatch):
-    """A past defect: the shuffle-mode fallback used to force
+    """A past defect: the cold-media fallback used to force
     F.broadcast on the same corpus-proportional recognized relation whose
     size tripped the guard. Pin the fix: when the guard trips, NO
     BroadcastExchange carries the recognized (media_ref, text) relation,

@@ -74,12 +74,11 @@ def test_extraction_no_pixel_exchange_both_regimes(spark, monkeypatch):
     """The invariant that holds in BOTH extraction regimes is 'pixel bytes
     never cross an exchange' — not 'broadcast everything'. The hot-media
     front door achieves it by pruning blobs with a broadcast semi-join on
-    the needed refs before recognizing; the cold-media (over-budget
-    fallback) plan by recognizing all blobs map-side and shuffling only
-    (ref, short text)."""
+    the needed refs before recognizing; the cold-media regime (forced with
+    a broadcast budget no batch fits) by recognizing all blobs map-side, so
+    its joins shuffle refs, short texts and documents, never pixels."""
     from ocr_spark.datagen import corpus_dir
     from ocr_spark.operators import extraction_inrow
-    from ocr_spark.operators.extraction import run_extraction_cold
     from plan_checks import exchange_inputs
 
     cdir = corpus_dir(0.001)
@@ -91,7 +90,10 @@ def test_extraction_no_pixel_exchange_both_regimes(spark, monkeypatch):
     monkeypatch.setattr(extraction_inrow, "recognized_map",
                         lambda p: pruned.append(p) or real(p))
     extraction_inrow.run_extraction_inrow(docs, blobs)
-    regimes = {"hot": pruned[0], "cold": run_extraction_cold(docs, blobs)}
+    monkeypatch.setattr(extraction_inrow, "MAX_BROADCAST_REFS", -1)
+    cold = extraction_inrow.run_extraction_inrow(docs, blobs)
+    assert len(pruned) == 1, "the cold regime built a broadcast map"
+    regimes = {"hot": pruned[0], "cold": cold}
     for regime, df in regimes.items():
         inputs = exchange_inputs(df)
         # both regimes shuffle something — an empty list would mean the
