@@ -921,24 +921,12 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(TAIL)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-Jaccard near-dup pairs — the deliberately quadratic oracle for
-    the LSH family (quadratic in near-dup CLUSTER size; at 100 TB run it
-    on samples — dedup.py docstring). At bench scale it runs the full
-    table: ~2.6s at sf0.1 once the InferFiltersFromGenerate blowup is
-    excluded (ocr_spark/session.py)."""
-    from ocr_spark.operators.dedup import ngram_jaccard_pairs
-
-    docs = _t(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.9)
-
-
-@query(TAIL)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup candidates (scale path). Full DuckDB oracle:
     the md5-derived affine hash family (functions/hashfam.py) is
-    recomputed verbatim in SQL; also pytest-checked against exact
-    Jaccard (tests/test_dedup_similarity.py)."""
+    recomputed verbatim in SQL; recall and estimates are also
+    pytest-checked against a pure-Python exact word-3-gram Jaccard
+    reference (tests/test_dedup_similarity.py::_exact_jaccard_pairs)."""
     from ocr_spark.operators.dedup import minhash_lsh_candidates
 
     docs = _t(spark, sf_dir, "documents")
@@ -1265,16 +1253,6 @@ def text_winnowing_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumnRenamed("id", "doc_id")
 
 
-@query(TAIL)
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs. Full DuckDB oracle (md5-chunk bit votes);
-    pytest-verified vs exact Jaccard overlap as well."""
-    from ocr_spark.operators.dedup import simhash_neardup_pairs
-
-    docs = _t(spark, sf_dir, "documents")
-    return simhash_neardup_pairs(docs, "doc_id", "text", max_hamming=3)
-
-
 # --------------------------------------------------------------------------
 # training-data pipeline: similarity search
 # --------------------------------------------------------------------------
@@ -1282,81 +1260,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 ANN_QUERY_IDS = [1, 2, 3, 4, 5]
 
 
-@query(TAIL)
-def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.operators.similarity import cosine_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = cosine_topk(emb, "vec_id", "embedding", ANN_QUERY_IDS, k=10)
-    return out.select(
-        "query_id", "neighbor_id", "cos_sim", F.col("rank").cast("long").alias("rank")
-    )
-
-
-@query(TAIL)
-def emb_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.operators.similarity import embedding_neardup_pairs
-
-    emb = _t(spark, sf_dir, "embeddings")
-    # Threshold calibrated to the driver embeddings (near-random vectors,
-    # max pair-sim 0.48..0.60): 0.40 keeps 66/59/920 pairs at
-    # sf0.001/0.01/0.1, so the pair generation + filter actually execute.
-    return embedding_neardup_pairs(emb, "vec_id", "embedding", threshold=0.40)
-
-
-@query(TAIL)
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed ANN (sublinear scale path). Full DuckDB oracle — the
-    md5-derived hyperplanes are inlined as SQL literals so buckets are
-    recomputed exactly; recall vs the exact baseline is pytest-verified
-    (tests/test_dedup_similarity.py)."""
-    from ocr_spark.operators.similarity import lsh_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = lsh_topk(emb, "vec_id", "embedding", ANN_QUERY_IDS, k=10, num_planes=8)
-    return out.select(
-        "query_id", "neighbor_id", "cos_sim", F.col("rank").cast("long").alias("rank")
-    )
-
-
-@query(TAIL)
-def emb_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH-bucketed near-dup pairs — the sublinear scale path
-    for embedding near-dup (full DuckDB oracle via inlined md5-derived
-    hyperplanes); recall vs the exact oracle pytest-checked."""
-    from ocr_spark.operators.similarity import lsh_neardup_pairs
-
-    emb = _t(spark, sf_dir, "embeddings")
-    # threshold 0.35 / 6 planes calibrated against the driver embeddings:
-    # 15/16/276 surviving bucketed pairs at sf0.001/0.01/0.1 (8 planes at
-    # higher thresholds collapse to 0 rows — a vacuous oracle).
-    return lsh_neardup_pairs(
-        emb, "vec_id", "embedding", threshold=0.35, num_planes=6
-    )
-
-
-@query(TAIL)
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN with a deterministic md5-derived coarse quantizer
-    (16 cells, nprobe=2). Full DuckDB oracle: centroids inlined, cell
-    assignment and probe ranking recomputed in SQL."""
-    from ocr_spark.operators.similarity import ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = ivf_topk(emb, "vec_id", "embedding", ANN_QUERY_IDS, k=10,
-                   num_centroids=16, nprobe=2)
-    return out.select(
-        "query_id", "neighbor_id", "cos_sim",
-        F.col("rank").cast("long").alias("rank"),
-    )
-
-
 @query(DRIVER)
 def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over a TRAINED coarse quantizer: distributed spherical
     k-means (Lloyd, 3 iterations, deterministic md5-hash seeding — no
-    RNG) replaces the fixed md5 codebook, then the same probed-cell
-    top-k. Full DuckDB oracle: the fixed iteration count unrolls the
+    RNG), then probed-cell top-k. Full DuckDB oracle: the fixed iteration count unrolls the
     whole training into a chain of assign/aggregate CTEs
     (`_ann_ivf_trained_oracle`), and the 9-decimal codebook rounding in
     `train_ivf_centroids` pins both engines to the identical quantizer.
@@ -1367,8 +1275,8 @@ def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     cents = train_ivf_centroids(emb, "vec_id", "embedding",
                                 num_centroids=16, iters=3)
-    out = ivf_topk(emb, "vec_id", "embedding", ANN_QUERY_IDS, k=10,
-                   num_centroids=16, nprobe=2, centroids=cents)
+    out = ivf_topk(emb, "vec_id", "embedding", ANN_QUERY_IDS, cents,
+                   k=10, nprobe=2)
     return out.select(
         "query_id", "neighbor_id", "cos_sim",
         F.col("rank").cast("long").alias("rank"),
@@ -1414,8 +1322,7 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     cents = train_ivf_centroids(emb, "vec_id", "embedding",
                                 num_centroids=16, iters=3)
-    return semantic_dedup(emb, "vec_id", "embedding", SEMDEDUP_TAU,
-                          num_centroids=16, centroids=cents)
+    return semantic_dedup(emb, "vec_id", "embedding", SEMDEDUP_TAU, cents)
 
 
 @query(TAIL)
@@ -2371,185 +2278,6 @@ def _bigstar_components_oracle() -> str:
     """
 
 
-def _simhash_oracle(max_hamming: int = 3, prefix_bands: int = 4) -> str:
-    """DuckDB twin of dedup.simhash_neardup_pairs: md5-chunk bit votes,
-    two's-complement 64-bit pack (bit 63 via min-long add), slice banding."""
-    from ocr_spark.functions.hashfam import SQL_MIN_LONG, sql_chunk32
-
-    votes = ",\n                 ".join(
-        "sum(CASE WHEN (({src} >> {sh}) & 1) = 1 THEN 1 ELSE -1 END) AS v{j}"
-        .format(src="h_lo" if j < 32 else "h_hi", sh=j % 32, j=j)
-        for j in range(64)
-    )
-    pack = " + ".join(
-        [f"(CASE WHEN v63 > 0 THEN {SQL_MIN_LONG} ELSE 0::BIGINT END)"]
-        + [
-            f"(CASE WHEN v{j} > 0 THEN (1::BIGINT << {j}) ELSE 0::BIGINT END)"
-            for j in range(63)
-        ]
-    )
-    slice_width = 64 // prefix_bands
-    band_selects = "\n          UNION ALL ".join(
-        f"SELECT doc_id, simhash, {i} AS band,"
-        f" (simhash >> {i * slice_width}) & {(1 << slice_width) - 1} AS band_key"
-        " FROM fp"
-        for i in range(prefix_bands)
-    )
-    return rf"""
-        WITH toks AS (
-          SELECT doc_id,
-                 unnest(string_split_regex(trim(text), '\s+')) AS tok
-          FROM documents
-        ), th AS (
-          SELECT doc_id,
-                 {sql_chunk32('tok', 0)} AS h_lo,
-                 {sql_chunk32('tok', 1)} AS h_hi
-          FROM toks WHERE length(tok) > 0
-        ), votes AS (
-          SELECT doc_id,
-                 {votes}
-          FROM th GROUP BY doc_id
-        ), fp AS (
-          SELECT doc_id, ({pack}) AS simhash FROM votes
-        ), banded AS (
-          {band_selects}
-        )
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-               bit_count(xor(a.simhash, b.simhash))::BIGINT AS hamming
-        FROM banded a JOIN banded b
-          ON a.band = b.band AND a.band_key = b.band_key
-             AND a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
-    """
-
-
-def _lsh_bucket_sql(num_planes: int, dim: int, vec: str = "vec") -> str:
-    """Sign-bucket SQL expression over inlined md5-derived hyperplanes
-    (same raw-vector float64 dot, same strict > 0 sign rule as Spark)."""
-    from ocr_spark.functions.hashfam import hyperplanes
-
-    planes = hyperplanes(num_planes, dim)
-    return " + ".join(
-        "(CASE WHEN list_dot_product({v}, [{vals}]::DOUBLE[]) > 0"
-        " THEN {w}::BIGINT ELSE 0::BIGINT END)".format(
-            v=vec, vals=", ".join(repr(x) for x in p), w=1 << i
-        )
-        for i, p in enumerate(planes)
-    )
-
-
-def _ann_lsh_oracle(num_planes: int = 8, dim: int = 64, k: int = 10) -> str:
-    """DuckDB twin of similarity.lsh_topk: the md5-derived hyperplanes are
-    inlined as DOUBLE[] literals, so bucket assignment is recomputed
-    exactly."""
-    bucket = _lsh_bucket_sql(num_planes, dim)
-    qids = ", ".join(str(q) for q in ANN_QUERY_IDS)
-    return f"""
-        WITH base AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec,
-                 sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                                       CAST(embedding AS DOUBLE[]))) AS norm
-          FROM embeddings
-        ), bucketed AS (
-          SELECT vec_id, vec, norm, ({bucket}) AS bucket FROM base
-        ), q AS (
-          SELECT vec_id AS query_id, vec AS qvec, norm AS qnorm,
-                 bucket AS qbucket
-          FROM bucketed WHERE vec_id IN ({qids})
-        ), scored AS (
-          SELECT q.query_id, b.vec_id AS neighbor_id,
-                 round(list_dot_product(b.vec, q.qvec)
-                       / (b.norm * q.qnorm), 6) AS cos_sim
-          FROM bucketed b JOIN q
-            ON b.bucket = q.qbucket AND b.vec_id <> q.query_id
-        )
-        SELECT query_id, neighbor_id, cos_sim, rank FROM (
-          SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-          FROM scored
-        ) WHERE rank <= {k}
-    """
-
-
-def _emb_neardup_lsh_oracle(num_planes: int = 8, dim: int = 64,
-                            threshold: float = 0.9) -> str:
-    """DuckDB twin of similarity.lsh_neardup_pairs: bucketed self-join on
-    the inlined hyperplane sign-bucket, cosine filter on the rounded
-    value (matching the Spark filter order)."""
-    bucket = _lsh_bucket_sql(num_planes, dim)
-    return f"""
-        WITH base AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec,
-                 sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                                       CAST(embedding AS DOUBLE[]))) AS norm
-          FROM embeddings
-        ), bucketed AS (
-          SELECT vec_id, vec, norm, ({bucket}) AS bucket FROM base
-        )
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               round(list_dot_product(a.vec, b.vec)
-                     / (a.norm * b.norm), 6) AS cos_sim
-        FROM bucketed a JOIN bucketed b
-          ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-        WHERE round(list_dot_product(a.vec, b.vec)
-                    / (a.norm * b.norm), 6) >= {threshold}
-    """
-
-
-def _ann_ivf_oracle(num_centroids: int = 16, dim: int = 64,
-                    nprobe: int = 2, k: int = 10) -> str:
-    """DuckDB twin of similarity.ivf_topk: unit centroids inlined, cell =
-    first-argmax of the centroid dots (list_position on list_max = first
-    index, matching np.argmax), probes = row_number over (dot DESC, index
-    ASC) — the same tie rule as the Spark-side lexsort."""
-    from ocr_spark.operators.similarity import _ivf_centroids
-
-    cents = _ivf_centroids(dim, num_centroids)
-    dots = ", ".join(
-        "list_dot_product(vec, [{vals}]::DOUBLE[])".format(
-            vals=", ".join(repr(x) for x in c))
-        for c in cents
-    )
-    qids = ", ".join(str(q) for q in ANN_QUERY_IDS)
-    return f"""
-        WITH base AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec,
-                 sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                                       CAST(embedding AS DOUBLE[]))) AS norm
-          FROM embeddings
-        ), cd AS (
-          SELECT vec_id, vec, norm, [{dots}] AS cdots FROM base
-        ), assigned AS (
-          SELECT vec_id, vec, norm,
-                 list_position(cdots, list_max(cdots)) - 1 AS cell
-          FROM cd
-        ), q AS (
-          SELECT vec_id AS query_id, vec AS qvec, norm AS qnorm, cdots
-          FROM cd WHERE vec_id IN ({qids})
-        ), qprobe AS (
-          SELECT query_id, qvec, qnorm, i - 1 AS cell
-          FROM (
-            SELECT q.*, unnest(generate_series(1, {num_centroids})) AS i
-            FROM q
-          )
-          QUALIFY row_number() OVER (
-            PARTITION BY query_id ORDER BY cdots[i] DESC, i ASC
-          ) <= {nprobe}
-        ), scored AS (
-          SELECT p.query_id, a.vec_id AS neighbor_id,
-                 round(list_dot_product(a.vec, p.qvec)
-                       / (a.norm * p.qnorm), 6) AS cos_sim
-          FROM assigned a JOIN qprobe p
-            ON a.cell = p.cell AND a.vec_id <> p.query_id
-        )
-        SELECT query_id, neighbor_id, cos_sim, rank FROM (
-          SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-          FROM scored
-        ) WHERE rank <= {k}
-    """
-
-
 def _ivf_trained_fassign_ctes(num_centroids: int = 16, dim: int = 64,
                               iters: int = 3) -> str:
     """Shared CTE prefix for every trained-quantizer oracle: spherical
@@ -2618,8 +2346,9 @@ def _ann_ivf_trained_oracle(num_centroids: int = 16, dim: int = 64,
                             nprobe: int = 2, k: int = 10,
                             iters: int = 3) -> str:
     """DuckDB twin of train_ivf_centroids + ivf_topk: the shared
-    trained-quantizer prefix (`_ivf_trained_fassign_ctes`), then the
-    probe/rank tail of `_ann_ivf_oracle`."""
+    trained-quantizer prefix (`_ivf_trained_fassign_ctes`), then each
+    query probes its `nprobe` nearest cells (dot DESC, cell ASC — the
+    Spark-side lexsort) and ranks the vectors assigned there."""
     prefix = _ivf_trained_fassign_ctes(num_centroids, dim, iters)
     qids = ", ".join(str(q) for q in ANN_QUERY_IDS)
     return f"""
@@ -3279,60 +3008,6 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS n_dups
             FROM doubled GROUP BY 1
         """,
-        "dedup_ngram_jaccard": r"""
-            WITH toks AS (
-              SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
-            ), sh AS (
-              SELECT doc_id,
-                     list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                    for i in generate_series(1, len(w) - 2)]) AS shingles
-              FROM toks WHERE len(w) >= 3
-            ), e AS (
-              SELECT doc_id, unnest(shingles) AS s, len(shingles) AS n FROM sh
-            ), pairs AS (
-              SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                     count(*) AS common,
-                     any_value(a.n) AS n_a, any_value(b.n) AS n_b
-              FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY 1, 2
-            )
-            SELECT id_a, id_b, common, n_a, n_b,
-                   round(common / (n_a + n_b - common), 4) AS jaccard
-            FROM pairs
-            WHERE common / (n_a + n_b - common) >= 0.9
-        """,
-        "ann_cosine_topk": """
-            WITH base AS (
-              SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec,
-                     sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                                           CAST(embedding AS DOUBLE[]))) AS norm
-              FROM embeddings
-            ), q AS (
-              SELECT vec_id AS query_id, vec AS qvec, norm AS qnorm
-              FROM base WHERE vec_id IN (1, 2, 3, 4, 5)
-            ), scored AS (
-              SELECT q.query_id, b.vec_id AS neighbor_id,
-                     round(list_dot_product(b.vec, q.qvec) / (b.norm * q.qnorm), 6) AS cos_sim
-              FROM base b, q WHERE b.vec_id <> q.query_id
-            )
-            SELECT query_id, neighbor_id, cos_sim, rank FROM (
-              SELECT *, row_number() OVER (
-                PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-              FROM scored
-            ) WHERE rank <= 10
-        """,
-        "emb_neardup_pairs": """
-            WITH base AS (
-              SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec,
-                     sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                                           CAST(embedding AS DOUBLE[]))) AS norm
-              FROM embeddings
-            )
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   round(list_dot_product(a.vec, b.vec) / (a.norm * b.norm), 6) AS cos_sim
-            FROM base a JOIN base b ON a.vec_id < b.vec_id
-            WHERE round(list_dot_product(a.vec, b.vec) / (a.norm * b.norm), 6) >= 0.4
-        """,
         # Hash-family queries: the md5-derived family (functions/hashfam.py)
         # is engine-neutral, so these get full value-hash oracles too.
         "text_winnowing_fp": r"""
@@ -3570,10 +3245,6 @@ def oracle_sql() -> dict[str, str]:
         "q5_sessionization": _SESSIONIZATION_ORACLE,
         "j5_asof_last_purchase": _ASOF_ORACLE,
         "a9_value_percentiles": _PERCENTILES_ORACLE,
-        "dedup_simhash": _simhash_oracle(),
-        "ann_lsh_topk": _ann_lsh_oracle(),
-        "emb_neardup_lsh": _emb_neardup_lsh_oracle(num_planes=6, threshold=0.35),
-        "ann_ivf_topk": _ann_ivf_oracle(),
         "ann_ivf_trained_topk": _ann_ivf_trained_oracle(),
         "semantic_dedup": _semantic_dedup_oracle(SEMDEDUP_TAU),
         "sketch_distinct_tokens": _sketch_distinct_tokens_oracle(),

@@ -449,7 +449,7 @@ def main() -> None:
             "dedup_substring_trim",
             "nb_quality_classifier",
             "graph_pagerank",
-            "ann_ivf_topk",
+            "ann_ivf_trained_topk",
             "text_line_dedup",
         )
         if q in timings

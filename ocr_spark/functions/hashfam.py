@@ -1,4 +1,4 @@
-"""Engine-neutral hash family for MinHash / SimHash / hyperplane LSH.
+"""Engine-neutral md5 hash family for MinHash and the IVF pad codebook.
 
 Everything here is derived from md5 so that BOTH engines (Spark Catalyst
 and the DuckDB SQL oracle) can compute bit-identical values:
@@ -6,11 +6,12 @@ and the DuckDB SQL oracle) can compute bit-identical values:
   * base60(s)   = int(md5(s).hexdigest()[:15], 16)          -- 60-bit uint
     Spark : conv(substring(md5(s), 1, 15), 16, 10) :: long
     DuckDB: ('0x' || substr(md5(s), 1, 15)) :: BIGINT
-  * chunk32(s,k)= int(md5(s).hexdigest()[8k : 8k+8], 16)     -- 32-bit uint
   * MinHash_i(s)= (a_i * (base60(s) % P) + b_i) % P with P = 2^31 - 1 and
     (a_i, b_i) themselves md5-derived constants.  a_i * base < 2^62 so the
     arithmetic never overflows a signed 64-bit integer in either engine.
-  * hyperplane[i][d] = 2 * base60(f"plane:{i}:{d}") / 2^60 - 1 in [-1, 1).
+  * ivf centroid[i][d] = 2 * base60(f"ivf:{i}:{d}") / 2^60 - 1 in [-1, 1),
+    row-normalized: the start and pad rows of a trained IVF codebook
+    (operators/similarity.py _ivf_centroids).
 
 The affine-over-one-md5 scheme exists for speed as much as neutrality:
 round 1 computed 64 independent xxhash64(string) aggregates per shingle
@@ -34,10 +35,6 @@ MINHASH_P = 2_147_483_647
 
 TWO_60 = 1 << 60
 
-# DuckDB parses -9223372036854775808 as -(9223372036854775808) which
-# overflows INT64 before negation; spell min-long as an expression.
-SQL_MIN_LONG = "(-9223372036854775807 - 1)"
-
 
 def md5_base60(s: str) -> int:
     """First 15 hex chars of md5 as an unsigned 60-bit int (Python side)."""
@@ -52,20 +49,6 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
             md5_base60(f"mh:b:{i}") % MINHASH_P,
         )
         for i in range(num_hashes)
-    ]
-
-
-def hyperplanes(num_planes: int, dim: int) -> list[list[float]]:
-    """Deterministic hyperplanes with entries uniform in [-1, 1).
-
-    Uniform (not gaussian) entries are still a valid random projection for
-    sign-LSH bucketing, and — unlike np.random.RandomState — any engine
-    can recompute them from md5 alone, so the DuckDB oracle inlines these
-    exact values as literals.
-    """
-    return [
-        [2.0 * md5_base60(f"plane:{i}:{d}") / TWO_60 - 1.0 for d in range(dim)]
-        for i in range(num_planes)
     ]
 
 
@@ -88,6 +71,3 @@ def spark_base60(col: Column | str) -> Column:
 def sql_base60(expr: str) -> str:
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT % {MINHASH_P})"
 
-
-def sql_chunk32(expr: str, k: int) -> str:
-    return f"(('0x' || substr(md5({expr}), {8 * k + 1}, 8))::BIGINT)"

@@ -1,22 +1,20 @@
 """Deduplication operators for large-scale text corpora.
 
-Exact (hash groupBy), n-gram Jaccard (shingle self-join), MinHash+LSH
-(banded signature bucketing — the scale path), and SimHash (bit-sliced
-fingerprints). All are pure DataFrame ops; nothing leaves the JVM.
+Exact (hash groupBy), MinHash+LSH near-dup candidates (banded signature
+bucketing — the scale path), winnowing fingerprints, exact shared
+substring runs, candidate pairs -> clusters (large-star/small-star
+connected components) and per-cluster keep-best. All are pure DataFrame
+ops; nothing leaves the JVM.
 
 Scale notes:
   * exact/fingerprint dedup is one shuffle on a 32-hex key — trivially
     balanced.
-  * ngram_jaccard_pairs is the O(pairs-sharing-a-shingle) exact method:
-    correct but quadratic against near-identical clusters; it is the
-    *oracle* for the sublinear methods and should only run on samples or
-    small SFs at 100 TB.
-  * minhash_lsh_candidates is the production path: k minhashes, b bands —
-    candidate generation cost is O(docs * b) shuffle rows and never
-    materializes the full pair matrix. Hot shingles do not skew it because
-    signatures aggregate per-doc before banding.
-  * simhash buckets by 16-bit prefix bands; verification is bit_count(xor)
-    on 64-bit fingerprints — cheap enough to run on all candidate pairs.
+  * minhash_lsh_candidates is the production near-dup path: k minhashes,
+    b bands — candidate generation cost is O(docs * b) shuffle rows and
+    never materializes the full pair matrix. Hot shingles do not skew it
+    because signatures aggregate per-doc before banding. Its recall and
+    Jaccard estimates are pytest-checked against a pure-Python exact
+    Jaccard reference.
 """
 
 from __future__ import annotations
@@ -71,39 +69,6 @@ def word_shingles(
         ).alias("shingles"),
     ).filter(F.size("w") >= n)
     return grams.select("id", F.explode("shingles").alias("shingle"))
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.9,
-) -> DataFrame:
-    """Exact Jaccard near-dup pairs via shingle self-join.
-
-    Returns (id_a, id_b, common, n_a, n_b, jaccard) with id_a < id_b and
-    jaccard >= threshold. Quadratic in cluster size — the oracle method.
-    """
-    sh = word_shingles(df, id_col, text_col, n)
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("common"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_shingles").alias("n_b"))
-    jac = F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common"))
-    return (
-        common.join(sa, "id_a").join(sb, "id_b")
-        .withColumn("jaccard", F.round(jac, 4))
-        .filter(jac >= threshold)
-        .select("id_a", "id_b", "common", "n_a", "n_b", "jaccard")
-    )
 
 
 def minhash_signatures(
@@ -285,98 +250,6 @@ def winnowing_fingerprints(
     )
 
 
-def simhash_fingerprints(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """64-bit SimHash per document: (id, simhash long).
-
-    Token hashes vote per bit; fingerprint bit j is 1 iff the weighted sum
-    of bit-j votes is positive. Entirely Catalyst expressions: explode ->
-    64 conditional sums -> bit pack.
-
-    Engine-neutral hash family: the 64 token-hash bits are the first two
-    32-bit chunks of md5(token) (functions/hashfam.py), computed once per
-    token row in a projection BEFORE the aggregate so the md5 is not
-    re-evaluated per bit lane.
-    """
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.trim(F.col(text_col)), WS_SPLIT)).alias("tok"),
-    ).filter(F.length("tok") > 0)
-    # md5 once per token row; both 32-bit chunks come from the one hex col
-    toks = toks.select("id", F.md5("tok").alias("hx")).select(
-        "id",
-        F.conv(F.substring("hx", 1, 8), 16, 10).cast("long").alias("h_lo"),
-        F.conv(F.substring("hx", 9, 8), 16, 10).cast("long").alias("h_hi"),
-    )
-    votes = [
-        F.sum(
-            F.when(
-                F.shiftright(
-                    F.col("h_lo") if j < 32 else F.col("h_hi"), j % 32
-                ).bitwiseAND(F.lit(1))
-                == 1,
-                1,
-            ).otherwise(-1)
-        ).alias(f"v{j}")
-        for j in range(64)
-    ]
-    agg = toks.groupBy("id").agg(*votes)
-    packed = None
-    for j in range(64):
-        bit = F.when(F.col(f"v{j}") > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        term = F.shiftleft(bit, j)
-        packed = term if packed is None else packed.bitwiseXOR(term)
-    return agg.select("id", packed.alias("simhash"))
-
-
-def simhash_neardup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    prefix_bands: int = 4,
-) -> DataFrame:
-    """SimHash near-dup pairs: band by 16-bit slices (a pair within
-    hamming distance <= 3 must agree exactly on at least one of 4 slices),
-    verify with bit_count(xor). Returns (id_a, id_b, hamming)."""
-    fp = simhash_fingerprints(df, id_col, text_col)
-    slice_width = 64 // prefix_bands
-    banded = fp.select(
-        "id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright("simhash", i * slice_width)
-                    .bitwiseAND(F.lit((1 << slice_width) - 1))
-                    for i in range(prefix_bands)
-                ]
-            )
-        ).alias("band", "band_key"),
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .filter(hamming <= max_hamming)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            hamming.cast("long").alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
 def _bigstar_edges(
     pairs: DataFrame, id_a: str, id_b: str, max_rounds: int,
 ) -> tuple[DataFrame, int]:
@@ -491,9 +364,8 @@ def bigstar_components(
 ) -> DataFrame:
     """Connected components in O(log n) rounds: the large-star/small-star
     alternation (Kiveris et al. 2014, "Connected Components in MapReduce
-    and Beyond"): the bridge from candidate PAIRS (minhash_lsh_candidates
-    / simhash_neardup_pairs / similarity.lsh_neardup_pairs) to duplicate
-    CLUSTERS, so curation can keep one representative per component
+    and Beyond"): the bridge from candidate PAIRS (minhash_lsh_candidates)
+    to duplicate CLUSTERS, so curation can keep one representative per component
     instead of per pair.
 
     It covers graphs whose diameter no fixed iteration count covers —

@@ -1,14 +1,15 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search and semantic dedup over embedding columns
+(array<float>).
 
-Brute-force cosine top-k (exact baseline, SQL-oracle-checkable) and a
-random-hyperplane LSH-bucketed variant (the sublinear scale path).
+IVF approximate top-k over a trained coarse quantizer (distributed
+spherical k-means), SemDeDup pruning inside the quantizer's cells, and
+semantic benchmark decontamination.
 
-Execution shape: the small side (query set / hyperplanes / — for the
-all-pairs oracle — the whole normalized matrix) is broadcast as a numpy
-array; each Arrow batch of the big side does ONE float64 matmul against
-it inside mapInPandas. No per-pair Catalyst fold, no crossJoin row
-explosion: similarity math runs at BLAS speed and only (id, id, sim)
-survivors leave Python.
+Execution shape: the small side (the codebook / the query probes / the
+eval matrix) is broadcast as a numpy array; each Arrow batch of the big
+side does ONE float64 matmul against it inside mapInPandas. No per-pair
+Catalyst fold over the whole table, no crossJoin row explosion:
+similarity math runs at BLAS speed and only survivors leave Python.
 
 Numeric discipline: all math in float64, results rounded to 6 dp on both
 engine and oracle sides. numpy's pairwise summation differs from the
@@ -16,15 +17,14 @@ oracle's sequential fold by ~1e-15 relative — eleven orders of magnitude
 below the rounding quantum.
 
 Scale notes (100 TB):
-  * cosine_topk broadcasts only the query matrix; work is one scan of the
-    embedding table + a tiny per-query top-k shuffle. Linear in rows.
-  * embedding_neardup_pairs broadcasts the full normalized matrix — the
-    EXACT O(n^2) oracle, intended for samples/small SFs; the production
-    near-dup path is LSH bucketing (minhash/simhash for text,
-    hyperplane buckets here).
-  * lsh_topk buckets by sign-bit prefixes of hyperplane projections:
-    candidate generation is an equi-join on a short int key, so the pair
-    matrix is never materialized. Recall tunable via num_planes.
+  * train_ivf_centroids: one scan per Lloyd iteration; each batch emits
+    at most k partial sums, so the shuffle never carries vectors.
+  * ivf_topk: cell assignment is one scan + matmul; candidates come from
+    an equi-join on a small int cell key against the broadcast probe
+    list, so the pair matrix is never materialized. Recall tunable via
+    nprobe.
+  * semantic_dedup: one shuffle (groupBy cell), chunked per-cell gram.
+  * semantic_contamination: broadcast eval matrix, zero shuffles.
 """
 
 from __future__ import annotations
@@ -50,171 +50,21 @@ def _id_sql_type(df: DataFrame, id_col: str) -> str:
     return df.schema[id_col].dataType.simpleString()
 
 
-def _normalized_rows(df: DataFrame, id_col: str, vec_col: str):
-    """Collect (ids, unit-row matrix) to the driver for broadcasting."""
-    pdf = df.select(id_col, vec_col).toPandas()
-    ids = pdf[id_col].to_numpy()
-    mat = _matrix(pdf[vec_col])
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0] = 1.0
-    return ids, mat / norms[:, None]
-
-
-def cosine_topk(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_ids: list[int],
-    k: int = 10,
-) -> DataFrame:
-    """Exact top-k cosine neighbors for each query id.
-
-    Returns (query_id, neighbor_id, cos_sim, rank); self excluded; ties
-    broken by neighbor_id ascending (deterministic across engines).
-    """
-    spark = emb.sparkSession
-    q_ids, q_mat = _normalized_rows(
-        emb.filter(F.col(id_col).isin(query_ids)), id_col, vec_col
-    )
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
-
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..blas_pin import pin_blas_single_thread
-
-        pin_blas_single_thread()
-        qids, qmat = bc.value
-        for pdf in batches:
-            mat = _matrix(pdf["vec"])
-            norms = np.linalg.norm(mat, axis=1)
-            norms[norms == 0] = 1.0
-            sims = (mat / norms[:, None]) @ qmat.T  # (batch, n_queries)
-            n, m = sims.shape
-            yield pd.DataFrame({
-                "query_id": np.repeat(qids[None, :], n, axis=0).ravel(),
-                "neighbor_id": np.repeat(pdf["id"].to_numpy(), m),
-                "cos_sim": np.round(sims.ravel(), 6),
-            })
-
-    id_t = _id_sql_type(emb, id_col)
-    scored = (
-        emb.select(F.col(id_col).alias("id"),
-                   F.col(vec_col).cast("array<double>").alias("vec"))
-        .mapInPandas(
-            _score,
-            schema=f"query_id {id_t}, neighbor_id {id_t}, cos_sim double",
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
-
-
-def embedding_neardup_pairs(
-    emb: DataFrame, id_col: str, vec_col: str, threshold: float = 0.95
-) -> DataFrame:
-    """Brute-force cosine near-dup pairs (id_a < id_b, sim >= threshold).
-
-    Exact O(n^2) baseline / oracle: the full unit matrix is broadcast and
-    each batch matmuls against it. Use LSH bucketing beyond small SFs.
-    """
-    spark = emb.sparkSession
-    all_ids, all_mat = _normalized_rows(emb, id_col, vec_col)
-    bc = spark.sparkContext.broadcast((all_ids, all_mat))
-
-    def _pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..blas_pin import pin_blas_single_thread
-
-        pin_blas_single_thread()
-        ids_b, mat_b = bc.value
-        for pdf in batches:
-            mat = _matrix(pdf["vec"])
-            norms = np.linalg.norm(mat, axis=1)
-            norms[norms == 0] = 1.0
-            sims = (mat / norms[:, None]) @ mat_b.T
-            ids_a = pdf["id"].to_numpy()
-            sims = np.round(sims, 6)
-            keep = (sims >= threshold) & (ids_a[:, None] < ids_b[None, :])
-            ai, bi = np.nonzero(keep)
-            yield pd.DataFrame({
-                "id_a": ids_a[ai],
-                "id_b": ids_b[bi],
-                "cos_sim": sims[ai, bi],
-            })
-
-    id_t = _id_sql_type(emb, id_col)
-    return (
-        emb.select(F.col(id_col).alias("id"),
-                   F.col(vec_col).cast("array<double>").alias("vec"))
-        .mapInPandas(
-            _pairs, schema=f"id_a {id_t}, id_b {id_t}, cos_sim double"
-        )
-    )
-
-
-def lsh_neardup_pairs(
-    emb: DataFrame, id_col: str, vec_col: str,
-    threshold: float = 0.9, num_planes: int = 8,
-) -> DataFrame:
-    """Hyperplane-LSH-bucketed cosine near-dup pairs — the sublinear
-    production path for embedding near-dup (vs the exact O(n^2) oracle
-    embedding_neardup_pairs). Candidates share a sign-bucket, so the pair
-    matrix is never materialized; recall < 1 by design (a near-dup pair
-    straddling a hyperplane is missed — tested against the exact oracle
-    for containment). Returns (id_a, id_b, cos_sim)."""
-    base = with_lsh_buckets(emb, id_col, vec_col, num_planes)
-    a = base.alias("a")
-    b = base.alias("b")
-    dot = F.aggregate(
-        F.zip_with("a.vec", "b.vec", lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    cos = dot / (F.col("a.norm") * F.col("b.norm"))
-    return (
-        a.join(b, (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.id") < F.col("b.id")))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.round(cos, 6).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
-
-
 # --------------------------------------------------------------------------
-# IVF-style ANN: deterministic coarse quantizer + probed cells
+# IVF-style ANN: trained coarse quantizer + probed cells
 # --------------------------------------------------------------------------
 
 def _ivf_centroids(dim: int, num_centroids: int) -> np.ndarray:
-    """Unit-norm md5-derived centroids (functions/hashfam.py) — a fixed
-    coarse quantizer instead of a trained k-means codebook, so the DuckDB
-    oracle can inline the exact values and recompute cell assignment."""
-    from ..functions import hashfam
-
+    """Unit-norm md5-derived centroids (functions/hashfam.py): the
+    deterministic codebook `train_ivf_centroids` starts from. Rows that
+    no seed vector fills (fewer vectors than centroids) keep these
+    values, so the trained codebook always has its full shape."""
     c = np.asarray(
         [[2.0 * hashfam.md5_base60(f"ivf:{i}:{d}") / hashfam.TWO_60 - 1.0
           for d in range(dim)] for i in range(num_centroids)],
         dtype=np.float64,
     )
     return c / np.linalg.norm(c, axis=1)[:, None]
-
-
-def _vec_dim(emb: DataFrame, vec_col: str) -> int:
-    """Embedding width from one driver job (first non-null row).
-
-    Raises ValueError on an empty input instead of the TypeError that
-    ``first()[0]`` would produce. Callers that already hold a vector
-    (e.g. a collected query set) pass ``dim`` through instead."""
-    row = emb.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
-    if row is None:
-        raise ValueError(f"cannot infer dim: no rows with non-null {vec_col}")
-    return len(row[0])
 
 
 def train_ivf_centroids(
@@ -226,8 +76,8 @@ def train_ivf_centroids(
     round_decimals: int | None = 9,
 ) -> np.ndarray:
     """Distributed spherical k-means (Lloyd) — a TRAINED coarse quantizer
-    for IVF, vs the fixed md5 codebook of `_ivf_centroids`. Iterative,
-    but still fully SQL-oracle-able: with a fixed iteration count the
+    for IVF and SemDeDup cells. Iterative, but still fully
+    SQL-oracle-able: with a fixed iteration count the
     whole training unrolls into a chain of assign/aggregate CTEs (see
     `__spark_entry__._ann_ivf_trained_oracle`), and `round_decimals`
     pins each intermediate codebook to a decimal grid so cross-engine
@@ -327,19 +177,12 @@ def train_ivf_centroids(
 
 
 def with_ivf_cells(
-    emb: DataFrame, id_col: str, vec_col: str, num_centroids: int = 16,
-    dim: int | None = None, centroids: np.ndarray | None = None,
+    emb: DataFrame, id_col: str, vec_col: str, centroids: np.ndarray,
 ) -> DataFrame:
-    """(id, vec, norm, cell): cell = argmax dot(vec, unit centroid) —
-    first index wins ties (matches the oracle's row_number rule). One
-    matmul per Arrow batch. `centroids` overrides the fixed md5 codebook
-    (pass a `train_ivf_centroids` result for the trained quantizer)."""
-    if centroids is not None:
-        dim = centroids.shape[1]
-    if dim is None:
-        dim = _vec_dim(emb, vec_col)
-    if centroids is None:
-        centroids = _ivf_centroids(dim, num_centroids)
+    """(id, vec, norm, cell): cell = argmax dot(vec, unit centroid) over
+    the (num_centroids, dim) codebook `centroids` (a
+    `train_ivf_centroids` result) — first index wins ties (matches the
+    oracle's row_number rule). One matmul per Arrow batch."""
     spark = emb.sparkSession
     bc = spark.sparkContext.broadcast(centroids)
 
@@ -369,20 +212,18 @@ def ivf_topk(
     id_col: str,
     vec_col: str,
     query_ids: list[int],
+    centroids: np.ndarray,
     k: int = 10,
-    num_centroids: int = 16,
     nprobe: int = 2,
-    centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF-style approximate top-k: each query probes its `nprobe`
-    nearest cells and ranks only the vectors assigned there. `centroids`
-    swaps in a trained codebook (train_ivf_centroids) for the fixed
-    md5 quantizer.
+    nearest cells of the codebook `centroids` (a `train_ivf_centroids`
+    result) and ranks only the vectors assigned there.
 
     Scale shape: cell assignment is one scan + matmul; the candidate join
     is an equi-join on a small int key (no pair matrix); each query's
     probe list is tiny and broadcast. Recall < 1 by design (tested for
-    overlap vs the exact baseline). Returns (query_id, neighbor_id,
+    overlap vs an exact numpy top-k). Returns (query_id, neighbor_id,
     cos_sim, rank)."""
     spark = emb.sparkSession
 
@@ -392,16 +233,7 @@ def ivf_topk(
                 F.col(vec_col).cast("array<double>").alias("qvec"))
         .toPandas()
     )
-    # dim comes from the query vectors already collected — zero extra
-    # driver jobs (round-2 ran emb.first() twice per invocation here).
-    if len(qpdf):
-        dim = len(qpdf["qvec"].iloc[0])
-    else:
-        dim = _vec_dim(emb, vec_col)  # raises cleanly on empty input
-    base = with_ivf_cells(emb, id_col, vec_col, num_centroids, dim=dim,
-                          centroids=centroids)
-    if centroids is None:
-        centroids = _ivf_centroids(dim, num_centroids)
+    base = with_ivf_cells(emb, id_col, vec_col, centroids)
     qmat = _matrix(qpdf["qvec"])
     qnorms = np.linalg.norm(qmat, axis=1)
     qnorms[qnorms == 0] = 1.0
@@ -446,102 +278,18 @@ def ivf_topk(
     )
 
 
-def _hyperplanes(dim: int, num_planes: int) -> np.ndarray:
-    """md5-derived deterministic hyperplanes (functions/hashfam.py) so the
-    DuckDB oracle can inline the exact same values and recompute buckets."""
-    return np.asarray(hashfam.hyperplanes(num_planes, dim), dtype=np.float64)
-
-
-def with_lsh_buckets(
-    emb: DataFrame, id_col: str, vec_col: str,
-    num_planes: int = 8,
-) -> DataFrame:
-    """(id, vec, norm, bucket): sign-bit bucket of hyperplane projections,
-    computed as one matmul per Arrow batch."""
-    dim = _vec_dim(emb, vec_col)
-    planes = _hyperplanes(dim, num_planes)
-    spark = emb.sparkSession
-    bc = spark.sparkContext.broadcast(planes)
-
-    def _bucketize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..blas_pin import pin_blas_single_thread
-
-        pin_blas_single_thread()
-        pl = bc.value
-        weights = (1 << np.arange(pl.shape[0])).astype(np.int64)
-        for pdf in batches:
-            mat = _matrix(pdf["vec"])
-            bits = (mat @ pl.T) > 0
-            pdf = pdf.copy()
-            pdf["norm"] = np.linalg.norm(mat, axis=1)
-            pdf["bucket"] = bits @ weights
-            yield pdf
-
-    id_t = _id_sql_type(emb, id_col)
-    base = emb.select(F.col(id_col).alias("id"),
-                      F.col(vec_col).cast("array<double>").alias("vec"))
-    return base.mapInPandas(
-        _bucketize,
-        schema=f"id {id_t}, vec array<double>, norm double, bucket long",
-    )
-
-
-def lsh_topk(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_ids: list[int],
-    k: int = 10,
-    num_planes: int = 8,
-) -> DataFrame:
-    """Approximate top-k: candidates share the LSH bucket of the query.
-
-    Sublinear scale path — the equi-join on bucket replaces the cross
-    join. Returns (query_id, neighbor_id, cos_sim, rank) over candidates
-    only (recall < 1 by design; tested against cosine_topk for overlap,
-    and — since the hyperplanes are md5-derived constants — exactly
-    reproduced by the DuckDB oracle, buckets included).
-    """
-    base = with_lsh_buckets(emb, id_col, vec_col, num_planes)
-    queries = base.filter(F.col("id").isin(query_ids)).select(
-        F.col("id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("norm").alias("qnorm"),
-        F.col("bucket").alias("qbucket"),
-    )
-    cand = base.join(
-        F.broadcast(queries),
-        (F.col("bucket") == F.col("qbucket"))
-        & (F.col("id") != F.col("query_id")),
-    )
-    sim = F.zip_with("vec", "qvec", lambda x, y: x * y)
-    dot = F.aggregate(sim, F.lit(0.0), lambda acc, x: acc + x)
-    scored = cand.select(
-        "query_id",
-        F.col("id").alias("neighbor_id"),
-        F.round(dot / (F.col("norm") * F.col("qnorm")), 6).alias("cos_sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
-
 def semantic_dedup(
     emb: DataFrame,
     id_col: str,
     vec_col: str,
     tau: float,
-    num_centroids: int = 16,
-    centroids: np.ndarray | None = None,
+    centroids: np.ndarray,
     chunk: int = 1024,
 ) -> DataFrame:
     """SemDeDup (Abbas et al., arXiv:2303.09540): semantic near-dup
-    pruning WITHIN coarse-quantizer cells. Cluster with IVF cells (pass a
-    `train_ivf_centroids` codebook for the paper's k-means variant), then
+    pruning WITHIN coarse-quantizer cells. Cluster with IVF cells of the
+    codebook `centroids` (a `train_ivf_centroids` result — the paper's
+    k-means variant), then
     inside each cell drop every vector that has a higher-priority
     neighbor with cosine >= `tau`.
 
@@ -558,13 +306,12 @@ def semantic_dedup(
     Scale shape (100 TB): ONE shuffle, the groupBy(cell) — vectors move
     once, keyed by a small int. Per cell the gram product is chunked:
     `chunk x cell_size` peak memory, never a full cell^2 matrix, one
-    BLAS matmul per chunk. num_centroids grows with n (SemDeDup uses
+    BLAS matmul per chunk. The codebook grows with n (SemDeDup uses
     ~sqrt(n) clusters at scale) to bound cell sizes; skewed cells are a
     codebook-quality problem, surfaced by cell-size stats, not a shuffle
     problem. Returns (doc_id, keeper_id, cos_sim) for dropped rows only.
     """
-    cells = with_ivf_cells(emb, id_col, vec_col, num_centroids,
-                           centroids=centroids)
+    cells = with_ivf_cells(emb, id_col, vec_col, centroids)
     id_t = _id_sql_type(emb, id_col)
 
     def _dedup_cell(pdf: pd.DataFrame) -> pd.DataFrame:

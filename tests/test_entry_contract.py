@@ -90,8 +90,6 @@ def test_query_matches_oracle(spark, duck, name):
 NON_VACUOUS = [
     "j1_anti_customers_without_orders",
     "u4_viewers_minus_purchasers",
-    "emb_neardup_pairs",
-    "emb_neardup_lsh",
     "semantic_dedup",
     "dedup_components_bigstar",
     "curate_domain_cap",

@@ -161,10 +161,10 @@ def test_no_inferred_generate_filter_blowup(spark):
     assert plan.count("array_distinct") <= 1, plan
 
 
-def test_ann_lsh_candidate_join_is_broadcast(spark):
-    """LSH top-k: the tiny query-probe side must broadcast (no shuffle of
-    the full bucketed table against 5 queries)."""
-    df = entry_mod.ann_lsh_topk(spark, SF_DIR)
+def test_ann_ivf_probe_join_is_broadcast(spark):
+    """IVF top-k: the tiny query-probe side (5 queries x nprobe cells)
+    must broadcast (no shuffle of the full cell-assigned table)."""
+    df = entry_mod.ann_ivf_trained_topk(spark, SF_DIR)
     assert has_broadcast_join(df)
 
 

@@ -17,7 +17,6 @@ from bitmap_oracle import decode_bitmap  # noqa: E402
 from ocr_spark.fonts import ALPHABET, render_text  # noqa: E402
 from ocr_spark.functions.hashfam import (  # noqa: E402
     MINHASH_P,
-    hyperplanes,
     minhash_coeffs,
 )
 from ocr_spark.functions.voucher_core import (  # noqa: E402
@@ -120,12 +119,6 @@ def test_minhash_coeffs_ranges_and_determinism():
         assert 0 <= b <= MINHASH_P - 1
         # the affine product must never overflow int64
         assert a * (MINHASH_P - 1) + b < 2 ** 63
-
-
-def test_hyperplane_entries_bounded_and_deterministic():
-    p1 = hyperplanes(8, 64)
-    assert p1 == hyperplanes(8, 64)
-    assert all(-1.0 <= x < 1.0 for row in p1 for x in row)
 
 
 # ---------------------------------------------------------------------------
