@@ -1264,8 +1264,9 @@ ANN_QUERY_IDS = [1, 2, 3, 4, 5]
 def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over a TRAINED coarse quantizer: distributed spherical
     k-means (Lloyd, 3 iterations, deterministic md5-hash seeding — no
-    RNG), then probed-cell top-k. Full DuckDB oracle: the fixed iteration count unrolls the
-    whole training into a chain of assign/aggregate CTEs
+    RNG), then probed-cell top-k. Full DuckDB oracle: the fixed
+    iteration count unrolls the whole training into a chain of
+    assign/aggregate CTEs
     (`_ann_ivf_trained_oracle`), and the 9-decimal codebook rounding in
     `train_ivf_centroids` pins both engines to the identical quantizer.
     Convergence / determinism / recall-vs-fixed-codebook additionally
