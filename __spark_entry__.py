@@ -611,8 +611,7 @@ def q4_windowed_event_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.streaming.pipeline import windowed_code_rate
 
     ev = _t(spark, sf_dir, "events")
-    out = windowed_code_rate(ev, window="1 hour", watermark="30 minutes",
-                             group_col="event_type")
+    out = windowed_code_rate(ev)
     return out.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("ws"),
         "event_type",
@@ -830,7 +829,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.curate import repetition_metrics
 
     docs = _t(spark, sf_dir, "documents")
-    return repetition_metrics(docs, "doc_id", "text")
+    return repetition_metrics(docs)
 
 
 @query(TAIL, "pack_sequences")
@@ -846,7 +845,7 @@ def pack_sequences_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_tokens = docs.select(
         "doc_id", token_count("text").cast("long").alias("n_tokens")
     )
-    return pack_sequences(with_tokens, "doc_id", "n_tokens", window=512)
+    return pack_sequences(with_tokens)
 
 
 @query(TAIL)
@@ -864,7 +863,10 @@ def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 10 == 0)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
-    return ngram_contamination(corpus, bench, "doc_id", "text", n=8)
+    return ngram_contamination(corpus, bench, n=8)
+
+
+BPE_MERGES = 3
 
 
 @query(TAIL)
@@ -879,7 +881,7 @@ def bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.bpe import learn_bpe_merges
 
     docs = _t(spark, sf_dir, "documents")
-    _, vocab = learn_bpe_merges(docs, "text", n_merges=3)
+    _, vocab = learn_bpe_merges(docs, n_merges=BPE_MERGES)
     return vocab
 
 
@@ -920,6 +922,11 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup(doubled, "doc_id", "text")
 
 
+MINHASH_HASHES = 64
+MINHASH_BANDS = 16
+MINHASH_THRESHOLD = 0.9
+
+
 @query(TAIL)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup candidates (scale path). Full DuckDB oracle:
@@ -931,7 +938,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     return minhash_lsh_candidates(
-        docs, "doc_id", "text", n=3, num_hashes=64, bands=16, threshold=0.9
+        docs, "doc_id", "text", n=3, num_hashes=MINHASH_HASHES,
+        bands=MINHASH_BANDS, threshold=MINHASH_THRESHOLD,
     )
 
 
@@ -944,7 +952,7 @@ def q5_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.sessions import session_stats
 
     ev = _t(spark, sf_dir, "events")
-    out = session_stats(ev, gap_minutes=30)
+    out = session_stats(ev)
     return out.select(
         "user_id", "session_seq", "n_events",
         F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("ss"),
@@ -1003,7 +1011,7 @@ def a10_histogram_percentiles(spark: SparkSession, sf_dir: str
     from ocr_spark.functions.sketches import histogram_percentiles
 
     ev = _t(spark, sf_dir, "events")
-    return histogram_percentiles(ev, ["event_type"], "value", width=1.0)
+    return histogram_percentiles(ev, ["event_type"], "value")
 
 
 @query(TAIL)
@@ -1122,7 +1130,8 @@ def dedup_components_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_candidates(
-        docs, "doc_id", "text", n=3, num_hashes=64, bands=16, threshold=0.9
+        docs, "doc_id", "text", n=3, num_hashes=MINHASH_HASHES,
+        bands=MINHASH_BANDS, threshold=MINHASH_THRESHOLD,
     )
     return bigstar_components(pairs)
 
@@ -1145,15 +1154,15 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_candidates(
-        docs, "doc_id", "text", n=3, num_hashes=64, bands=16, threshold=0.9
+        docs, "doc_id", "text", n=3, num_hashes=MINHASH_HASHES,
+        bands=MINHASH_BANDS, threshold=MINHASH_THRESHOLD,
     )
     labels = bigstar_components(pairs)
     scored = docs.select(
         "doc_id",
         F.round(quality_score("text") * 10000).cast("long").alias("q10k"),
     )
-    return cluster_keep_best(scored, labels, id_col="doc_id",
-                             score_col="q10k")
+    return cluster_keep_best(scored, labels)
 
 
 @query(DRIVER)
@@ -1180,7 +1189,7 @@ def text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("footer contact terms privacy"),
         ).alias("page"),
     )
-    return dedup_lines(pages, id_col="doc_id", text_col="page")
+    return dedup_lines(pages, text_col="page")
 
 
 _URL_SYNTH_SQL = """
@@ -1249,7 +1258,7 @@ def text_winnowing_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    out = winnowing_fingerprints(docs, "doc_id", "text", k=5, window=4)
+    out = winnowing_fingerprints(docs, "doc_id", "text")
     return out.withColumnRenamed("id", "doc_id")
 
 
@@ -1258,6 +1267,9 @@ def text_winnowing_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 ANN_QUERY_IDS = [1, 2, 3, 4, 5]
+ANN_NPROBE = 2
+IVF_CENTROIDS = 16
+IVF_ITERS = 3
 
 
 @query(DRIVER)
@@ -1275,9 +1287,9 @@ def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     cents = train_ivf_centroids(emb, "vec_id", "embedding",
-                                num_centroids=16, iters=3)
+                                num_centroids=IVF_CENTROIDS, iters=IVF_ITERS)
     out = ivf_topk(emb, "vec_id", "embedding", ANN_QUERY_IDS, cents,
-                   k=10, nprobe=2)
+                   nprobe=ANN_NPROBE)
     return out.select(
         "query_id", "neighbor_id", "cos_sim",
         F.col("rank").cast("long").alias("rank"),
@@ -1322,7 +1334,7 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     cents = train_ivf_centroids(emb, "vec_id", "embedding",
-                                num_centroids=16, iters=3)
+                                num_centroids=IVF_CENTROIDS, iters=IVF_ITERS)
     return semantic_dedup(emb, "vec_id", "embedding", SEMDEDUP_TAU, cents)
 
 
@@ -1337,17 +1349,20 @@ def sketch_distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     path alone. The sketch shuffles 8-byte hashes (map-side-combined
     distinct), never shingle strings; the exact branch exists only to
     audit it at driver SFs."""
-    from ocr_spark.functions.sketches import kmv_distinct
+    from ocr_spark.functions.sketches import KMV_K, kmv_distinct
     from ocr_spark.operators.dedup import word_shingles
 
     docs = _t(spark, sf_dir, "documents")
     sh = word_shingles(docs, "lang", "text", n=3)
-    sketch = kmv_distinct(sh, ["id"], "shingle", k=64)
+    sketch = kmv_distinct(sh, ["id"], "shingle", k=KMV_K)
     exact = sh.groupBy("id").agg(
         F.countDistinct("shingle").alias("exact_distinct"))
     return sketch.join(F.broadcast(exact), "id").select(
         F.col("id").alias("lang"), "n_kept", "kth_hash", "est_distinct",
         "exact_distinct")
+
+
+PAGERANK_ITERS = 3
 
 
 @query(DRIVER)
@@ -1374,7 +1389,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("l_suppkey") * 2 + 1).alias("dst"))
         .distinct()
     )
-    return pagerank(nodes, edges, iters=3)
+    return pagerank(nodes, edges, iters=PAGERANK_ITERS)
 
 
 @query(TAIL, "bpe_encode")
@@ -1388,7 +1403,7 @@ def bpe_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.bpe import bpe_encode, learn_bpe_merges
 
     docs = _t(spark, sf_dir, "documents")
-    _, vocab = learn_bpe_merges(docs, "text", n_merges=3)
+    _, vocab = learn_bpe_merges(docs, n_merges=BPE_MERGES)
     out = bpe_encode(docs, "doc_id", "text", vocab)
     return out.select(F.col("id").alias("doc_id"), "n_words",
                       "n_bpe_tokens")
@@ -1405,7 +1420,7 @@ def dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.dedup import shared_substring_runs
 
     docs = _t(spark, sf_dir, "documents")
-    return shared_substring_runs(docs, "doc_id", "text", k=8, max_df=64)
+    return shared_substring_runs(docs, "doc_id", "text")
 
 
 @query(DRIVER)
@@ -1419,8 +1434,7 @@ def dedup_substring_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.dedup import trim_duplicate_substrings
 
     docs = _t(spark, sf_dir, "documents")
-    return trim_duplicate_substrings(docs, "doc_id", "text", k=8,
-                                     max_df=64)
+    return trim_duplicate_substrings(docs, "doc_id", "text")
 
 
 @query(DRIVER)
@@ -1494,7 +1508,7 @@ def search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.search import bm25_topk
 
     docs = _t(spark, sf_dir, "documents")
-    return bm25_topk(docs, BM25_TERMS, k=20)
+    return bm25_topk(docs, BM25_TERMS)
 
 
 @query(TAIL)
@@ -1523,6 +1537,10 @@ def sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "source", "sample_rank", "quota")
 
 
+NB_BUCKETS = 64
+NB_QUALITY_THRESH = 0.55
+
+
 @query(DRIVER)
 def nb_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-based curation (the FineWeb-Edu/DCLM pattern): the corpus
@@ -1541,9 +1559,10 @@ def nb_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "text",
-        (quality_score("text") >= 0.55).alias("y"),
+        (quality_score("text") >= NB_QUALITY_THRESH).alias("y"),
     )
-    out = nb_train_score(docs, "doc_id", "text", "y", num_buckets=64)
+    out = nb_train_score(docs, "doc_id", "text", "y",
+                         num_buckets=NB_BUCKETS)
     return out.select(
         F.col("id").alias("doc_id"), "label", "score1", "score0", "pred")
 
@@ -1595,9 +1614,7 @@ def text_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, so the oracle's ORDER BY + LIMIT matches exactly."""
     from ocr_spark.operators.curate import top_ngrams
 
-    return top_ngrams(
-        _t(spark, sf_dir, "documents"), text_col="text", n=2, k=40
-    )
+    return top_ngrams(_t(spark, sf_dir, "documents"), n=2, k=40)
 
 
 @query(DRIVER)
@@ -1611,7 +1628,7 @@ def shard_assign_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.curate import shard_assign
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return shard_assign(docs, id_col="doc_id", num_shards=16)
+    return shard_assign(docs, num_shards=16)
 
 
 @query(DRIVER, "dedup_incremental")
@@ -1821,7 +1838,7 @@ def link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    return pagerank(nodes, edges, iters=3)
+    return pagerank(nodes, edges, iters=PAGERANK_ITERS)
 
 
 @query(DRIVER)
@@ -1978,14 +1995,13 @@ def _r4_quadrant_oracle() -> str:
     """
 
 
-def _minhash_lsh_oracle(num_hashes: int = 64, bands: int = 16,
-                        threshold: float = 0.9) -> str:
+def _minhash_lsh_oracle() -> str:
     """DuckDB twin of dedup.minhash_lsh_candidates: same md5-derived affine
     hash family (ocr_spark/functions/hashfam.py), same concat band keys."""
     from ocr_spark.functions.hashfam import MINHASH_P, minhash_coeffs, sql_base60
 
-    coeffs = minhash_coeffs(num_hashes)
-    rpb = num_hashes // bands
+    coeffs = minhash_coeffs(MINHASH_HASHES)
+    rpb = MINHASH_HASHES // MINHASH_BANDS
     mins = ",\n                   ".join(
         f"min(({a} * base + {b}) % {MINHASH_P}) AS h{i}"
         for i, (a, b) in enumerate(coeffs)
@@ -1996,11 +2012,11 @@ def _minhash_lsh_oracle(num_hashes: int = 64, bands: int = 16,
             band=bi,
             cols=", ".join(f"h{bi * rpb + j}" for j in range(rpb)),
         )
-        for bi in range(bands)
+        for bi in range(MINHASH_BANDS)
     )
     matches = " + ".join(
         f"(CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END)"
-        for i in range(num_hashes)
+        for i in range(MINHASH_HASHES)
     )
     return rf"""
         WITH toks AS (
@@ -2027,17 +2043,17 @@ def _minhash_lsh_oracle(num_hashes: int = 64, bands: int = 16,
                AND a.doc_id < b.doc_id
         ), est AS (
           SELECT c.id_a, c.id_b,
-                 ({matches}) / {float(num_hashes)} AS ej
+                 ({matches}) / {float(MINHASH_HASHES)} AS ej
           FROM cand c
           JOIN sig sa ON sa.doc_id = c.id_a
           JOIN sig sb ON sb.doc_id = c.id_b
         )
         SELECT id_a, id_b, round(ej, 4) AS est_jaccard
-        FROM est WHERE ej >= {threshold}
+        FROM est WHERE ej >= {MINHASH_THRESHOLD}
     """
 
 
-def _bpe_chain(n_merges: int = 3) -> tuple[str, str]:
+def _bpe_chain() -> tuple[str, str]:
     """Shared unrolled BPE-training CTE chain (the trained-IVF device):
     per round, one pair-count CTE, one deterministic argmax (count
     DESC, pair ASC), one literal replace-all rewrite in the
@@ -2054,7 +2070,7 @@ def _bpe_chain(n_merges: int = 3) -> tuple[str, str]:
           FROM v
         )"""
     prev = "s0"
-    for i in range(1, n_merges + 1):
+    for i in range(1, BPE_MERGES + 1):
         sql += f""", p{i} AS (
           SELECT w[j] || ' ' || w[j+1] AS pair, sum(freq) AS cnt
           FROM (SELECT freq, string_split(syms, '  ') AS w FROM {prev}),
@@ -2075,9 +2091,9 @@ def _bpe_chain(n_merges: int = 3) -> tuple[str, str]:
     return sql, prev
 
 
-def _bpe_oracle(n_merges: int = 3) -> str:
+def _bpe_oracle() -> str:
     """DuckDB twin of learn_bpe_merges' vocab output."""
-    chain, prev = _bpe_chain(n_merges)
+    chain, prev = _bpe_chain()
     return f"""
         WITH {chain}
         SELECT word, freq, replace(syms, '  ', ' ') AS tokens,
@@ -2086,12 +2102,12 @@ def _bpe_oracle(n_merges: int = 3) -> str:
     """
 
 
-def _bpe_encode_oracle(n_merges: int = 3) -> str:
+def _bpe_encode_oracle() -> str:
     """DuckDB twin of operators/bpe.bpe_encode: re-derive the merge
     table with the shared training chain, tokenize the VOCABULARY, and
     join each document's words to their segmentation — integer counts,
     zero tolerance."""
-    chain, prev = _bpe_chain(n_merges)
+    chain, prev = _bpe_chain()
     return rf"""
         WITH {chain}, vocab AS (
           SELECT word,
@@ -2279,22 +2295,22 @@ def _bigstar_components_oracle() -> str:
     """
 
 
-def _ivf_trained_fassign_ctes(num_centroids: int = 16, dim: int = 64,
-                              iters: int = 3) -> str:
+def _ivf_trained_fassign_ctes() -> str:
     """Shared CTE prefix for every trained-quantizer oracle: spherical
-    Lloyd UNROLLED into `iters` assign/aggregate CTE pairs, ending in
-    `fassign(vec_id, vec, norm, cell)` — the final cell assignment.
+    Lloyd over the 64-dim embeddings UNROLLED into `IVF_ITERS`
+    assign/aggregate CTE pairs, ending in `fassign(vec_id, vec, norm,
+    cell)` — the final cell assignment.
     Exact cross-engine equality holds because (a) seeding is the
     engine-neutral (md5(id), id) order, (b) ties in cell assignment
     break by first centroid index on both sides (np.argmax ≡ row_number
     ordered dot DESC, cell ASC), and (c) every intermediate codebook is
     rounded to 9 decimals on both sides, so last-ulp summation-order
     differences cannot move a decision boundary. Assumes n_vectors >=
-    num_centroids (true at every driver SF), so the md5 pad codebook
+    IVF_CENTROIDS (true at every driver SF), so the md5 pad codebook
     never participates."""
-    sv = ", ".join(f"sum(uvec[{j + 1}])" for j in range(dim))
+    sv = ", ".join(f"sum(uvec[{j + 1}])" for j in range(64))
     steps = []
-    for i in range(iters):
+    for i in range(IVF_ITERS):
         steps.append(f"""a{i} AS (
           SELECT vec_id, uvec, cell FROM (
             SELECT e.vec_id, e.uvec, c.cell,
@@ -2331,26 +2347,26 @@ def _ivf_trained_fassign_ctes(num_centroids: int = 16, dim: int = 64,
                  list_transform(uvec, x -> round(x, 9)) AS cvec
           FROM base
           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-          LIMIT {num_centroids}
+          LIMIT {IVF_CENTROIDS}
         ), {chain}, fassign AS (
           SELECT vec_id, vec, norm, cell FROM (
             SELECT e.vec_id, e.vec, e.norm, c.cell,
                    row_number() OVER (PARTITION BY e.vec_id
                      ORDER BY list_dot_product(e.uvec, c.cvec) DESC,
                               c.cell ASC) AS rn
-            FROM base e CROSS JOIN cent{iters} c
+            FROM base e CROSS JOIN cent{IVF_ITERS} c
           ) WHERE rn = 1
         )"""
 
 
-def _ann_ivf_trained_oracle(num_centroids: int = 16, dim: int = 64,
-                            nprobe: int = 2, k: int = 10,
-                            iters: int = 3) -> str:
+def _ann_ivf_trained_oracle() -> str:
     """DuckDB twin of train_ivf_centroids + ivf_topk: the shared
     trained-quantizer prefix (`_ivf_trained_fassign_ctes`), then each
-    query probes its `nprobe` nearest cells (dot DESC, cell ASC — the
-    Spark-side lexsort) and ranks the vectors assigned there."""
-    prefix = _ivf_trained_fassign_ctes(num_centroids, dim, iters)
+    query probes its `ANN_NPROBE` nearest cells (dot DESC, cell ASC —
+    the Spark-side lexsort) and ranks the vectors assigned there."""
+    from ocr_spark.operators.similarity import IVF_TOPK
+
+    prefix = _ivf_trained_fassign_ctes()
     qids = ", ".join(str(q) for q in ANN_QUERY_IDS)
     return f"""
         WITH {prefix}, qprobe AS (
@@ -2360,9 +2376,9 @@ def _ann_ivf_trained_oracle(num_centroids: int = 16, dim: int = 64,
                    row_number() OVER (PARTITION BY e.vec_id
                      ORDER BY list_dot_product(e.uvec, c.cvec) DESC,
                               c.cell ASC) AS rn
-            FROM base e CROSS JOIN cent{iters} c
+            FROM base e CROSS JOIN cent{IVF_ITERS} c
             WHERE e.vec_id IN ({qids})
-          ) WHERE rn <= {nprobe}
+          ) WHERE rn <= {ANN_NPROBE}
         ), scored AS (
           SELECT p.query_id, a.vec_id AS neighbor_id,
                  round(list_dot_product(a.vec, p.qvec)
@@ -2375,20 +2391,19 @@ def _ann_ivf_trained_oracle(num_centroids: int = 16, dim: int = 64,
             PARTITION BY query_id
             ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
           FROM scored
-        ) WHERE rank <= {k}
+        ) WHERE rank <= {IVF_TOPK}
     """
 
 
-def _semantic_dedup_oracle(tau: float, num_centroids: int = 16,
-                           dim: int = 64, iters: int = 3) -> str:
+def _semantic_dedup_oracle() -> str:
     """DuckDB twin of similarity.semantic_dedup over the trained
     quantizer: shared Lloyd prefix, then a within-cell self-join.
     Priority = (md5(str(id)), id) ASC; a row is dropped iff a
-    strictly-higher-priority cell-mate has round(cos, 6) >= tau, and
-    keeper_id is the highest-priority such mate (row_number = 1 in
+    strictly-higher-priority cell-mate has round(cos, 6) >= SEMDEDUP_TAU,
+    and keeper_id is the highest-priority such mate (row_number = 1 in
     priority order ≡ the Spark side's first-True argmax over
     priority-sorted columns)."""
-    prefix = _ivf_trained_fassign_ctes(num_centroids, dim, iters)
+    prefix = _ivf_trained_fassign_ctes()
     return f"""
         WITH {prefix}, pri AS (
           SELECT vec_id, vec, norm, cell,
@@ -2404,16 +2419,15 @@ def _semantic_dedup_oracle(tau: float, num_centroids: int = 16,
             ON v.cell = u.cell
            AND (u.pk < v.pk OR (u.pk = v.pk AND u.vec_id < v.vec_id))
           WHERE round(list_dot_product(u.vec, v.vec)
-                      / (u.norm * v.norm), 6) >= {tau!r}
+                      / (u.norm * v.norm), 6) >= {SEMDEDUP_TAU!r}
         )
         SELECT doc_id, keeper_id, cos_sim FROM drops WHERE rn = 1
     """
 
 
-def _pagerank_oracle_for(nodes_sql: str, edges_sql: str,
-                         iters: int = 3) -> str:
+def _pagerank_oracle_for(nodes_sql: str, edges_sql: str) -> str:
     """DuckDB twin of operators/graph.pagerank over ANY (nodes, edges)
-    CTE bodies: the fixed iteration count unrolls into
+    CTE bodies: the fixed iteration count (`PAGERANK_ITERS`) unrolls into
     dang/contrib/rank CTE triples. BIT-EXACT (no rounding tolerance):
     every rank is a BIGINT in nano-units, every scale is floor division
     of non-negative integers, every sum is an integer sum — no floating
@@ -2422,7 +2436,7 @@ def _pagerank_oracle_for(nodes_sql: str, edges_sql: str,
 
     teleport = (DAMP_DEN - DAMP_NUM) * UNIT // DAMP_DEN
     steps = []
-    for i in range(iters):
+    for i in range(PAGERANK_ITERS):
         steps.append(f"""d{i} AS (
           SELECT CAST(coalesce(sum(r.rank_nano), 0) AS BIGINT) AS dang
           FROM r{i} r LEFT JOIN outdeg o USING (node)
@@ -2451,11 +2465,11 @@ def _pagerank_oracle_for(nodes_sql: str, edges_sql: str,
         ), r0 AS (
           SELECT node, CAST({UNIT} AS BIGINT) AS rank_nano FROM nodes
         ), {chain}
-        SELECT node, rank_nano FROM r{iters}
+        SELECT node, rank_nano FROM r{PAGERANK_ITERS}
     """
 
 
-def _graph_pagerank_oracle(iters: int = 3) -> str:
+def _graph_pagerank_oracle() -> str:
     """The trade-graph instantiation (customers even, suppliers odd)."""
     return _pagerank_oracle_for(
         """
@@ -2465,11 +2479,10 @@ def _graph_pagerank_oracle(iters: int = 3) -> str:
         """
           SELECT DISTINCT 2 * o_custkey AS src, 2 * l_suppkey + 1 AS dst
           FROM orders JOIN lineitem ON o_orderkey = l_orderkey""",
-        iters,
     )
 
 
-def _link_pagerank_oracle(iters: int = 3) -> str:
+def _link_pagerank_oracle() -> str:
     """The crawl-link-graph instantiation: the html_link_graph synth
     edges (next-link, far-link, hot hub back-link), nodes = every id
     appearing as a source or target (targets past the corpus edge are
@@ -2488,7 +2501,6 @@ def _link_pagerank_oracle(iters: int = 3) -> str:
             UNION ALL SELECT doc_id, doc_id + 23 FROM documents
             UNION ALL SELECT doc_id, (doc_id % 7) * 3 FROM documents
           )""",
-        iters,
     )
 
 
@@ -2531,7 +2543,7 @@ _SUBSTRING_RUNS_CHAIN = r"""
 """
 
 
-def _sketch_distinct_tokens_oracle(k: int = 64) -> str:
+def _sketch_distinct_tokens_oracle() -> str:
     """DuckDB twin of sketch_distinct_tokens: the shared KMV oracle
     builder for the sketch half, plus an exact count(DISTINCT) audit
     column joined on lang."""
@@ -2547,7 +2559,7 @@ def _sketch_distinct_tokens_oracle(k: int = 64) -> str:
                       for i in generate_series(1, len(w) - 2)])) AS shingle
         FROM toks WHERE len(w) >= 3
     """
-    sk = kmv_distinct_oracle_sql(shingles, ["lang"], "shingle", k=k)
+    sk = kmv_distinct_oracle_sql(shingles, ["lang"], "shingle")
     return f"""
         SELECT sk.lang, sk.n_kept, sk.kth_hash, sk.est_distinct,
                ex.exact_distinct
@@ -2652,8 +2664,7 @@ _CHAR_ENTROPY_ORACLE = """
 """
 
 
-def _nb_quality_classifier_oracle(num_buckets: int = 64,
-                                  thresh: float = 0.55) -> str:
+def _nb_quality_classifier_oracle() -> str:
     """DuckDB twin of classifier.nb_train_score with the quality-judge
     label: identical md5-bucket features, add-one smoothing over a
     generated bucket grid, micro-nat-grid logs, BIGINT score sums —
@@ -2662,7 +2673,7 @@ def _nb_quality_classifier_oracle(num_buckets: int = 64,
         WITH qual AS ({_QUALITY_SELECT}),
         base AS (
           SELECT d.doc_id, trim(d.text) AS txt,
-                 CASE WHEN q.quality >= {thresh!r} THEN 1 ELSE 0 END AS y
+                 CASE WHEN q.quality >= {NB_QUALITY_THRESH!r} THEN 1 ELSE 0 END AS y
           FROM documents d JOIN qual q USING (doc_id)
           WHERE length(trim(d.text)) > 0
         ), tok AS (
@@ -2671,7 +2682,7 @@ def _nb_quality_classifier_oracle(num_buckets: int = 64,
           FROM base
         ), feat AS (
           SELECT doc_id, y,
-                 ('0x' || substr(md5(t), 1, 15))::BIGINT % {num_buckets}
+                 ('0x' || substr(md5(t), 1, 15))::BIGINT % {NB_BUCKETS}
                    AS bucket,
                  count(*) AS cnt
           FROM tok GROUP BY doc_id, y, bucket
@@ -2679,12 +2690,12 @@ def _nb_quality_classifier_oracle(num_buckets: int = 64,
           SELECT y, bucket, CAST(sum(cnt) AS BIGINT) AS c
           FROM feat GROUP BY y, bucket
         ), tot AS (
-          SELECT y, CAST(sum(c) + {num_buckets} AS BIGINT) AS tot
+          SELECT y, CAST(sum(c) + {NB_BUCKETS} AS BIGINT) AS tot
           FROM cc GROUP BY y
         ), grid AS (
           SELECT y, bucket
           FROM (SELECT DISTINCT y FROM base)
-          CROSS JOIN (SELECT unnest(generate_series(0, {num_buckets - 1}))
+          CROSS JOIN (SELECT unnest(generate_series(0, {NB_BUCKETS - 1}))
                       AS bucket)
         ), logp AS (
           SELECT g.y, g.bucket,
@@ -3124,7 +3135,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "layout_reading_order": _LAYOUT_READING_ORDER_ORACLE,
         "text_pii_scrub": _pii_scrub_oracle(),
-        "bpe_learn": _bpe_oracle(3),
+        "bpe_learn": _bpe_oracle(),
         "pack_sequences": r"""
             WITH t AS (
               SELECT doc_id,
@@ -3247,12 +3258,12 @@ def oracle_sql() -> dict[str, str]:
         "j5_asof_last_purchase": _ASOF_ORACLE,
         "a9_value_percentiles": _PERCENTILES_ORACLE,
         "ann_ivf_trained_topk": _ann_ivf_trained_oracle(),
-        "semantic_dedup": _semantic_dedup_oracle(SEMDEDUP_TAU),
+        "semantic_dedup": _semantic_dedup_oracle(),
         "sketch_distinct_tokens": _sketch_distinct_tokens_oracle(),
         "graph_pagerank": _graph_pagerank_oracle(),
         "link_pagerank": _link_pagerank_oracle(),
         "nb_quality_classifier": _nb_quality_classifier_oracle(),
-        "bpe_encode": _bpe_encode_oracle(3),
+        "bpe_encode": _bpe_encode_oracle(),
         "dedup_substring_runs": _SUBSTRING_RUNS_CHAIN + """
             SELECT doc_a, doc_b,
                    CAST(min(pa) AS BIGINT) AS start_a,
@@ -3716,7 +3727,7 @@ def oracle_sql() -> dict[str, str]:
         # The funnel oracle composes four signal oracles as CTEs (nested
         # WITH inside a parenthesized CTE body is legal DuckDB), so its
         # exactness is inherited from theirs. Thresholds mirror
-        # operators/curate.curation_funnel defaults.
+        # operators/curate.curation_funnel's.
         "curation_funnel": f"""
             WITH q AS ({_QUALITY_SELECT}),
                  r AS ({_REPETITION_ORACLE}),

@@ -471,30 +471,28 @@ def generate_corpus(n_docs: int, seed: int = SEED,
 SF_DOCS = {0.001: 200, 0.01: 2000, 0.1: 20000}
 
 
-def write_corpus(out_dir: str, n_docs: int, seed: int = SEED,
-                 overwrite: bool = False, shards: int | None = None,
-                 row_group_size: int = 256) -> str:
+def write_corpus(out_dir: str, n_docs: int, overwrite: bool = False) -> str:
     """Write the three tables as sharded parquet directories; returns out_dir.
 
     Parquet is the local stand-in for Iceberg data files (no Iceberg
     runtime jar ships in this sandbox); the snapshot/MERGE layer lives in
     sources/snapstore.py.
 
-    Each table is a DIRECTORY of `shards` files with small row groups —
+    Each table is a DIRECTORY of shard files with 256-row groups —
     the shape a real 100 TB Iceberg table has (many data files), and what
     lets Spark's file-split planner hand every core work at bench scale.
     A single-file single-row-group table silently serializes the whole
     scan (and every map-side UDF stage) onto one task.
     """
-    shards = shards or min(128, max(8, n_docs // 128))
-    stamp = f"n_docs={n_docs} seed={seed} fmt=12 shards={shards}\n"
+    shards = min(128, max(8, n_docs // 128))
+    stamp = f"n_docs={n_docs} seed={SEED} fmt=12 shards={shards}\n"
     marker = os.path.join(out_dir, "_COMPLETE")
     if not overwrite and os.path.exists(marker):
         with open(marker, encoding="utf-8") as fh:
             if fh.read() == stamp:
                 return out_dir
     os.makedirs(out_dir, exist_ok=True)
-    tables = generate_corpus(n_docs, seed=seed)
+    tables = generate_corpus(n_docs)
     for name, tbl in tables.items():
         dest = os.path.join(out_dir, f"{name}.parquet")
         if os.path.isfile(dest):
@@ -510,7 +508,7 @@ def write_corpus(out_dir: str, n_docs: int, seed: int = SEED,
             pq.write_table(
                 part,
                 os.path.join(dest, f"part-{i:05d}.parquet"),
-                row_group_size=row_group_size,
+                row_group_size=256,
             )
     with open(marker, "w", encoding="utf-8") as fh:
         fh.write(stamp)
@@ -522,4 +520,4 @@ def corpus_dir(sf: float, base: str | None = None) -> str:
     base = base or os.path.join(os.path.dirname(os.path.dirname(__file__)),
                                 "data", "interleaved")
     out = os.path.join(base, f"sf{sf}")
-    return write_corpus(out, SF_DOCS.get(sf, int(200_000 * sf)), seed=SEED)
+    return write_corpus(out, SF_DOCS.get(sf, int(200_000 * sf)))

@@ -27,6 +27,7 @@ from pyspark.sql.window import Window as W
 from . import hashfam
 
 HASH_RANGE = float(hashfam.TWO_60)
+KMV_K = 64
 
 
 def spark_hash60(col) -> F.Column:
@@ -42,7 +43,7 @@ def kmv_distinct(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    k: int = 64,
+    k: int = KMV_K,
     partial_trim: bool = True,
 ) -> DataFrame:
     """Per-group distinct-count estimate via a k-minimum-values sketch.
@@ -153,10 +154,10 @@ def kmv_distinct_oracle_sql(
     source_sql: str,
     group_cols: list[str],
     value_expr: str,
-    k: int = 64,
 ) -> str:
-    """DuckDB twin of `kmv_distinct`: identical hash, identical bottom-k
-    rule, identical BIGINT→DOUBLE estimator arithmetic.
+    """DuckDB twin of `kmv_distinct` at k = `KMV_K`: identical hash,
+    identical bottom-k rule, identical BIGINT→DOUBLE estimator
+    arithmetic.
     `source_sql` supplies rows with the group columns and the value
     expression; `value_expr` must already be VARCHAR-typed (the Spark
     side casts to string before hashing)."""
@@ -172,12 +173,12 @@ def kmv_distinct_oracle_sql(
           FROM uniq
         )
         SELECT {g}, count(h) AS n_kept, max(h) AS kth_hash,
-               CASE WHEN count(h) < {k}
+               CASE WHEN count(h) < {KMV_K}
                     THEN CAST(count(h) AS DOUBLE)
-                    ELSE round({float(k - 1)!r} * {HASH_RANGE!r}
+                    ELSE round({float(KMV_K - 1)!r} * {HASH_RANGE!r}
                                / CAST(max(h) AS DOUBLE), 3)
                END AS est_distinct
-        FROM kept WHERE rn <= {k}
+        FROM kept WHERE rn <= {KMV_K}
         GROUP BY {g}
     """
 
@@ -186,34 +187,31 @@ def histogram_percentiles(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    percentiles: list[tuple[int, int]] = ((50, 100), (90, 100),
-                                          (99, 100)),
-    width: float = 1.0,
 ) -> DataFrame:
-    """Percentile estimates from a sparse fixed-width histogram sketch —
+    """p50/p90/p99 estimates from a sparse unit-width histogram sketch —
     the 100 TB twin of the exact percentile aggregate (a9): exact
     percentile_cont needs a per-group sort of every value; the histogram
     needs ONE map-side-combined count per (group, bin) and is mergeable
     by addition (bins are value-anchored, so shards/snapshots combine
     exactly — the property t-digest buys with far more machinery, at
-    the cost of a fixed resolution `width`).
+    the cost of a fixed resolution of 1).
 
     Estimator (deterministic, both engines): rank target t =
     ceil(p*n) computed in INTEGER arithmetic ((num*n + den - 1) div
     den); the first bin whose cumulative count reaches t holds the
-    percentile; estimate = bin*width + width*(t - cum_before)/cnt —
-    linear interpolation within the bin, error bounded by `width`.
+    percentile; estimate = bin + (t - cum_before)/cnt —
+    linear interpolation within the bin, error bounded by 1.
     Returns (group_cols..., pct_num, pct_den, est_value) with
     est_value rounded to 6.
 
     Scale shape: the (group, bin) aggregate combines map-side (bins per
-    mapper bounded by value range / width, not row count); the
+    mapper bounded by the value range, not row count); the
     cumulative window and first-bin pick partition by group and reuse
     one shuffle; the percentile list is a literal cross join (tiny).
     """
     g = list(group_cols)
     spark = df.sparkSession
-    binc = F.floor(F.col(value_col) / F.lit(width)).cast("long")
+    binc = F.floor(F.col(value_col)).cast("long")
     hist = (
         df.select(*g, binc.alias("bin"))
         .groupBy(*g, "bin")
@@ -225,7 +223,7 @@ def histogram_percentiles(
         "cumb", F.col("cum") - F.col("cnt"))
     tot = hist.groupBy(*g).agg(F.sum("cnt").alias("n"))
     pcts = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in percentiles],
+        [(50, 100), (90, 100), (99, 100)],
         "pct_num long, pct_den long",
     )
     targets = tot.crossJoin(F.broadcast(pcts)).withColumn(
@@ -237,9 +235,8 @@ def histogram_percentiles(
         F.min(F.struct("bin", "cumb", "cnt")).alias("b")
     )
     est = (
-        F.col("b.bin").cast("double") * F.lit(width)
-        + F.lit(width)
-        * (F.col("t") - F.col("b.cumb")).cast("double")
+        F.col("b.bin").cast("double")
+        + (F.col("t") - F.col("b.cumb")).cast("double")
         / F.col("b.cnt").cast("double")
     )
     return first.select(

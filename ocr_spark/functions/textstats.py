@@ -44,9 +44,10 @@ def punct_count(text: Column | str) -> Column:
     return F.length(text) - F.length(F.regexp_replace(text, PUNCT_PATTERN, ""))
 
 
-def stopword_count(text: Column | str, lang: str = "en") -> Column:
+def stopword_count(text: Column | str) -> Column:
+    """English stopword count."""
     return F.size(
-        F.regexp_extract_all(F.lower(text), F.lit(LANG_PATTERNS[lang]), 0)
+        F.regexp_extract_all(F.lower(text), F.lit(LANG_PATTERNS["en"]), 0)
     )
 
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -34,11 +35,7 @@ def strip_boilerplate_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield series.map(strip_boilerplate, na_action="ignore").fillna("")
 
 
-def extract_links(
-    pages: DataFrame,
-    id_col: str = "doc_id",
-    html_col: str = "html",
-) -> DataFrame:
+def extract_links(pages: DataFrame) -> DataFrame:
     """Anchor (href) extraction from HTML pages — the DOM step that
     turns a crawled corpus into its link graph (crawl frontier
     expansion, PageRank input, anchor-text signals). Mirrors the href
@@ -58,20 +55,16 @@ def extract_links(
     links and do not leak into the graph.
     """
     return pages.select(
-        F.col(id_col).alias("src"),
+        F.col("doc_id").alias("src"),
         F.posexplode(
             F.regexp_extract_all(
-                F.col(html_col), F.lit('<a\\b[^>]*href="([^"]*)"'), 1
+                F.col("html"), F.lit('<a\\b[^>]*href="([^"]*)"'), 1
             )
         ).alias("pos", "href"),
     )
 
 
-def extract_anchor_texts(
-    pages: DataFrame,
-    id_col: str = "doc_id",
-    html_col: str = "html",
-) -> DataFrame:
+def extract_anchor_texts(pages: DataFrame) -> DataFrame:
     """(src, pos, href, anchor) extraction — extract_links plus the
     anchor's inner text, the classic off-page relevance signal (anchor
     text describes the TARGET page; search engines index it against the
@@ -90,9 +83,9 @@ def extract_anchor_texts(
     handling; this operator mirrors a crawler's cheap anchor scan.
     """
     tag_pat = '<a\\b[^>]*\\bhref="[^"]*"[^>]*>[^<]*</a>'
-    tags = F.regexp_extract_all(F.col(html_col), F.lit(tag_pat), 0)
+    tags = F.regexp_extract_all(F.col("html"), F.lit(tag_pat), 0)
     return pages.select(
-        F.col(id_col).alias("src"),
+        F.col("doc_id").alias("src"),
         F.posexplode(tags).alias("pos", "_tag"),
     ).select(
         "src",

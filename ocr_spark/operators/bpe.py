@@ -63,10 +63,10 @@ def _pair_counts(vocab: DataFrame) -> DataFrame:
 
 def learn_bpe_merges(
     df: DataFrame,
-    text_col: str = "text",
     n_merges: int = 3,
 ) -> tuple[list[tuple[int, str, int]], DataFrame]:
-    """Learn ``n_merges`` BPE merges; returns (merges, vocab).
+    """Learn ``n_merges`` BPE merges over the ``text`` column; returns
+    (merges, vocab).
 
     merges: [(merge_no, "A B", weighted_count), ...] in learned order.
     vocab: (word, freq, tokens, n_tokens) with `tokens` the final
@@ -74,7 +74,7 @@ def learn_bpe_merges(
     """
     words = (
         df.select(
-            F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word")
+            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word")
         )
         .filter(F.length("word") > 0)
     )

@@ -14,11 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def repetition_metrics(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def repetition_metrics(df: DataFrame) -> DataFrame:
     """Gopher-style repetition quality signals per document (Rae et al.
     2021 §A1.1 repetition filters — the standard pre-training curation
     gate the reference's OCR text would feed at corpus scale):
@@ -42,15 +38,15 @@ def repetition_metrics(
     def _round6(c):
         return F.floor(c * F.lit(1000000) + F.lit(0.5)) / F.lit(1000000)
 
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    base = df.select(F.col(id_col), words.alias("w"))
+    words = F.split(F.trim(F.col("text")), r"\s+")
+    base = df.select(F.col("doc_id"), words.alias("w"))
 
     wc = (
-        base.select(id_col, F.explode("w").alias("word"))
-        .groupBy(id_col, "word")
+        base.select("doc_id", F.explode("w").alias("word"))
+        .groupBy("doc_id", "word")
         .agg(F.count("*").alias("cnt"))
     )
-    dup = wc.groupBy(id_col).agg(
+    dup = wc.groupBy("doc_id").agg(
         F.sum("cnt").cast("long").alias("n_words"),
         _round6(
             F.sum(F.when(F.col("cnt") > 1, F.col("cnt")).otherwise(0))
@@ -66,33 +62,28 @@ def repetition_metrics(
     )
     bgc = (
         base.filter(n >= 2)
-        .select(id_col, F.explode(bigrams).alias("bigram"))
-        .groupBy(id_col, "bigram")
+        .select("doc_id", F.explode(bigrams).alias("bigram"))
+        .groupBy("doc_id", "bigram")
         .agg(F.count("*").alias("cnt"))
     )
-    top = bgc.groupBy(id_col).agg(
+    top = bgc.groupBy("doc_id").agg(
         F.min(
             F.struct((-F.col("cnt")).alias("neg"), F.col("bigram").alias("bg"))
         ).alias("m"),
         F.sum("cnt").alias("n_bigrams"),
     )
     top = top.select(
-        id_col,
+        "doc_id",
         F.col("m.bg").alias("top_bigram"),
         _round6((-F.col("m.neg")) / F.col("n_bigrams"))
         .alias("top_bigram_frac"),
     )
-    return dup.join(top, id_col, "left")
+    return dup.join(top, "doc_id", "left")
 
 
-def pack_sequences(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "n_tokens",
-    window: int = 512,
-) -> DataFrame:
-    """GPT-style sequence packing: concatenate documents in ``id_col``
-    order and chunk the stream into fixed ``window``-token contexts
+def pack_sequences(df: DataFrame) -> DataFrame:
+    """GPT-style sequence packing: concatenate documents in ``doc_id``
+    order and chunk their ``n_tokens`` into fixed 512-token contexts
     (the standard pre-training batch layout). Pure prefix-sum
     arithmetic — for each doc:
 
@@ -102,7 +93,7 @@ def pack_sequences(
       * ``pack_offset`` — position of the doc's first token inside
         ``start_pack``.
 
-    One global ordering window (running sum over ``id_col``). At 100 TB
+    One global ordering window (running sum over ``doc_id``). At 100 TB
     a single total order is the known scale limit of any packing step;
     the production form runs the identical statement per shard/day
     partition (pack ids then namespace by shard), which this operator
@@ -113,13 +104,14 @@ def pack_sequences(
     """
     from pyspark.sql import Window as W
 
-    cum = F.sum(tokens_col).over(
-        W.orderBy(id_col).rowsBetween(W.unboundedPreceding, 0)
+    window = 512
+    cum = F.sum("n_tokens").over(
+        W.orderBy("doc_id").rowsBetween(W.unboundedPreceding, 0)
     )
-    prev = (cum - F.col(tokens_col)).alias("prev_cum")
+    prev = (cum - F.col("n_tokens")).alias("prev_cum")
     return df.select(
-        id_col,
-        F.col(tokens_col),
+        "doc_id",
+        F.col("n_tokens"),
         F.floor(prev / window).cast("long").alias("start_pack"),
         F.floor(
             F.greatest(cum - 1, prev) / window
@@ -163,7 +155,6 @@ def temperature_mixture_sample(
     group_col: str,
     key_col: str,
     total: int,
-    unit: int = 10**6,
 ) -> DataFrame:
     """Temperature-balanced mixture sampling (the GPT-3 / DoReMi-style
     data-mixing primitive at temperature T = 2): per-group quotas
@@ -175,7 +166,7 @@ def temperature_mixture_sample(
     Cross-engine exactness: sqrt is IEEE correctly-rounded on every
     engine (unlike pow — which is why the temperature is fixed at 2
     rather than a free alpha), each weight is pinned to an integer grid
-    ``floor(sqrt(f) * unit + 0.5)`` before the normalizing sum, and the
+    ``floor(sqrt(f) * 10^6 + 0.5)`` before the normalizing sum, and the
     quota is a BIGINT floor division ``(total * w) div W``. Quotas sum
     to <= total (floor rounding); no largest-remainder top-up, so a
     group's quota depends only on its own frequency and the scalar W —
@@ -192,7 +183,7 @@ def temperature_mixture_sample(
     weights = freqs.select(
         group_col,
         F.floor(
-            F.sqrt(F.col("f").cast("double")) * F.lit(unit) + F.lit(0.5)
+            F.sqrt(F.col("f").cast("double")) * F.lit(10**6) + F.lit(0.5)
         ).cast("long").alias("w"),
     )
     # ONE aggregate pass: the weight table is group-cardinality-sized,
@@ -226,17 +217,16 @@ def split_assign(
     df: DataFrame,
     key_col: str,
     train_pct: int = 90,
-    val_pct: int = 5,
 ) -> DataFrame:
     """Deterministic train/val/test split: bucket = md5-60 of the key
     mod 100, split = [0, train_pct) -> 'train', [train_pct,
-    train_pct+val_pct) -> 'val', rest -> 'test'. Keyed on a stable id,
+    train_pct+5) -> 'val', rest -> 'test'. Keyed on a stable id,
     the assignment survives corpus regrowth (a document never migrates
     between splits as data is added — the property random-number splits
     lack) and is engine-neutral for the oracle. Appends (bucket,
     split)."""
-    if not (0 < train_pct and 0 <= val_pct
-            and train_pct + val_pct < 100):
+    val_pct = 5
+    if not 0 < train_pct < 100 - val_pct:
         raise ValueError("split_assign: percentages must partition 100")
     bucket = (
         F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 15),
@@ -252,13 +242,8 @@ def split_assign(
 
 def curation_funnel(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_quality: float = 0.40,
-    max_dup_word_frac: float = 0.93,
     min_entropy_micro: int = 2_600_000,
-    min_tokens: int = 10,
-    max_tokens: int = 90,
 ) -> DataFrame:
     """The end-to-end C4/Gopher-style curation decision: join the four
     independent quality signals (heuristic quality score, Gopher
@@ -283,22 +268,18 @@ def curation_funnel(
     from ..functions.textstats import quality_score, token_count
     from .lm import char_entropy
 
-    q = df.select(F.col(id_col).alias("doc_id"),
-                  quality_score(text_col).alias("quality"))
-    r = repetition_metrics(df, id_col, text_col).select(
-        "doc_id", "dup_word_frac")
-    e = char_entropy(df, id_col, text_col).select(
-        "doc_id", "entropy_micro")
-    t = df.select(F.col(id_col).alias("doc_id"),
-                  token_count(text_col).cast("long").alias("n_tokens"))
+    q = df.select("doc_id", quality_score("text").alias("quality"))
+    r = repetition_metrics(df).select("doc_id", "dup_word_frac")
+    e = char_entropy(df).select("doc_id", "entropy_micro")
+    t = df.select("doc_id",
+                  token_count("text").cast("long").alias("n_tokens"))
     joined = q.join(r, "doc_id").join(e, "doc_id").join(t, "doc_id")
     verdict = (
         F.when(F.col("quality") < min_quality, "quality")
-        .when(F.col("dup_word_frac") > max_dup_word_frac, "repetition")
+        .when(F.col("dup_word_frac") > 0.93, "repetition")
         .when(F.col("entropy_micro") < min_entropy_micro, "entropy")
         .when(
-            (F.col("n_tokens") < min_tokens)
-            | (F.col("n_tokens") > max_tokens), "length")
+            (F.col("n_tokens") < 10) | (F.col("n_tokens") > 90), "length")
         .otherwise("keep")
     )
     return joined.select(
@@ -368,12 +349,7 @@ def cap_per_group(
     )
 
 
-def url_blocklist_filter(
-    urls: DataFrame,
-    blocklist: DataFrame,
-    url_col: str = "url",
-    domain_col: str = "domain",
-) -> DataFrame:
+def url_blocklist_filter(urls: DataFrame, blocklist: DataFrame) -> DataFrame:
     """Domain-blocklist filter with suffix semantics (UT1/adult-list
     style, the filter RefinedWeb and FineWeb apply before any content
     work): a URL is blocked when its hostname EQUALS a blocked domain or
@@ -398,9 +374,8 @@ def url_blocklist_filter(
     ``~blocked`` for the survivor stream and route ``blocked`` rows to
     the audit sink. Column order: input columns, host, blocked.
     """
-    host = F.lower(
-        F.regexp_extract(F.col(url_col), r"^[A-Za-z][A-Za-z0-9+.-]*://([^/:?#]+)", 1)
-    )
+    host = F.lower(F.regexp_extract(
+        F.col("url"), r"^[A-Za-z][A-Za-z0-9+.-]*://([^/:?#]+)", 1))
     labeled = urls.withColumn("host", host)
     parts = F.split(F.col("host"), r"\.")
     suffixes = labeled.select("host").distinct().select(
@@ -414,7 +389,7 @@ def url_blocklist_filter(
         ).alias("_suffix"),
     )
     bl = blocklist.select(
-        F.lower(F.col(domain_col)).alias("_suffix")
+        F.lower(F.col("domain")).alias("_suffix")
     ).distinct()
     blocked_hosts = (
         suffixes.join(F.broadcast(bl), "_suffix", "left_semi")
@@ -428,12 +403,7 @@ def url_blocklist_filter(
     )
 
 
-def top_ngrams(
-    docs: DataFrame,
-    text_col: str = "text",
-    n: int = 2,
-    k: int = 50,
-) -> DataFrame:
+def top_ngrams(docs: DataFrame, n: int = 2, k: int = 50) -> DataFrame:
     """Corpus-wide top-``k`` word ``n``-grams with a deterministic total
     order (count DESC, ngram ASC) — the frequency table every corpus
     audit starts from (boilerplate phrase discovery, contamination
@@ -455,7 +425,7 @@ def top_ngrams(
     if n < 1 or k < 1:
         raise ValueError("n and k must be >= 1")
     toks = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
+        F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
         lambda x: x != "",
     )
     grams = F.when(
@@ -474,18 +444,14 @@ def top_ngrams(
     )
 
 
-def shard_assign(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    num_shards: int = 16,
-) -> DataFrame:
+def shard_assign(docs: DataFrame, num_shards: int = 16) -> DataFrame:
     """Deterministic training-shard assignment + in-shard position — the
     exporter step that turns a curated corpus into N equal-ish shards
     whose internal order is a seeded pseudo-random permutation (the
     Dolma / Megatron-preprocessing pattern: global shuffle once at
     export so sequential training readers see decorrelated data).
 
-    shard = first 16 bits of md5(id) mod num_shards; pos = rank within
+    shard = first 16 bits of md5(doc_id) mod num_shards; pos = rank within
     the shard ordered by the full md5 digest (ties by id — md5 prefix
     collisions must not make the order input-partition-dependent). Both
     are pure column expressions, so the oracle can replay them exactly.
@@ -502,13 +468,13 @@ def shard_assign(
         raise ValueError("num_shards must be >= 1")
     from pyspark.sql import Window
 
-    key = F.md5(F.col(id_col).cast("string"))
+    key = F.md5(F.col("doc_id").cast("string"))
     shard = (
         F.conv(F.substring(key, 1, 4), 16, 10).cast("long")
         % num_shards
     )
     w = Window.partitionBy("shard").orderBy(
-        F.col("_key").asc(), F.col(id_col).asc()
+        F.col("_key").asc(), F.col("doc_id").asc()
     )
     return (
         docs.withColumn("_key", key)
@@ -565,11 +531,7 @@ def weighted_sample(
     )
 
 
-def robots_filter(
-    urls: DataFrame,
-    rules: DataFrame,
-    url_col: str = "url",
-) -> DataFrame:
+def robots_filter(urls: DataFrame, rules: DataFrame) -> DataFrame:
     """Robots-exclusion evaluation with RFC 9309 longest-match
     semantics — the per-URL allow/deny gate every polite crawl pipeline
     applies between frontier and fetch. ``rules`` holds one row per
@@ -595,11 +557,11 @@ def robots_filter(
     """
     host = F.lower(
         F.regexp_extract(
-            F.col(url_col), r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1
+            F.col("url"), r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1
         )
     )
     path = F.regexp_extract(
-        F.col(url_col), r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)", 1
+        F.col("url"), r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)", 1
     )
     u = urls.withColumn("host", F.regexp_replace(host, ":[0-9]+$", "")) \
         .withColumn("path", path)

@@ -30,6 +30,8 @@ from ..functions.hashfam import (
 from ..functions.textstats import WS_SPLIT, fingerprint
 from ..session import checkpoint_truncate
 
+MAX_STAR_ROUNDS = 50
+
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Group by normalized-text fingerprint; keep the smallest id.
@@ -197,24 +199,23 @@ def winnowing_fingerprints(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 5,
-    window: int = 4,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, the
-    MOSS algorithm): hash every character k-gram of the normalized text,
-    slide a window of `window` consecutive hashes, and record the minimum
-    hash of each window with its position (leftmost minimum on ties —
-    deterministic and, with the md5-derived base60 hash family, exactly
-    reproducible by the DuckDB oracle).
+    MOSS algorithm): hash every character k-gram (k = 5) of the
+    normalized text, slide a window of 4 consecutive hashes, and record
+    the minimum hash of each window with its position (leftmost minimum
+    on ties — deterministic and, with the md5-derived base60 hash
+    family, exactly reproducible by the DuckDB oracle).
 
-    Guarantees: any shared substring of length >= window + k - 1 between
-    two documents yields at least one shared fingerprint — the standard
-    local-dedup primitive for plagiarism/near-dup detection at scale.
+    Guarantees: any shared substring of length >= window + k - 1 = 8
+    between two documents yields at least one shared fingerprint — the
+    standard local-dedup primitive for plagiarism/near-dup detection at scale.
 
     Returns (id, pos, fp) distinct rows; everything is Catalyst array
     expressions (one projection, no Python), so the per-doc work stays in
     whole-stage codegen and the only shuffle is the final distinct.
     """
+    k, window = 5, 4
     norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
     base = df.select(
         F.col(id_col).alias("id"), norm.alias("t")
@@ -250,9 +251,7 @@ def winnowing_fingerprints(
     )
 
 
-def _bigstar_edges(
-    pairs: DataFrame, id_a: str, id_b: str, max_rounds: int,
-) -> tuple[DataFrame, int]:
+def _bigstar_edges(pairs: DataFrame) -> tuple[DataFrame, int]:
     """Alternating large-star/small-star rounds until the edge set is
     stable. Returns (star edges (child, root) with child > root, rounds).
 
@@ -264,7 +263,7 @@ def _bigstar_edges(
     """
     # canonical non-self edges, larger endpoint first
     e = (
-        pairs.select(F.col(id_a).alias("x"), F.col(id_b).alias("y"))
+        pairs.select(F.col("id_a").alias("x"), F.col("id_b").alias("y"))
         .filter(F.col("x") != F.col("y"))
         .select(
             F.greatest("x", "y").alias("a"), F.least("x", "y").alias("b")
@@ -284,7 +283,7 @@ def _bigstar_edges(
 
     sig = _sig(e)
     rounds = 0
-    while rounds < max_rounds:
+    while rounds < MAX_STAR_ROUNDS:
         # large-star: every u connects its LARGER neighbors to the min of
         # its closed neighborhood — long chains halve toward the min
         sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
@@ -351,17 +350,13 @@ def _bigstar_edges(
         sig = new_sig
     else:
         raise ValueError(
-            f"bigstar_components: not converged after {max_rounds} rounds"
+            "bigstar_components: not converged after "
+            f"{MAX_STAR_ROUNDS} rounds"
         )
     return e, rounds
 
 
-def bigstar_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_rounds: int = 50,
-) -> DataFrame:
+def bigstar_components(pairs: DataFrame) -> DataFrame:
     """Connected components in O(log n) rounds: the large-star/small-star
     alternation (Kiveris et al. 2014, "Connected Components in MapReduce
     and Beyond"): the bridge from candidate PAIRS (minhash_lsh_candidates)
@@ -380,8 +375,8 @@ def bigstar_components(
     one count+hash signature agg for convergence — no driver-side state,
     no all-pairs blowup (the edge set never grows: both operations emit
     at most one edge per input edge endpoint, and distinct() keeps it
-    minimal). `max_rounds=50` is a runaway backstop (2^50 vertices), not
-    a tuning knob — hitting it raises loudly.
+    minimal). `MAX_STAR_ROUNDS` is a runaway backstop (2^50 vertices),
+    not a tuning knob — hitting it raises loudly.
 
     Because the loop runs to a fixpoint, the result is the exact
     component minimum: its DuckDB oracle is a recursive-CTE reachability
@@ -393,11 +388,12 @@ def bigstar_components(
     reliable checkpoint dir on the session to make every round durable;
     see session.checkpoint_truncate for the trade.
 
-    Returns (doc_id, component_id), component_id = min doc id of the
-    component. Vertices absent from `pairs` are absent; callers wanting
-    a total assignment coalesce with the identity on the doc table.
+    `pairs` holds (id_a, id_b). Returns (doc_id, component_id),
+    component_id = min doc id of the component. Vertices absent from
+    `pairs` are absent; callers wanting a total assignment coalesce with
+    the identity on the doc table.
     """
-    edges, _ = _bigstar_edges(pairs, id_a, id_b, max_rounds)
+    edges, _ = _bigstar_edges(pairs)
     roots = edges.select(F.col("b").alias("doc_id")).distinct().select(
         "doc_id", F.col("doc_id").alias("component_id")
     )
@@ -422,8 +418,6 @@ def bigstar_components(
 def ngram_contamination(
     corpus: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 8,
 ) -> DataFrame:
     """Benchmark decontamination (Brown et al. 2020 App. C; the GPT-3
@@ -443,9 +437,9 @@ def ngram_contamination(
     then shuffle only (doc_id, shingle-hit) rows — bounded by the
     contamination volume, not the corpus.
     """
-    corp = word_shingles(corpus, id_col, text_col, n)
+    corp = word_shingles(corpus, "doc_id", "text", n)
     bench = (
-        word_shingles(benchmark, id_col, text_col, n)
+        word_shingles(benchmark, "doc_id", "text", n)
         .select(F.col("id").alias("bench_id"), "shingle")
     )
     hits = corp.join(F.broadcast(bench), "shingle")
@@ -457,7 +451,7 @@ def ngram_contamination(
             F.countDistinct("bench_id").cast("long")
             .alias("n_bench_docs"),
         )
-        .withColumnRenamed("id", id_col)
+        .withColumnRenamed("id", "doc_id")
     )
 
 
@@ -465,13 +459,12 @@ def shared_substring_runs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 8,
     max_df: int = 64,
 ) -> DataFrame:
     """Maximal shared word-substring runs between document pairs — the
     exact-substring dedup primitive of Lee et al. 2022 ("Deduplicating
     Training Data Makes Language Models Better"), expressed Spark-first
-    instead of via a monolithic suffix array: every k-gram posting
+    instead of via a monolithic suffix array: every k-gram (k = 8) posting
     (gram, doc, pos) meets its matches through ONE equi-join on the
     gram, and maximal runs fall out of the classic gaps-and-islands
     trick — positions sharing a (pair, pos_a - pos_b) diagonal with
@@ -504,6 +497,7 @@ def shared_substring_runs(
     """
     from ..functions.sketches import spark_hash60
 
+    k = 8
     toks = df.select(
         F.col(id_col).alias("id"),
         F.split(F.trim(F.col(text_col)), WS_SPLIT).alias("w"),
@@ -554,12 +548,11 @@ def trim_duplicate_substrings(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 8,
-    max_df: int = 64,
 ) -> DataFrame:
     """The second half of Lee et al. 2022: REWRITE documents with their
     duplicated substrings cut. Composition of `shared_substring_runs`
-    with an interval-merge and an order-preserving reassembly.
+    (max_df = 64) with an interval-merge and an order-preserving
+    reassembly.
 
     Keep policy (deterministic, engine-neutral): the lowest doc id
     sharing a run keeps its copy; every HIGHER doc cuts the tokens
@@ -582,7 +575,7 @@ def trim_duplicate_substrings(
     """
     from pyspark.sql import Window
 
-    runs = shared_substring_runs(df, id_col, text_col, k, max_df)
+    runs = shared_substring_runs(df, id_col, text_col)
     iv = runs.select(
         F.col("doc_b").alias("id"),
         F.col("start_b").alias("s"),
@@ -651,12 +644,7 @@ def trim_duplicate_substrings(
     )
 
 
-def cluster_keep_best(
-    scored: DataFrame,
-    labels: DataFrame,
-    id_col: str = "doc_id",
-    score_col: str = "q10k",
-) -> DataFrame:
+def cluster_keep_best(scored: DataFrame, labels: DataFrame) -> DataFrame:
     """Cluster-representative selection: per near-dup cluster, keep the
     single highest-scoring document (ties: lowest id) and flag the rest
     as drops — the step SlimPajama/FineWeb-style pipelines run after
@@ -665,13 +653,13 @@ def cluster_keep_best(
     discipline of src/ocr/cli.js:21-27, upgraded from "first seen" to
     "best scored").
 
-    Inputs: `scored` = (id, score) for EVERY document (score must be an
-    integer grid — no float comparisons); `labels` = (doc_id,
+    Inputs: `scored` = (doc_id, q10k) for EVERY document (the score must
+    be an integer grid — no float comparisons); `labels` = (doc_id,
     component_id) from `bigstar_components`, which
     only covers documents that appear in the pair graph. Unpaired
     documents become singleton clusters of themselves.
 
-    Output: (id, component_id, cluster_size, keep).
+    Output: (doc_id, component_id, cluster_size, keep).
 
     Scale shape: `labels` is pair-graph-sized (collision docs only,
     corpus-small); the left join shuffles on the id. The per-cluster
@@ -683,9 +671,9 @@ def cluster_keep_best(
     text never enters any exchange.
     """
     lab = (
-        scored.join(labels.withColumnRenamed("doc_id", id_col), id_col, "left")
+        scored.join(labels, "doc_id", "left")
         .withColumn(
-            "component_id", F.coalesce(F.col("component_id"), F.col(id_col))
+            "component_id", F.coalesce(F.col("component_id"), F.col("doc_id"))
         )
     )
     # argmax(score) with ties to the LOWEST id, as one lexicographic
@@ -698,8 +686,8 @@ def cluster_keep_best(
             F.count(F.lit(1)).cast("long").alias("cluster_size"),
             F.min(
                 F.struct(
-                    (-F.col(score_col)).alias("neg_score"),
-                    F.col(id_col).alias("wid"),
+                    (-F.col("q10k")).alias("neg_score"),
+                    F.col("doc_id").alias("wid"),
                 )
             ).alias("best"),
         )
@@ -710,18 +698,14 @@ def cluster_keep_best(
         )
     )
     return lab.join(winners, "component_id").select(
-        F.col(id_col),
+        F.col("doc_id"),
         "component_id",
         "cluster_size",
-        (F.col(id_col) == F.col("winner_id")).alias("keep"),
+        (F.col("doc_id") == F.col("winner_id")).alias("keep"),
     )
 
 
-def dedup_lines(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def dedup_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus-wide exact line-level deduplication, keep-first (the
     RefinedWeb/Dolma rewrite rule: a line that occurs anywhere else in
     the corpus survives only at its first occurrence — boilerplate
@@ -731,7 +715,7 @@ def dedup_lines(
     (reference src/ocr/cli.js:21-27), applied per line instead of
     per code.
 
-    Returns (id, n_lines_before, n_removed, cleaned_text) with
+    Returns (doc_id, n_lines_before, n_removed, cleaned_text) with
     cleaned_text preserving the surviving lines in document order
     (empty string when every line loses).
 
@@ -750,7 +734,7 @@ def dedup_lines(
     one-row-per-document contract).
     """
     lines = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.posexplode(
             F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
         ).alias("pos", "line"),
@@ -787,17 +771,12 @@ def dedup_lines(
     )
 
 
-def dedup_incremental(
-    history: DataFrame,
-    batch: DataFrame,
-    id_col: str = "doc_id",
-    fp_col: str = "fp",
-) -> DataFrame:
+def dedup_incremental(history: DataFrame, batch: DataFrame) -> DataFrame:
     """Incremental dedup: which rows of a NEW batch are genuinely new
     against the already-committed corpus — the shape every continuously
     crawling pipeline runs per ingest cycle (dedup the day's crawl
     against the petabytes already stored, NOT the corpus against
-    itself). Inputs carry a precomputed content fingerprint (``fp_col``,
+    itself). Inputs carry a precomputed content fingerprint (``fp``,
     e.g. md5 of the canonical payload).
 
     Semantics: a batch row survives iff its fingerprint appears nowhere
@@ -816,11 +795,11 @@ def dedup_incremental(
     test rather than two passes (anti for new + semi for dropped), so
     history is probed once.
     """
-    hist_fps = history.select(F.col(fp_col).alias("_hfp")).distinct()
+    hist_fps = history.select(F.col("fp").alias("_hfp")).distinct()
     return (
         batch.join(
             hist_fps,
-            batch[fp_col] == hist_fps["_hfp"],
+            batch["fp"] == hist_fps["_hfp"],
             "left",
         )
         .withColumn("is_new", F.col("_hfp").isNull())

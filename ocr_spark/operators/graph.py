@@ -37,18 +37,11 @@ DAMP_NUM = 85
 DAMP_DEN = 100
 
 
-def pagerank(
-    nodes: DataFrame,
-    edges: DataFrame,
-    iters: int = 3,
-    unit: int = UNIT,
-    damp_num: int = DAMP_NUM,
-    damp_den: int = DAMP_DEN,
-) -> DataFrame:
+def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 3) -> DataFrame:
     """Integer-arithmetic PageRank. `nodes` has column `node` (long,
     distinct); `edges` has columns `src`, `dst` (longs, distinct pairs,
     src/dst need not cover all nodes). Returns (node, rank_nano) after
-    `iters` iterations from a uniform start of `unit` per node.
+    `iters` iterations from a uniform start of `UNIT` per node.
 
     Scale shape (Common-Crawl-size graphs): the edge table is the big
     side and is hash-partitioned by `src` ONCE, then persisted — every
@@ -68,7 +61,7 @@ def pagerank(
     n_nodes = nodes.count()
     if n_nodes == 0:
         raise ValueError("pagerank: empty node set")
-    teleport = (damp_den - damp_num) * unit // damp_den
+    teleport = (DAMP_DEN - DAMP_NUM) * UNIT // DAMP_DEN
 
     edges = edges.select("src", "dst").repartition("src").persist()
     outdeg = (
@@ -77,7 +70,7 @@ def pagerank(
         .persist()
     )
     ranks = nodes.select(
-        "node", F.lit(unit).cast("long").alias("rank_nano")
+        "node", F.lit(UNIT).cast("long").alias("rank_nano")
     ).persist()
     ranks.count()
     try:
@@ -112,8 +105,8 @@ def pagerank(
                     (
                         F.lit(teleport)
                         + F.expr(
-                            f"({damp_num} * (coalesce(in_sum, 0) "
-                            f"+ dang div {n_nodes})) div {damp_den}"
+                            f"({DAMP_NUM} * (coalesce(in_sum, 0) "
+                            f"+ dang div {n_nodes})) div {DAMP_DEN}"
                         )
                     ).cast("long").alias("rank_nano"),
                 )

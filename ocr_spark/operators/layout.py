@@ -35,16 +35,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 
-def reading_order(
-    blocks: DataFrame,
-    page_col: str = "page_id",
-    block_col: str = "block_id",
-    x0: str = "x0",
-    y0: str = "y0",
-    x1: str = "x1",
-    y1: str = "y1",
-) -> DataFrame:
-    """Append (col_idx, read_order) to a table of block rectangles.
+def reading_order(blocks: DataFrame) -> DataFrame:
+    """Append (col_idx, read_order) to a table of block rectangles
+    (page_id, block_id, x0, y0, x1, y1).
 
     col_idx: 0-based column island index, left to right — a new island
     opens when a block's left edge sits at or past the running max right
@@ -53,25 +46,25 @@ def reading_order(
     pixels, so both engines decide identically). read_order: 1-based
     rank in (col_idx, y0, x0, block) order — column-major reading order.
     """
-    scan = [F.col(x0).asc(), F.col(x1).asc(), F.col(block_col).asc()]
+    scan = [F.col("x0").asc(), F.col("x1").asc(), F.col("block_id").asc()]
     wprev = (
-        W.partitionBy(page_col).orderBy(*scan)
+        W.partitionBy("page_id").orderBy(*scan)
         .rowsBetween(W.unboundedPreceding, -1)
     )
     wrun = (
-        W.partitionBy(page_col).orderBy(*scan)
+        W.partitionBy("page_id").orderBy(*scan)
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    prev_max = F.max(F.col(x1)).over(wprev)
+    prev_max = F.max(F.col("x1")).over(wprev)
     opens = F.when(
-        prev_max.isNull() | (F.col(x0) >= prev_max), 1
+        prev_max.isNull() | (F.col("x0") >= prev_max), 1
     ).otherwise(0)
     with_col = blocks.withColumn(
         "col_idx", (F.sum(opens).over(wrun) - 1).cast("long")
     )
-    worder = W.partitionBy(page_col).orderBy(
-        "col_idx", F.col(y0).asc(), F.col(x0).asc(),
-        F.col(block_col).asc(),
+    worder = W.partitionBy("page_id").orderBy(
+        "col_idx", F.col("y0").asc(), F.col("x0").asc(),
+        F.col("block_id").asc(),
     )
     return with_col.withColumn(
         "read_order", F.row_number().over(worder).cast("long")

@@ -67,9 +67,7 @@ def _micro_ln(x: Column) -> Column:
     return F.floor(F.log(x) * F.lit(MICRO) + F.lit(0.5)).cast("long")
 
 
-def bigram_perplexity(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def bigram_perplexity(docs: DataFrame) -> DataFrame:
     """Per-document mean negative log-likelihood under an add-one
     bigram LM trained on the corpus itself.
 
@@ -80,9 +78,7 @@ def bigram_perplexity(
     Returns (doc_id, n_bigrams, nll_micro_total, avg_nll_micro) — all
     BIGINT; avg is the mean per-bigram NLL in micro-nats.
     """
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), _tokens(F.col(text_col)).alias("w")
-    )
+    toks = docs.select("doc_id", _tokens(F.col("text")).alias("w"))
     n = F.size("w")
     bigrams = F.zip_with(
         F.slice("w", F.lit(1), n - 1),
@@ -133,12 +129,7 @@ def bigram_perplexity(
     )
 
 
-def tfidf_topk(
-    docs: DataFrame,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def tfidf_topk(docs: DataFrame, k: int = 3) -> DataFrame:
     """Top-k keywords per document by tf-idf.
 
     idf is ln(N/df) in micro-nats (N = total documents, df = documents
@@ -149,9 +140,7 @@ def tfidf_topk(
     Returns (doc_id, rank, word, score_micro).
     """
     tok = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(_tokens(F.col(text_col))).alias("word"),
-    )
+        "doc_id", F.explode(_tokens(F.col("text"))).alias("word"))
     tf = tok.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
     dfw = tf.groupBy("word").agg(F.count("*").alias("df"))
     ndocs = docs.agg(F.count("*").alias("n_docs"))
@@ -178,11 +167,7 @@ def tfidf_topk(
     )
 
 
-def char_entropy(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def char_entropy(docs: DataFrame) -> DataFrame:
     """Per-document Shannon character entropy in exact integer
     micro-nats — the compressibility-style quality signal (low-entropy
     documents are repetitive boilerplate/filler; Gopher's repetition
@@ -201,9 +186,9 @@ def char_entropy(
     row (ln(0) has no meaning), matching the oracle.
     """
     chars = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.explode(
-            F.filter(F.split(F.col(text_col), ""), lambda c: c != "")
+            F.filter(F.split(F.col("text"), ""), lambda c: c != "")
         ).alias("ch"),
     )
     counts = chars.groupBy("doc_id", "ch").agg(F.count("*").alias("c"))

@@ -12,7 +12,7 @@ moments are BIGINT window sums, and the z-score test is evaluated in
 cross-multiplied integer form —
 
     z^2 = (m*n - s1)^2 / (m*s2 - s1^2)        (population variance)
-    flag  iff  (m*n - s1)^2 * zden >= znum * (m*s2 - s1^2)
+    flag  iff  (m*n - s1)^2 >= 4 * (m*s2 - s1^2)       (|z| >= 2)
 
 so no float appears anywhere in the decision and the DuckDB oracle
 matches with zero tolerance. A zero-variance history with a deviating
@@ -20,7 +20,7 @@ current count is an infinite-z anomaly and flags too (z2_milli NULL).
 
 BIGINT headroom: the test squares ``m*n - s1`` (~ window_len x
 hourly_count). It is exact while that product stays under ~3e9 —
-hourly counts up to ~10^8 at the default 24-window, far beyond any
+hourly counts up to ~10^8 at the 24-bucket window, far beyond any
 per-source hourly rate this pipeline meters; past that, swap the two
 squared terms to DECIMAL(38).
 """
@@ -33,20 +33,12 @@ from pyspark.sql.window import Window as W
 MICROS_PER_HOUR = 3_600_000_000
 
 
-def rate_anomalies(
-    events: DataFrame,
-    ts_col: str = "ts",
-    group_col: str = "event_type",
-    trail: int = 24,
-    min_history: int = 8,
-    z2_num: int = 4,
-    z2_den: int = 1,
-) -> DataFrame:
-    """Flag (group, hour) buckets whose count deviates from the trailing
-    `trail`-bucket baseline by |z| >= sqrt(z2_num/z2_den). Returns
+def rate_anomalies(events: DataFrame) -> DataFrame:
+    """Flag (event_type, hour) buckets whose count deviates from the
+    trailing 24-bucket baseline by |z| >= 2. Returns
     (event_type, hour, n, m, mean_milli, z2_milli) for flagged buckets;
     z2_milli is NULL for the zero-variance infinite-z case. Buckets
-    with under `min_history` trailing observations never flag (cold
+    with under 8 trailing observations never flag (cold
     start). The trailing frame is over OBSERVED buckets, so a silent
     hour is absent rather than a zero.
 
@@ -58,10 +50,9 @@ def rate_anomalies(
     # truncates toward zero, which disagrees with DuckDB's // (floor)
     # for pre-1970 timestamps — and this module promises no float in
     # any decision input
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     counts = (
-        events.select(F.col(group_col).alias("event_type"),
-                      us.alias("_us"))
+        events.select("event_type", us.alias("_us"))
         .select(
             "event_type",
             F.expr(
@@ -75,7 +66,7 @@ def rate_anomalies(
     # trailing integer moments + cross-multiplied z^2 gate
     f = (
         W.partitionBy("event_type").orderBy("hour")
-        .rowsBetween(-trail, -1)
+        .rowsBetween(-24, -1)
     )
     w = (
         counts.withColumn("m", F.count("*").over(f))
@@ -87,13 +78,12 @@ def rate_anomalies(
             F.col("m") * F.col("s2") - F.col("s1") * F.col("s1"))
     )
     flagged = w.filter(
-        (F.col("m") >= min_history)
+        (F.col("m") >= 8)
         & (
             ((F.col("varm2") == 0) & (F.col("dev") != 0))
             | (
                 (F.col("varm2") > 0)
-                & (F.col("dev") * F.col("dev") * z2_den
-                   >= z2_num * F.col("varm2"))
+                & (F.col("dev") * F.col("dev") >= 4 * F.col("varm2"))
             )
         )
     )

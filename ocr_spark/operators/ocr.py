@@ -120,10 +120,6 @@ class _Recognizer:
         return chars.reshape(n_lines, n_cells), score, \
             mins.reshape(n_lines, n_cells)
 
-    def _classify(self, binary: np.ndarray):
-        chars, score, _ = self._classify_full(binary)
-        return chars, score
-
     def _best_grid(self, binary: np.ndarray):
         """Upright gate + corrective rotate fused with classification
         (reference skew pipeline, reference src/ocr/
@@ -315,10 +311,10 @@ CROP_OUTPUT_SCHEMA = T.StructType([
 ])
 
 
-def crop_blob_variants(blobs: DataFrame, modes: tuple[str, ...] | None = None,
-                       ratio: float = 0.5) -> DataFrame:
+def crop_blob_variants(blobs: DataFrame,
+                       modes: tuple[str, ...] | None = None) -> DataFrame:
     """Explode each blob into named crop variants (reference
-    cropImageVariants halves + quarter splits + ratio splits,
+    cropImageVariants halves + quarter splits + 0.5 ratio splits,
     reference src/ocr/image_utils.js:23-67,
     image_utils/split-image.js:31-101, image_utils.py:60-114).
 
@@ -338,7 +334,7 @@ def crop_blob_variants(blobs: DataFrame, modes: tuple[str, ...] | None = None,
                                      pdf["height"], pdf["width"]):
                 img = blob_to_array(px, h, w)
                 for mode in modes:
-                    c = crop_image(img, mode, ratio)
+                    c = crop_image(img, mode)
                     rows.append((ref, mode, c.shape[1], c.shape[0],
                                  c.tobytes()))
             yield pd.DataFrame(

@@ -16,8 +16,8 @@ Lucene idf ``ln(1 + (N - df + 0.5)/(df + 0.5))`` is pinned to the
 integer micro-nat grid; each per-term score is computed in ONE fixed
 IEEE expression and pinned to the micro grid BEFORE the per-document
 sum, so document scores are BIGINT sums — no summation-order freedom.
-The k1/b literals are written identically on both engines (both parse
-to the same nearest double).
+The Lucene k1 = 1.2 and b = 0.75 literals are written identically on
+both engines (both parse to the same nearest double).
 """
 from __future__ import annotations
 
@@ -29,24 +29,17 @@ MICRO = 1_000_000
 WS_SPLIT = r"\s+"
 
 
-def bm25_topk(
-    docs: DataFrame,
-    query_terms: list[str],
-    k: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """Top-k documents for a bag of query terms under BM25.
+def bm25_topk(docs: DataFrame, query_terms: list[str]) -> DataFrame:
+    """Top-20 documents for a bag of query terms under BM25.
 
     Returns (doc_id, score_micro, rank): score_micro is the BIGINT sum
     of per-term micro-pinned scores; rank breaks ties by doc_id
     ascending. Documents matching no term do not appear.
     """
+    k1, b = 1.2, 0.75
     toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.trim(F.col(text_col)), WS_SPLIT))
+        F.col("doc_id").alias("id"),
+        F.explode(F.split(F.trim(F.col("text")), WS_SPLIT))
         .alias("word"),
     ).filter(F.length("word") > 0)
     dl = toks.groupBy("id").agg(F.count("*").alias("dl"))
@@ -102,7 +95,7 @@ def bm25_topk(
     # the row_number window then runs over k rows only.
     top = scored.orderBy(
         F.col("score_micro").desc(), F.col("id").asc()
-    ).limit(k)
+    ).limit(20)
     w = W.orderBy(F.col("score_micro").desc(), F.col("id").asc())
     return top.withColumn(
         "rank", F.row_number().over(w).cast("long")

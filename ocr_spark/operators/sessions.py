@@ -1,5 +1,5 @@
 """Gap-based sessionization: split each user's event stream into
-sessions wherever the inter-event gap exceeds a threshold.
+sessions wherever the inter-event gap exceeds 30 minutes.
 
 The batch twin of Structured Streaming's `F.session_window` (the
 streaming side lives in streaming/pipeline.py's windowed aggregates):
@@ -33,23 +33,14 @@ def ts_micros(ts):
     return F.unix_micros(ts.cast("timestamp"))
 
 
-_micros = ts_micros
-
-
-def sessionize(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    key_col: str = "event_id",
-    gap_minutes: int = 30,
-) -> DataFrame:
-    """Append `session_seq` (1-based per user): a new session opens at a
-    user's first event and at every event whose gap from the previous
-    one strictly exceeds `gap_minutes`. Ties on `ts` order by `key_col`
-    so the lag is deterministic."""
-    gap_us = gap_minutes * 60 * 1_000_000
-    w = W.partitionBy(user_col).orderBy(ts_col, key_col)
-    us = _micros(F.col(ts_col))
+def sessionize(events: DataFrame) -> DataFrame:
+    """Append `session_seq` (1-based per `user_id`): a new session opens
+    at a user's first event and at every event whose gap from the
+    previous one strictly exceeds 30 minutes. Ties on `ts` order by
+    `event_id` so the lag is deterministic."""
+    gap_us = 30 * 60 * 1_000_000
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    us = ts_micros(F.col("ts"))
     prev_us = F.lag(us).over(w)
     opens = F.when(
         prev_us.isNull() | (us - prev_us > gap_us), 1
@@ -60,17 +51,11 @@ def sessionize(
     )
 
 
-def asof_last_event(
-    events: DataFrame,
-    match_type: str,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    key_col: str = "event_id",
-    type_col: str = "event_type",
-) -> DataFrame:
+def asof_last_event(events: DataFrame, match_type: str) -> DataFrame:
     """Per-user AS-OF join against the stream's own `match_type` events:
-    append `asof_ts` / `asof_key` = the most recent `match_type` event
-    at-or-before each row (by (ts, key) order), null when none precedes.
+    append `asof_us` / `asof_key` = the most recent `match_type` event
+    at-or-before each row (by (ts, event_id) order), null when none
+    precedes.
 
     The carry-forward formulation of the time-series as-of join — the
     operator Spark lacks natively: instead of a per-row range probe
@@ -80,34 +65,27 @@ def asof_last_event(
     two-table as-of join by unioning the tagged reference stream first.
     """
     w = (
-        W.partitionBy(user_col).orderBy(ts_col, key_col)
+        W.partitionBy("user_id").orderBy("ts", "event_id")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    is_ref = F.col(type_col) == match_type
+    is_ref = F.col("event_type") == match_type
     return events.withColumn(
         "asof_us",
-        F.last(F.when(is_ref, ts_micros(F.col(ts_col))),
+        F.last(F.when(is_ref, ts_micros(F.col("ts"))),
                ignorenulls=True).over(w),
     ).withColumn(
         "asof_key",
-        F.last(F.when(is_ref, F.col(key_col)), ignorenulls=True).over(w),
+        F.last(F.when(is_ref, F.col("event_id")), ignorenulls=True).over(w),
     )
 
 
-def session_stats(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    key_col: str = "event_id",
-    gap_minutes: int = 30,
-) -> DataFrame:
-    """Per-session summary: (user, session_seq, n_events, session_start,
-    session_end, duration_us)."""
-    s = sessionize(events, user_col, ts_col, key_col, gap_minutes)
-    us = _micros(F.col(ts_col))
-    return s.groupBy(user_col, "session_seq").agg(
+def session_stats(events: DataFrame) -> DataFrame:
+    """Per-session summary: (user_id, session_seq, n_events,
+    session_start, session_end, duration_us)."""
+    us = ts_micros(F.col("ts"))
+    return sessionize(events).groupBy("user_id", "session_seq").agg(
         F.count("*").alias("n_events"),
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
         (F.max(us) - F.min(us)).alias("duration_us"),
     )

@@ -39,6 +39,8 @@ from pyspark.sql import Window as W
 
 from ..functions import hashfam
 
+IVF_TOPK = 10
+
 
 def _matrix(pdf_vecs: pd.Series) -> np.ndarray:
     return np.asarray([np.asarray(v, dtype=np.float64) for v in pdf_vecs])
@@ -73,14 +75,13 @@ def train_ivf_centroids(
     vec_col: str,
     num_centroids: int = 16,
     iters: int = 5,
-    round_decimals: int | None = 9,
 ) -> np.ndarray:
     """Distributed spherical k-means (Lloyd) — a TRAINED coarse quantizer
     for IVF and SemDeDup cells. Iterative, but still fully
     SQL-oracle-able: with a fixed iteration count the
     whole training unrolls into a chain of assign/aggregate CTEs (see
-    `__spark_entry__._ann_ivf_trained_oracle`), and `round_decimals`
-    pins each intermediate codebook to a decimal grid so cross-engine
+    `__spark_entry__._ann_ivf_trained_oracle`), and rounding to 9
+    decimals pins each intermediate codebook to a grid so cross-engine
     floating-point summation order (Spark partial-sum tree vs DuckDB
     streaming sum, disagreeing only in the last ulp) cannot drift the
     cell decision boundaries between engines. 9 decimals is far below
@@ -121,8 +122,7 @@ def train_ivf_centroids(
         norms = np.linalg.norm(seeds, axis=1)
         norms[norms == 0] = 1.0
         cents[: len(seeds)] = seeds / norms[:, None]
-        if round_decimals is not None:
-            cents = np.round(cents, round_decimals)
+        cents = np.round(cents, 9)
 
         spark = emb.sparkSession
         sum_cols = [
@@ -166,10 +166,7 @@ def train_ivf_centroids(
                 v = np.asarray(row[2:], dtype=np.float64)
                 n = np.linalg.norm(v)
                 if row["n"] > 0 and n > 0:
-                    new[row["cell"]] = (
-                        np.round(v / n, round_decimals)
-                        if round_decimals is not None else v / n
-                    )
+                    new[row["cell"]] = np.round(v / n, 9)
             cents = new
         return cents
     finally:
@@ -213,10 +210,9 @@ def ivf_topk(
     vec_col: str,
     query_ids: list[int],
     centroids: np.ndarray,
-    k: int = 10,
     nprobe: int = 2,
 ) -> DataFrame:
-    """IVF-style approximate top-k: each query probes its `nprobe`
+    """IVF-style approximate top-`IVF_TOPK`: each query probes its `nprobe`
     nearest cells of the codebook `centroids` (a `train_ivf_centroids`
     result) and ranks only the vectors assigned there.
 
@@ -273,7 +269,7 @@ def ivf_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= IVF_TOPK)
         .select("query_id", "neighbor_id", "cos_sim", "rank")
     )
 

@@ -89,7 +89,7 @@ def _filter_rows(img: np.ndarray, ftype: int) -> np.ndarray:
     return out
 
 
-def encode_png(img: np.ndarray, filter_type: int = 0, level: int = 6) -> bytes:
+def encode_png(img: np.ndarray, filter_type: int = 0) -> bytes:
     """Encode a 2-D uint8 grayscale image as a PNG (color type 0)."""
     img = np.ascontiguousarray(img, dtype=np.uint8)
     if img.ndim != 2:
@@ -99,7 +99,7 @@ def encode_png(img: np.ndarray, filter_type: int = 0, level: int = 6) -> bytes:
         raise ValueError("cannot encode an empty image")
     ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
     scanlines = _filter_rows(img, filter_type).tobytes()
-    idat = zlib.compress(scanlines, level)
+    idat = zlib.compress(scanlines, 6)
     return (
         PNG_SIGNATURE
         + _chunk(b"IHDR", ihdr)

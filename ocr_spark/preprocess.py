@@ -189,13 +189,16 @@ def try_dewarp(img: np.ndarray, threshold: int) -> np.ndarray:
 # the reference's deskew targets (image_utils.py:268-306 normalizes the
 # minAreaRect angle into this regime before cv2.warpAffine).
 SKEW_DEN = 64
+# Largest |a| try_derotate searches (about 21 degrees).
+MAX_SKEW_A = 12
 
 
-def _rot_shears(a: int, den: int = SKEW_DEN) -> tuple[int, int, int, int]:
+def _rot_shears(a: int) -> tuple[int, int, int, int]:
     """(x_num, x_den, y_num, y_den) for the three-shear rotation with
-    tan(theta/2) = a/den: x-shear twice by a/den, y-shear once by
-    sin(theta) = 2*a*den / (den^2 + a^2) — all integer rationals."""
-    return a, den, 2 * a * den, den * den + a * a
+    tan(theta/2) = a/SKEW_DEN: x-shear twice by a/SKEW_DEN, y-shear once
+    by sin(theta) = 2*a*SKEW_DEN / (SKEW_DEN^2 + a^2) — all integer
+    rationals."""
+    return a, SKEW_DEN, 2 * a * SKEW_DEN, SKEW_DEN * SKEW_DEN + a * a
 
 
 def rotate_small(img: np.ndarray, a: int, ink: int = 255) -> np.ndarray:
@@ -237,8 +240,7 @@ def _is_framed_upright(b: np.ndarray) -> bool:
                 and b[:, -1].all())
 
 
-def try_derotate(img: np.ndarray, threshold: int,
-                 max_a: int = 12) -> np.ndarray:
+def try_derotate(img: np.ndarray, threshold: int) -> np.ndarray:
     """Detect and exactly invert a rotate_small three-shear rotation;
     return `img` unchanged when no rotated document frame is found (the
     reference's deskew no-ops on already-upright inputs).
@@ -297,14 +299,15 @@ def try_derotate(img: np.ndarray, threshold: int,
     slope = float(np.polyfit(np.arange(len(ys), dtype=np.float64), ys, 1)[0])
     # clamp, don't bail: tiny frames give wild fits but the full-range
     # exact scan below still resolves them
-    a_est = max(-max_a, min(max_a, int(round(slope * SKEW_DEN / 2.0))))
+    a_est = max(-MAX_SKEW_A,
+                min(MAX_SKEW_A, int(round(slope * SKEW_DEN / 2.0))))
     # window around the estimate first (the common case resolves in 1-2
     # exact checks), then the full range ordered by distance — narrow/tall
     # frames can defeat the fit, but never the exact verification; an
     # "off" parameter whose shift pattern coincides at this canvas size
     # yields the identical (correct) inverse
     candidates = sorted(
-        (a for a in range(-max_a, max_a + 1) if a != 0),
+        (a for a in range(-MAX_SKEW_A, MAX_SKEW_A + 1) if a != 0),
         key=lambda a: abs(a - a_est),
     )
     for a in candidates:
@@ -430,11 +433,11 @@ def _local_mean(img: np.ndarray, block: int) -> np.ndarray:
     return sums / counts
 
 
-def adaptive_binarize(img: np.ndarray, block: int = ADAPTIVE_BLOCK,
-                      c: int = ADAPTIVE_C) -> np.ndarray:
+def adaptive_binarize(img: np.ndarray) -> np.ndarray:
     """Local-mean adaptive threshold (reference cv2.adaptiveThreshold,
-    image_utils.py:153-155): ink where the pixel sits more than `c` below
-    its local background. Returns canonical polarity (ink 255, bg 0).
+    image_utils.py:153-155): ink where the pixel sits more than
+    c = ADAPTIVE_C below its mean over an ADAPTIVE_BLOCK window. Returns
+    canonical polarity (ink 255, bg 0).
 
     Exact on the shaded corpus family by margin arithmetic: with ink drop
     d = SHADED_INK_DROP = 64, window ink fraction f <= 0.583 (the
@@ -443,8 +446,9 @@ def adaptive_binarize(img: np.ndarray, block: int = ADAPTIVE_BLOCK,
     budget |gx|+|gy| <= 0.6 over a 21-px window), an ink pixel satisfies
     r - d < rbar - d*f - c because 6 < d*(1-f) - c = 64*0.417 - 15 = 11.7,
     and a background pixel never does because -6 > -d*f - c <= -15."""
-    mean = _local_mean(img, block)
-    return ((img.astype(np.float64) < mean - c) * 255).astype(np.uint8)
+    mean = _local_mean(img, ADAPTIVE_BLOCK)
+    return ((img.astype(np.float64) < mean - ADAPTIVE_C) * 255
+            ).astype(np.uint8)
 
 
 def normalize_illumination(img: np.ndarray) -> np.ndarray:
@@ -484,14 +488,15 @@ def lit_lowcontrast(img: np.ndarray, bg: int, drop: int) -> np.ndarray:
 
 
 def lit_shaded(img: np.ndarray, gx: float, gy: float,
-               base: float, drop: int = SHADED_INK_DROP) -> np.ndarray:
+               base: float) -> np.ndarray:
     """Datagen side: canonical render -> lit page under a linear
-    illumination ramp, ink a constant `drop` below the local background.
+    illumination ramp, ink a constant SHADED_INK_DROP below the local
+    background.
     Callers keep |gx|+|gy| <= 0.6 and the ramp inside [LIT_BG_MIN+40,
     250] so adaptive_binarize's exactness margins hold."""
     h, w = img.shape
     ramp = base + gx * np.arange(w)[None, :] + gy * np.arange(h)[:, None]
-    gray = np.rint(ramp) - drop * (img > 0)
+    gray = np.rint(ramp) - SHADED_INK_DROP * (img > 0)
     return gray.clip(0, 255).astype(np.uint8)
 
 
@@ -503,12 +508,12 @@ CROP_MODES = ("full", "top_half", "bottom_half", "left_half", "right_half")
 QUARTER_MODES = ("quarter_1", "quarter_2", "quarter_3", "quarter_4")
 
 
-def crop_region(width: int, height: int, mode: str,
-                ratio: float = 0.5) -> tuple[int, int, int, int]:
+def crop_region(width: int, height: int,
+                mode: str) -> tuple[int, int, int, int]:
     """(left, top, w, h) of a named crop — the reference's crop regions
     (image_utils.js:29-41 halves, image_utils.py:60-114 quarters,
-    split-image.js:60-78 ratio splits)."""
-    mw, mh = int(width * ratio), int(height * ratio)
+    split-image.js:60-78 ratio splits at its default 0.5)."""
+    mw, mh = width // 2, height // 2
     regions = {
         "full": (0, 0, width, height),
         "top_half": (0, 0, width, mh),
@@ -525,8 +530,8 @@ def crop_region(width: int, height: int, mode: str,
     return regions[mode]
 
 
-def crop_image(img: np.ndarray, mode: str, ratio: float = 0.5) -> np.ndarray:
-    left, top, w, h = crop_region(img.shape[1], img.shape[0], mode, ratio)
+def crop_image(img: np.ndarray, mode: str) -> np.ndarray:
+    left, top, w, h = crop_region(img.shape[1], img.shape[0], mode)
     return np.ascontiguousarray(img[top:top + h, left:left + w])
 
 

@@ -58,16 +58,16 @@ def _default_driver_memory() -> str:
 def get_spark(
     app_name: str = "ocr_spark",
     cores: int | str | None = None,
-    shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
     cores: int N -> master local[N]; "*" -> local[*]; default from
-    $SPARK_GRAFT_CPUS else "*".  shuffle_partitions defaults to the core
-    count (local mode: no reason for 200 tiny partitions at small SF; at
-    cluster scale this would be ~2-3x total cores).
+    $SPARK_GRAFT_CPUS else "*". Shuffle partitions follow the core
+    count, at least 4, and 32 for "*" (local mode: no reason for 200 tiny
+    partitions at small SF; at cluster scale this would be ~2-3x total
+    cores).
     """
     # one BLAS thread per Python worker: N workers already saturate the
     # box; nested OpenBLAS thread pools oversubscribe it and add pool
@@ -81,8 +81,7 @@ def get_spark(
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = f"local[{cores}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = 32 if cores in ("*",) else max(int(cores), 4)
+    shuffle_partitions = 32 if cores == "*" else max(int(cores), 4)
     mem = (driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
            or _default_driver_memory())
     builder = (
@@ -138,7 +137,7 @@ def stop_spark() -> None:
         active.stop()
 
 
-def checkpoint_truncate(df, eager: bool = True):
+def checkpoint_truncate(df):
     """Lineage-truncating checkpoint: reliable if a checkpoint dir is set.
 
     The iterative operators (connected components, NB label folding,
@@ -154,8 +153,9 @@ def checkpoint_truncate(df, eager: bool = True):
     automatically (files survive executor loss; freed by the
     ContextCleaner deleting the directory), trading per-round write
     latency for recoverability. No per-operator flag to thread through.
+    Both forms checkpoint eagerly.
     """
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint()
+    return df.localCheckpoint()

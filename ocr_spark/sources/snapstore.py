@@ -272,7 +272,7 @@ class SnapshotTable:
         affected = sorted(
             r["_b"] for r in updates.select("_b").distinct().collect()
         )
-        old = self._read_buckets(self.spark_of(updates), manifest, affected)
+        old = self._read_buckets(updates.sparkSession, manifest, affected)
 
         if old is None:
             merged = updates
@@ -368,7 +368,3 @@ class SnapshotTable:
                     os.unlink(os.path.join(root, f))
                 os.rmdir(root)
         return deleted
-
-    @staticmethod
-    def spark_of(df: DataFrame) -> SparkSession:
-        return df.sparkSession

@@ -58,7 +58,6 @@ def stream_extraction(
     audit: SnapshotTable,
     checkpoint_dir: str,
     available_now: bool = True,
-    processing_interval: str = "200 milliseconds",
 ) -> StreamingQuery:
     """Run the extraction pipeline over a document stream.
 
@@ -68,9 +67,8 @@ def stream_extraction(
 
     Trigger modes: ``available_now=True`` drains the backlog and stops
     (batch-resume shape); ``available_now=False`` keeps the query live on
-    a processing-time trigger — the reference's 200 ms live-frame cadence
-    (reference src/public/live.js:56-81), hence the default
-    interval.
+    a 200 ms processing-time trigger — the reference's live-frame
+    cadence (reference src/public/live.js:56-81).
     """
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
@@ -91,18 +89,13 @@ def stream_extraction(
     if available_now:
         writer = writer.trigger(availableNow=True)
     else:
-        writer = writer.trigger(processingTime=processing_interval)
+        writer = writer.trigger(processingTime="200 milliseconds")
     return writer.start()
 
 
-def windowed_code_rate(
-    events: DataFrame,
-    ts_col: str = "ts",
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-    group_col: str | None = None,
-) -> DataFrame:
-    """Event-time tumbling-window counts with a late-data watermark.
+def windowed_code_rate(events: DataFrame) -> DataFrame:
+    """Event-time 1-hour tumbling-window counts per event_type, with a
+    30-minute late-data watermark.
 
     Streaming twin of the reference's polling-rate metrics (frames every
     200 ms, poll every 2 s — src/public/live.js:81, upload.js:69): works on
@@ -111,18 +104,15 @@ def windowed_code_rate(
     """
     # watermarks require TIMESTAMP (TIMESTAMP_NTZ is rejected); the session
     # timezone is pinned to UTC (session.py) so this cast is a pure retag
-    events = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    keys = [F.window(F.col(ts_col), window).alias("win")]
-    if group_col:
-        keys.append(F.col(group_col))
+    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(*keys)
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
         .select(
             F.col("win.start").alias("window_start"),
             F.col("win.end").alias("window_end"),
-            *([group_col] if group_col else []),
+            "event_type",
             "n_events",
             "sum_value",
         )

@@ -22,7 +22,7 @@ def test_learns_most_frequent_pair_first(spark):
         [(1, "abc abd abe xy xy"), (2, "abc abd abe")],
         ["doc_id", "text"],
     )
-    merges, vocab = learn_bpe_merges(docs, "text", n_merges=1)
+    merges, vocab = learn_bpe_merges(docs, n_merges=1)
     assert merges == [(1, "a b", 6)]
     v = _vocab(vocab)
     assert v["abc"]["tokens"] == "ab c"
@@ -36,7 +36,7 @@ def test_consecutive_pairs_merge_greedily(spark):
     docs = spark.createDataFrame(
         [(1, "ccc cccc cc cc cc")], ["doc_id", "text"]
     )
-    merges, vocab = learn_bpe_merges(docs, "text", n_merges=1)
+    merges, vocab = learn_bpe_merges(docs, n_merges=1)
     assert merges[0][1] == "c c"
     v = _vocab(vocab)
     assert v["ccc"]["tokens"] == "cc c"
@@ -51,7 +51,7 @@ def test_merged_symbols_protect_boundaries(spark):
         # freq(a,b)=4 > freq(b,c)=2 in round 1; round 2 best is (ab,c)
         [(1, "abc abc ab ab bc bc")], ["doc_id", "text"]
     )
-    merges, vocab = learn_bpe_merges(docs, "text", n_merges=2)
+    merges, vocab = learn_bpe_merges(docs, n_merges=2)
     assert merges[0][1] == "a b"
     assert merges[1][1] == "ab c"
     v = _vocab(vocab)
@@ -62,7 +62,7 @@ def test_merged_symbols_protect_boundaries(spark):
 def test_tie_breaks_lexicographic(spark):
     # (a,b) and (c,d) both weight 2 -> lexicographically smaller wins
     docs = spark.createDataFrame([(1, "ab ab cd cd")], ["doc_id", "text"])
-    merges, _ = learn_bpe_merges(docs, "text", n_merges=1)
+    merges, _ = learn_bpe_merges(docs, n_merges=1)
     assert merges == [(1, "a b", 2)]
 
 
@@ -70,7 +70,7 @@ def test_merge_count_is_frequency_weighted(spark):
     docs = spark.createDataFrame(
         [(1, "zz zz zz"), (2, "zz qq")], ["doc_id", "text"]
     )
-    merges, _ = learn_bpe_merges(docs, "text", n_merges=1)
+    merges, _ = learn_bpe_merges(docs, n_merges=1)
     assert merges == [(1, "z z", 4)]
 
 
@@ -84,8 +84,8 @@ def test_encode_counts_match_vocab_segmentation(spark):
         [(1, "aa ab aa"), (2, "ab"), (3, "   "), (4, "aa aa aa aa")],
         ["doc_id", "text"],
     )
-    _, v0 = learn_bpe_merges(docs, "text", n_merges=0)
-    _, v2 = learn_bpe_merges(docs, "text", n_merges=2)
+    _, v0 = learn_bpe_merges(docs, n_merges=0)
+    _, v2 = learn_bpe_merges(docs, n_merges=2)
     seg0 = {r["word"]: r["n_tokens"] for r in v0.collect()}
     seg2 = {r["word"]: r["n_tokens"] for r in v2.collect()}
     out0 = {r["id"]: r for r in

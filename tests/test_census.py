@@ -114,3 +114,125 @@ def test_allowlist_is_current():
     sizes, reached = census()
     stale = sorted(k for k in ALLOWED if k not in sizes or k in reached)
     assert not stale, f"allowlist entries gone or now reachable: {stale}"
+    defaulted, unpassed = knob_census()
+    stale = sorted(k for k in KNOB_ALLOWED
+                   if k not in defaulted or k not in unpassed)
+    assert not stale, f"knob allowlist entries gone or now passed: {stale}"
+
+
+# Knob guard: a defaulted parameter that no call in the repo passes has
+# one value in use and should be a constant. Definitions are top-level
+# functions and methods of top-level classes in the package and the two
+# roots; calls are read from the package, the roots, perfbench, the tests
+# and the verify skill. Calls are matched by name (a class call counts
+# for its ``__init__``) and the guard errs towards "passed": a name some
+# call invokes with ``*args``/``**kwargs``, or that appears outside call
+# position (a callback), is skipped. A name that a file binds as a
+# variable or parameter is that variable there, not a callback.
+
+KNOB_ALLOWED = {
+    "ocr_spark/datagen.py:corpus_dir.base":
+        "deployment path of the cached corpora",
+}
+
+
+def _knob_sources() -> tuple[list[str], list[str]]:
+    """(files whose definitions are checked, files whose calls count)."""
+    pkg = sorted(glob.glob(os.path.join(REPO, "ocr_spark", "**", "*.py"),
+                           recursive=True))
+    roots = [os.path.join(REPO, "__spark_entry__.py"),
+             os.path.join(REPO, "bench.py")]
+    callers = [*pkg, *roots,
+               *sorted(glob.glob(os.path.join(REPO, "perfbench", "*.py"))),
+               *sorted(glob.glob(os.path.join(REPO, "tests", "*.py"))),
+               *sorted(glob.glob(os.path.join(
+                   REPO, ".claude", "skills", "verify", "*.py")))]
+    return pkg + roots, callers
+
+
+def _defaulted(fn: ast.FunctionDef,
+               method: bool) -> list[tuple[str, int | None]]:
+    """(name, positional index or None) of each parameter with a default;
+    the index counts from the first argument a call passes."""
+    a = fn.args
+    positional = [*a.posonlyargs, *a.args]
+    static = any(isinstance(d, ast.Name) and d.id == "staticmethod"
+                 for d in fn.decorator_list)
+    skip = 1 if method and not static else 0
+    first_default = len(positional) - len(a.defaults)
+    out = [(p.arg, i - skip) for i, p in enumerate(positional)
+           if i >= first_default]
+    out += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+            if d is not None]
+    return out
+
+
+def knob_census() -> tuple[set[str], list[str]]:
+    """(every defaulted parameter, those that no call passes by position
+    or by keyword), each keyed ``<path>:<function>.<parameter>``."""
+    defs, callers = _knob_sources()
+    params: list[tuple[str, str, str, int | None]] = []
+    for path in defs:
+        rel = os.path.relpath(path, REPO)
+        for st in _parse(path).body:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                params += [(rel, st.name, st.name, p)
+                           for p in _defaulted(st, False)]
+            elif isinstance(st, ast.ClassDef):
+                for m in st.body:
+                    if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        called = st.name if m.name == "__init__" else m.name
+                        params += [(rel, m.name, called, p)
+                                   for p in _defaulted(m, True)]
+    n_pos: dict[str, int] = {}
+    keywords: dict[str, set[str]] = {}
+    opaque: set[str] = set()
+    for path in callers:
+        tree = _parse(path)
+        callees = set()
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else (
+                f.attr if isinstance(f, ast.Attribute) else None)
+            if name is None:
+                continue
+            callees.add(id(f))
+            if (any(isinstance(x, ast.Starred) for x in node.args)
+                    or any(k.arg is None for k in node.keywords)):
+                opaque.add(name)
+            n_pos[name] = max(n_pos.get(name, 0), len(node.args))
+            keywords.setdefault(name, set()).update(
+                k.arg for k in node.keywords)
+        bound = {n.id for n in ast.walk(tree)
+                 if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)}
+        bound |= {n.arg for n in ast.walk(tree) if isinstance(n, ast.arg)}
+        for node in ast.walk(tree):
+            if id(node) in callees:
+                continue
+            if (isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load)
+                    and node.id not in bound):
+                opaque.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                opaque.add(node.attr)
+    unpassed = []
+    defaulted = {f"{rel}:{fn}.{param}" for rel, fn, _, (param, _) in params}
+    for rel, fn, called, (param, index) in params:
+        if called in opaque:
+            continue
+        if param in keywords.get(called, ()):
+            continue
+        if index is not None and index < n_pos.get(called, 0):
+            continue
+        unpassed.append(f"{rel}:{fn}.{param}")
+    return defaulted, unpassed
+
+
+def test_no_unpassed_defaults():
+    _, unpassed = knob_census()
+    unpassed = [k for k in unpassed if k not in KNOB_ALLOWED]
+    assert not unpassed, (
+        f"{len(unpassed)} defaulted parameters that no call passes (make "
+        "each a constant, or allow it with a reason):\n"
+        + "\n".join(f"  {k}" for k in unpassed))

@@ -97,8 +97,7 @@ def test_pack_sequences_arithmetic(spark):
     out = {
         r["doc_id"]: r.asDict()
         for r in pack_sequences(
-            spark.createDataFrame(rows, ["doc_id", "n_tokens"]),
-            window=512,
+            spark.createDataFrame(rows, ["doc_id", "n_tokens"])
         ).collect()
     }
     # doc1: tokens 0..499 -> pack 0 only
@@ -166,9 +165,7 @@ def test_curation_funnel_first_fail_wins(spark):
         ["doc_id", "text"],
     )
     out = {r["doc_id"]: r["verdict"] for r in curation_funnel(
-        docs, min_quality=0.10, max_dup_word_frac=0.93,
-        min_entropy_micro=500_000, min_tokens=10,
-        max_tokens=90).collect()}
+        docs, min_quality=0.10, min_entropy_micro=500_000).collect()}
     assert out[1] == "keep"
     assert out[2] == "quality"          # fails quality AND entropy -> first
     assert out[3] == "repetition"
@@ -200,7 +197,7 @@ def test_split_assign_stable_under_growth(spark):
     assert abs(frac["val"] - 0.05) < 0.02
     assert abs(frac["test"] - 0.05) < 0.02
     with pytest.raises(ValueError, match="partition"):
-        split_assign(small, "doc_id", train_pct=96, val_pct=5)
+        split_assign(small, "doc_id", train_pct=96)
 
 
 def test_cap_per_group_equals_single_window(spark):
@@ -343,7 +340,7 @@ def test_top_ngrams_counts_and_tiebreak(spark):
         ],
         "doc_id long, text string",
     )
-    rows = top_ngrams(docs, "text", n=2, k=3).collect()
+    rows = top_ngrams(docs, n=2, k=3).collect()
     assert [(r["ngram"], r["cnt"]) for r in rows] == [
         ("red fox", 3),       # case/punct-folded across docs
         ("blue fox", 1),      # cnt ties broken by ngram ASC
@@ -357,7 +354,7 @@ def test_top_ngrams_trigram_and_k_bound(spark):
     docs = spark.createDataFrame(
         [(1, "a b c d"), (2, "a b c")], "doc_id long, text string"
     )
-    rows = top_ngrams(docs, "text", n=3, k=10).collect()
+    rows = top_ngrams(docs, n=3, k=10).collect()
     assert [(r["ngram"], r["cnt"]) for r in rows] == [
         ("a b c", 2), ("b c d", 1)
     ]
@@ -503,7 +500,7 @@ def test_top_ngrams_randomized_counter_reference(spark):
         cnt.update(" ".join(ws[i:i + 2]) for i in range(len(ws) - 1))
     want = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[:25]
     got = [(r["ngram"], r["cnt"])
-           for r in top_ngrams(docs, "text", n=2, k=25).collect()]
+           for r in top_ngrams(docs, n=2, k=25).collect()]
     assert got == want
 
 

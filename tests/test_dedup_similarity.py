@@ -160,7 +160,7 @@ def test_ivf_topk_recall_vs_exact(spark):
     qids = [0, 1, 2, 3]
     exact = _exact_cosine_topk(emb, qids, k=10)
     approx = ivf_topk(emb, "vec_id", "embedding", qids,
-                      _ivf_centroids(16, 8), k=10, nprobe=3).collect()
+                      _ivf_centroids(16, 8), nprobe=3).collect()
     recall, recalls = _mean_recall(exact, approx)
     assert recall >= 0.5, recalls
 
@@ -228,7 +228,7 @@ def test_trained_ivf_beats_fixed_quantizer(spark):
 
     qids = [0, 1, 2, 3]
     exact = _exact_cosine_topk(emb, qids, k=10)
-    approx = ivf_topk(emb, "vec_id", "embedding", qids, cents, k=10,
+    approx = ivf_topk(emb, "vec_id", "embedding", qids, cents,
                       nprobe=1).collect()
     recall, recalls = _mean_recall(exact, approx)
     assert recall >= 0.9, recalls
@@ -268,7 +268,7 @@ def test_winnowing_shared_substring_guarantee(spark):
         (3, "zzzz yyyy xxxx wwww vvvv uuuu tttt ssss rrrr qqqq"),
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    fps = winnowing_fingerprints(docs, "doc_id", "text", k=5, window=4)
+    fps = winnowing_fingerprints(docs, "doc_id", "text")
     by_doc = {}
     for r in fps.collect():
         by_doc.setdefault(r["id"], set()).add(r["fp"])
@@ -288,7 +288,7 @@ def test_bigstar_components_long_chain_logarithmic_rounds(spark):
         [(f"v{i:04d}", f"v{i+1:04d}") for i in range(n - 1)],
         ["id_a", "id_b"],
     )
-    _, rounds = _bigstar_edges(chain, "id_a", "id_b", max_rounds=50)
+    _, rounds = _bigstar_edges(chain)
     assert rounds <= 30, f"{rounds} rounds for a {n}-chain — not O(log n)"
 
     out = bigstar_components(chain)
@@ -376,7 +376,7 @@ def test_ngram_contamination_planted(spark):
     out = {
         r["doc_id"]: r.asDict()
         for r in ngram_contamination(
-            corpus, bench, "doc_id", "text", n=5
+            corpus, bench, n=5
         ).collect()
     }
     assert set(out) == {1}
@@ -466,7 +466,7 @@ def test_substring_runs_planted(spark):
     )
     rows = sorted(
         map(tuple, shared_substring_runs(
-            docs, "doc_id", "text", k=8).collect())
+            docs, "doc_id", "text").collect())
     )
     # (1,2): shared at a_pos 3 (after p0 p1), b_pos 2 (after q0), len 12
     # (2,3): other at doc2 pos 17 (q0 + 12 shared + q1 q2 q3), doc3 pos 1
@@ -483,9 +483,9 @@ def test_substring_runs_df_cap_drops_hot_grams(spark):
         [(i, boiler) for i in range(5)], ["doc_id", "text"]
     )
     assert shared_substring_runs(
-        docs, "doc_id", "text", k=8, max_df=4).count() == 0
+        docs, "doc_id", "text", max_df=4).count() == 0
     assert shared_substring_runs(
-        docs, "doc_id", "text", k=8, max_df=5).count() == 10  # C(5,2)
+        docs, "doc_id", "text", max_df=5).count() == 10  # C(5,2)
 
 
 def test_substring_trim_planted(spark):
@@ -504,7 +504,7 @@ def test_substring_trim_planted(spark):
         ["doc_id", "text"],
     )
     out = {r["doc_id"]: r for r in trim_duplicate_substrings(
-        docs, "doc_id", "text", k=8).collect()}
+        docs, "doc_id", "text").collect()}
     assert set(out) == {2, 3}  # doc 1 is the lowest sharer everywhere
     assert out[2]["n_removed"] == 12
     assert out[2]["trimmed_text"] == "q0 q1 q2 q3 " + other
@@ -525,7 +525,7 @@ def test_substring_trim_merges_overlaps_and_full_dup(spark):
         ["doc_id", "text"],
     )
     out = {r["doc_id"]: r for r in trim_duplicate_substrings(
-        docs, "doc_id", "text", k=8).collect()}
+        docs, "doc_id", "text").collect()}
     # doc 3 cuts [1,10] (vs doc1) and [5,14] (vs doc2) -> merged [1,14]
     assert out[3]["n_removed"] == 14
     assert out[3]["trimmed_text"] == "z0"

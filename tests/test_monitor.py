@@ -26,8 +26,7 @@ def _events(spark, counts, etype="click"):
 def test_spike_flags_and_cold_start_does_not(spark):
     # 12 noisy-but-stable hours, then a 10x spike
     series = [10, 11, 9, 10, 12, 10, 9, 11, 10, 10, 11, 9, 100]
-    out = rate_anomalies(_events(spark, series), trail=24,
-                         min_history=8).collect()
+    out = rate_anomalies(_events(spark, series)).collect()
     assert len(out) == 1
     r = out[0]
     assert r["n"] == 100 and r["m"] == 12
@@ -35,21 +34,19 @@ def test_spike_flags_and_cold_start_does_not(spark):
     # mean_milli = trailing mean in millis: sum(122)/12 = 10166
     assert r["mean_milli"] == (1000 * 122) // 12
     # same spike at hour 5 (only 5 history rows) must NOT flag
-    early = rate_anomalies(_events(spark, [10, 11, 9, 10, 12, 100]),
-                           trail=24, min_history=8).collect()
+    early = rate_anomalies(
+        _events(spark, [10, 11, 9, 10, 12, 100])).collect()
     assert early == []
 
 
 def test_zero_variance_deviation_is_infinite_z(spark):
     series = [10] * 10 + [11]  # flat history, 1-count deviation
-    out = rate_anomalies(_events(spark, series), trail=24,
-                         min_history=8).collect()
+    out = rate_anomalies(_events(spark, series)).collect()
     assert len(out) == 1
     assert out[0]["z2_milli"] is None  # infinite z sentinel
     assert out[0]["n"] == 11
     # perfectly flat series flags nothing
-    flat = rate_anomalies(_events(spark, [10] * 12), trail=24,
-                          min_history=8).collect()
+    flat = rate_anomalies(_events(spark, [10] * 12)).collect()
     assert flat == []
 
 

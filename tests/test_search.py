@@ -26,7 +26,7 @@ def _corpus(spark):
 def test_bm25_idf_and_saturation(spark):
     docs = _corpus(spark)
     out = {r["doc_id"]: r for r in bm25_topk(
-        docs, ["rare", "common"], k=20).collect()}
+        docs, ["rare", "common"]).collect()}
     assert 5 not in out  # no matching term -> absent
     # rare term (df=1) beats a single common-term hit (df=8)
     assert out[1]["score_micro"] > out[2]["score_micro"]
@@ -40,13 +40,13 @@ def test_bm25_idf_and_saturation(spark):
 
 def test_bm25_rank_ties_deterministic(spark):
     docs = _corpus(spark)
-    out = bm25_topk(docs, ["common"], k=20).collect()
+    out = bm25_topk(docs, ["common"]).collect()
     # docs 2 and 10..15 are identical -> equal scores, rank by doc_id
     tied = [r for r in out if r["doc_id"] in {2, 10, 11, 12, 13, 14, 15}]
     scores = {r["score_micro"] for r in tied}
     assert len(scores) == 1
     ids = [r["doc_id"] for r in sorted(tied, key=lambda r: r["rank"])]
     assert ids == sorted(ids)
-    again = bm25_topk(docs, ["common"], k=20).collect()
+    again = bm25_topk(docs, ["common"]).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, out))
 

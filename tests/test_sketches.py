@@ -84,8 +84,7 @@ def test_histogram_percentiles_error_bound_and_merge(spark):
     rows = [("g", v) for v in vals]
     df = spark.createDataFrame(rows, ["grp", "value"])
     out = {(r["pct_num"], r["pct_den"]): r["est_value"]
-           for r in histogram_percentiles(
-               df, ["grp"], "value", width=1.0).collect()}
+           for r in histogram_percentiles(df, ["grp"], "value").collect()}
     sv = sorted(vals)
     for num, den in [(50, 100), (90, 100), (99, 100)]:
         t = (num * len(sv) + den - 1) // den
@@ -94,8 +93,7 @@ def test_histogram_percentiles_error_bound_and_merge(spark):
     # partitioning invariance == mergeability of value-anchored bins
     again = {(r["pct_num"], r["pct_den"]): r["est_value"]
              for r in histogram_percentiles(
-                 df.repartition(13), ["grp"], "value",
-                 width=1.0).collect()}
+                 df.repartition(13), ["grp"], "value").collect()}
     assert again == out
 
 
@@ -107,8 +105,7 @@ def test_histogram_percentiles_exact_on_bin_edges(spark):
     df = spark.createDataFrame(
         [("g", float(v)) for v in range(1, 101)], ["grp", "value"])
     out = {r["pct_num"]: r["est_value"]
-           for r in histogram_percentiles(
-               df, ["grp"], "value", width=1.0).collect()}
+           for r in histogram_percentiles(df, ["grp"], "value").collect()}
     # with cnt=1 per bin the within-bin ramp ends at the upper edge:
     # est(t) = bin + (t - cumb)/cnt = bin + 1
     assert out[50] == 51.0 and out[90] == 91.0 and out[99] == 100.0

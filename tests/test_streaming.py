@@ -100,7 +100,7 @@ def test_stream_extraction_incremental_and_exactly_once(
 
 def test_windowed_code_rate_batch_and_stream_same_plan(spark, tmp_path):
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    batch_out = windowed_code_rate(ev, window="1 hour", group_col="event_type")
+    batch_out = windowed_code_rate(ev)
     rows = batch_out.limit(5).collect()
     assert {c for c in batch_out.columns} == {
         "window_start", "window_end", "event_type", "n_events", "sum_value"
@@ -115,7 +115,7 @@ def test_windowed_code_rate_batch_and_stream_same_plan(spark, tmp_path):
     os.makedirs(ev_dir)
     shutil.copy(f"{SF_DIR}/events.parquet", ev_dir)
     stream = spark.readStream.schema(ev.schema).parquet(ev_dir)
-    out = windowed_code_rate(stream, window="1 hour", group_col="event_type")
+    out = windowed_code_rate(stream)
     sink = str(tmp_path / "win_out")
     q = (
         out.writeStream.format("parquet")
